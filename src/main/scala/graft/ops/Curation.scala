@@ -1381,8 +1381,7 @@ object Curation {
     * |strata| rows. Nothing else. */
   def neymanAllocation(spark: SparkSession, dir: String,
                        budget: Long = NeymanBudget): DataFrame = {
-    val wObs = org.apache.spark.sql.Observation()
-    val st = TextAnalysis.qualityScore(spark, dir)
+    val strata = TextAnalysis.qualityScore(spark, dir)
       .select(col("doc_id"), col("quality"))
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
       .select(col("lang"), expr("CAST(round(quality * 1e4) AS BIGINT)").as("qfp"))
@@ -1394,15 +1393,13 @@ object Curation {
           |  - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE), CAST(0 AS DOUBLE)))
           |  / CAST(n_h AS DOUBLE) / 1e4""".stripMargin))
       .withColumn("w", expr("CAST(round(n_h * sigma * 1e6) AS BIGINT)"))
-      // |strata| rows feeding both the total and the final select —
-      // truncate so the corpus aggregation runs once; the weight total
-      // rides the SAME materializing checkpoint as an observe metric
-      // (r22, the literal-re-entry idiom; exact integer sum) instead of
-      // a second agg + 1-row BroadcastExchange
-      .observe(wObs, sum(col("w")).as("t"))
-      .localCheckpoint(true)
-    // null only on an EMPTY strata table, where the select emits no rows
-    val t = Option(wObs.get.apply("t")).fold(1L)(_.asInstanceOf[Long])
+    // |strata| rows feeding both the total and the final select —
+    // truncate so the corpus aggregation runs once; the weight total
+    // (exact integer sum) is observed by that checkpoint instead of a
+    // second agg + 1-row BroadcastExchange. An empty strata table
+    // emits no rows for any literal.
+    val (st, tot) = Materialize.sliver(strata)(coalesce(sum(col("w")), lit(1L)).as("t"))
+    val t = tot.getLong(0)
     st.select(col("lang"), col("n_h"), round(col("sigma"), 6).as("sigma"),
         round(col("w").cast("double") / lit(t), 6).as("share"),
         expr(s"CAST(round($budget * CAST(w AS DOUBLE) / $t) AS BIGINT)").as("alloc"))

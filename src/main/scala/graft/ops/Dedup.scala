@@ -106,22 +106,18 @@ object Dedup {
     * sliver-sized joins against the (doc_id, source) projection. */
   def sourceDupMatrix(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-    // the cell total rides the matrix's materializing checkpoint as an
-    // observe metric (r22, the q176/CC literal-re-entry idiom; an exact
-    // integer sum is order-free) — no second agg job + 1-row
-    // BroadcastExchange over the sliver the checkpoint just wrote
-    val obs = org.apache.spark.sql.Observation()
-    val pairs = minhashLsh(spark, dir).select(col("a_id"), col("b_id"))
+    // the cell total (an exact, order-free integer sum) is observed by
+    // the matrix's checkpoint — no second agg job + 1-row
+    // BroadcastExchange over the sliver the checkpoint just wrote. An
+    // empty matrix emits no rows for any literal.
+    val matrix = minhashLsh(spark, dir).select(col("a_id"), col("b_id"))
       .join(src.select(col("doc_id").as("a_id"), col("source").as("sa")), "a_id")
       .join(src.select(col("doc_id").as("b_id"), col("source").as("sb")), "b_id")
       .select(least(col("sa"), col("sb")).as("src_a"),
         greatest(col("sa"), col("sb")).as("src_b"))
       .groupBy(col("src_a"), col("src_b")).agg(count(lit(1)).as("n_pairs"))
-      .observe(obs, sum(col("n_pairs")).as("t"))
-      .localCheckpoint(true)
-    // null only on an EMPTY matrix, where the select below emits no rows
-    // for any literal — 1L keeps the division total
-    val t = Option(obs.get.apply("t")).fold(1L)(_.asInstanceOf[Long])
+    val (pairs, tot) = Materialize.sliver(matrix)(coalesce(sum(col("n_pairs")), lit(1L)).as("t"))
+    val t = tot.getLong(0)
     pairs.select(col("src_a"), col("src_b"), col("n_pairs"),
       round(col("n_pairs").cast("double") / lit(t), 6).as("share"))
   }
@@ -215,14 +211,11 @@ object Dedup {
     // instead of a 1-row BroadcastExchange + crossJoin in the final plan
     val nTrue = truth.count()
     def leg(name: String, pairs0: DataFrame): DataFrame = {
-      // n_pairs rides the leg's materializing checkpoint as an observe
-      // metric (the q176/CC literal-re-entry idiom; count is order-free
-      // exact) — no second agg + broadcast crossJoin over the sliver
-      // the checkpoint just wrote
-      val obs = org.apache.spark.sql.Observation()
-      val pairs = pairs0.select(col("a_id"), col("b_id"))
-        .observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      val nPairs = obs.get.apply("n").asInstanceOf[Long]
+      // n_pairs is observed by the leg's checkpoint — no second agg +
+      // broadcast crossJoin over the sliver the checkpoint just wrote
+      val (pairs, stats) = Materialize.sliver(pairs0.select(col("a_id"), col("b_id")))(
+        count(lit(1)).as("n"))
+      val nPairs = stats.getLong(0)
       pairs.join(truth, Seq("a_id", "b_id"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))
         .select(lit(name).as("method"), lit(nPairs).as("n_pairs"), col("n_hit"))

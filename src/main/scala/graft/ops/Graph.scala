@@ -35,9 +35,8 @@ object Graph {
     * (node, rank, n) with Σ rank = 1. The `n` column carries the node
     * count so callers can normalize without a second pass. */
   private[graft] def rankTable(edges: DataFrame, iters: Int,
-                               damping: Double, ckptEvery: Int = 3,
-                               checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1 && ckptEvery >= 1)
+                               damping: Double): DataFrame = {
+    require(iters >= 1 && damping > 0 && damping < 1)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // one degree-annotated edge list feeds every iteration — persist it,
     // release once the (node-count-sized) rank table is materialized
@@ -51,20 +50,17 @@ object Graph {
     for (i <- 1 to iters) {
       ranks = iterate(ed, ranks, damping)
       // lineage truncation (the Clusters.scala pattern), BATCHED every
-      // `ckptEvery` rounds (default 3): an eager checkpoint is a full
-      // job, and on a real cluster every job pays scheduler latency, so
-      // letting a few rounds compose into one job cuts the job count
-      // ~ckptEvery× while plans stay shallow enough that analysis cost
-      // never compounds (a monolithic iters-deep tree would). Local A/B
-      // at sf0.1 measures 1 vs 3 vs 5 within run-to-run noise — the
-      // per-iteration cost there is the shuffle, not the checkpoint —
-      // so the knob is a cluster-latency lever, not a local one.
-      // Retained blocks are node-count-sized rank vectors, ~MBs even at
-      // web scale; the `checkpointer` argument swaps in reliable
-      // checkpoint() on a fault-tolerant cluster.
-      if (i % ckptEvery == 0 && i < iters) ranks = checkpointer(ranks)
+      // 3 rounds: an eager checkpoint is a full job, and on a real
+      // cluster every job pays scheduler latency, so letting a few
+      // rounds compose into one job cuts the job count ~3× while plans
+      // stay shallow enough that analysis cost never compounds (a
+      // monolithic iters-deep tree would). Local A/B at sf0.1 measures
+      // 1 vs 3 vs 5 within run-to-run noise — the per-iteration cost
+      // there is the shuffle, not the checkpoint. Retained blocks are
+      // node-count-sized rank vectors, ~MBs even at web scale.
+      if (i % 3 == 0 && i < iters) ranks = ranks.localCheckpoint(true)
     }
-    val out = checkpointer(ranks)
+    val out = ranks.localCheckpoint(true)
     ed.unpersist(false)
     out
   }
@@ -88,16 +84,14 @@ object Graph {
 
   /** q97: damped PageRank, top-50 nodes. */
   def pageRank(spark: SparkSession, dir: String,
-               iters: Int = 10, damping: Double = 0.85,
-               ckptEvery: Int = 3,
-               checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+               iters: Int = 10, damping: Double = 0.85): DataFrame = {
     // o_orderkey is the table's unique key, so each row already yields a
     // distinct (order, customer) pair — no dedup shuffle needed before
     // the iteration loop (the oracle's DISTINCT is equally a no-op)
     val ord = Tables.orders(spark, dir)
       .select((col("o_orderkey") * 2).as("src"), (col("o_custkey") * 2 + 1).as("dst"))
     val edges = ord.union(ord.select(col("dst").as("src"), col("src").as("dst")))
-    rankTable(edges, iters, damping, ckptEvery, checkpointer)
+    rankTable(edges, iters, damping)
       .select(
         when(col("node") % 2 === 0, "order").otherwise("customer").as("kind"),
         expr("node div 2").as("key"),
@@ -146,10 +140,10 @@ object Graph {
     * Scale design (q97's economics doubled): the distinct edge list is
     * persisted ONCE and feeds every round; each round is two
     * contribution shuffles (dst-keyed then src-keyed, map-side partial
-    * sums) plus one node-sliver max riding the snap checkpoint as an
-    * `observe` metric (one O(1) driver value per round — no second agg
-    * job, no per-round BroadcastExchange) — no window, no corpus
-    * collect, state = one score row per node. The snap
+    * sums) plus one node-sliver max observed by the snap checkpoint
+    * ([[Materialize.sliver]]: one O(1) driver value per round — no
+    * second agg job, no per-round BroadcastExchange) — no window, no
+    * corpus collect, state = one score row per node. The snap
     * checkpoint doubles as the per-round lineage truncation (the snap
     * reads its input twice — un-truncated that would re-execute
     * upstream 4^rounds, the blowup the oracle's MATERIALIZED CTEs
@@ -172,46 +166,30 @@ object Graph {
     * Oracle design = q97's: the same [[HitsIters]] rounds unrolled as
     * chained CTEs with the identical per-round snap expression; the
     * read-out normalizes once per side (score/Σ × n, O(1) values)
-    * rounded at 5 dp with ties cut on node id.
-    *
-    * `checkpointer` MUST be EAGER (run an action that materializes the
-    * frame, like the default `localCheckpoint(true)`): each round's snap
-    * and the read-out ride the materializing job as `observe` metrics
-    * and block on `Observation.get` immediately after — a lazy
-    * checkpointer (`localCheckpoint(false)`, `identity`) deadlocks here
-    * instead of merely running slow (ADVICE r21). Same contract as
-    * `Clusters.connectedComponentsWithRounds`. */
-  def hits(spark: SparkSession, dir: String,
-           checkpointer: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+    * rounded at 5 dp with ties cut on node id. */
+  def hits(spark: SparkSession, dir: String): DataFrame = {
     val edges = Tables.lineitem(spark, dir)
       .select((col("l_orderkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Per-round max-snap (see the scaladoc's EXACTNESS paragraph): the
-    // raw hub sums are materialized once, their max rides the SAME
-    // materializing job as an `observe` metric (the Clusters.scala
-    // checkpoint-with-signature idiom) and re-enters as a LITERAL, and
-    // every hub score lands on the 2^30 integer grid before feeding the
-    // next round's sums. (r21: the max used to ride a second agg + 1-row
-    // BroadcastExchange + crossJoin per round — an extra job per round
-    // re-reading the checkpoint it had just written; max over exact
-    // integers is order-free, so the literal is the identical double and
-    // scores are bit-identical.) Snapping the HUB side
-    // alone suffices: the auth half-step then sums exact ints ≤ 2^30
-    // (exact through in-degree 2^23) and the hub half-step sums exact
-    // ints ≤ d_auth·2^30 (exact through degree product 2^23) — the
-    // auth frame never needs its own snap pass.
+    // raw hub sums are materialized once with their max observed, the
+    // max re-enters as a LITERAL (max over exact integers is order-free,
+    // so it is the identical double on every engine), and every hub
+    // score lands on the 2^30 integer grid before feeding the next
+    // round's sums. Snapping the HUB side alone suffices: the auth
+    // half-step then sums exact ints ≤ 2^30 (exact through in-degree
+    // 2^23) and the hub half-step sums exact ints ≤ d_auth·2^30 (exact
+    // through degree product 2^23) — the auth frame never needs its own
+    // snap pass.
     def snap(raw: DataFrame): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val ckpt = checkpointer(raw.observe(obs, max(col("s")).as("mx")))
-      // max is null only on an EMPTY frame (no edges), where the select
-      // below is empty for any finite literal — 1.0 keeps the cast total
-      val mx = Option(obs.get.apply("mx")).fold(1.0)(_.asInstanceOf[Double])
+      // an EMPTY frame (no edges) selects no rows for any finite literal
+      val (ckpt, m) = Materialize.sliver(raw)(coalesce(max(col("s")), lit(1.0)).as("mx"))
       ckpt.select(col("node"),
-        round(col("s") / lit(mx) * lit(HitsSnapScale), 0).as("s"))
+        round(col("s") / lit(m.getDouble(0)) * lit(HitsSnapScale), 0).as("s"))
     }
-    var hubs = checkpointer(edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("s")))
+    var hubs = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(1.0).as("s")).localCheckpoint(true)
     var auths: DataFrame = null
     for (i <- 1 to HitsIters) {
       auths = edges.join(hubs, edges("src") === hubs("node"))
@@ -221,24 +199,20 @@ object Graph {
       // checkpoint re-ran the full edges⋈hubs shuffle+agg a second time.
       // One node-sliver checkpoint makes the edge-scale subtree execute
       // once (pure materialization barrier: values unchanged).
-      if (i == HitsIters) auths = checkpointer(auths)
+      if (i == HitsIters) auths = auths.localCheckpoint(true)
       hubs = snap(edges.join(auths, edges("dst") === auths("node"))
         .groupBy(col("src").as("node")).agg(sum(col("s")).as("s")))
     }
     // read-out: one L1 pass per side — score = s/Σs × n (O(1) values,
-    // q97's ×n convention), 5 dp, ties cut on node id. Σs and n ride the
-    // read-out checkpoint as observe metrics (both exact: s values are
-    // grid integers, so the sum is order-free) instead of a second agg +
-    // broadcast crossJoin — same literal-re-entry trade as snap().
+    // q97's ×n convention), 5 dp, ties cut on node id. Σs and n are
+    // observed by the read-out checkpoint (both exact: s values are grid
+    // integers, so the sum is order-free) — same trade as snap().
     def head(scores0: DataFrame, kind: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val scores = checkpointer(scores0.observe(obs,
-        sum(col("s")).as("t"), count(lit(1)).as("n")))
-      val m = obs.get
-      val t = Option(m("t")).fold(1.0)(_.asInstanceOf[Double])
-      val n = m("n").asInstanceOf[Long]
+      val (scores, m) = Materialize.sliver(scores0)(
+        coalesce(sum(col("s")), lit(1.0)).as("t"), count(lit(1)).as("n"))
       scores.select(lit(kind).as("kind"), expr("node div 2").as("key"),
-          round(col("s") / lit(t) * lit(n), 5).as("score"), col("node"))
+          round(col("s") / lit(m.getDouble(0)) * lit(m.getLong(1)), 5).as("score"),
+          col("node"))
         .orderBy(desc("score"), asc("node")).limit(25)
         .select(col("kind"), col("key"), col("score"))
     }
@@ -262,26 +236,19 @@ object Graph {
   def triangles(spark: SparkSession, dir: String,
                 minSupport: Long = 20): DataFrame = {
     require(minSupport >= 1)
-    // r22: the edge and wedge counts ride their frames' materializing
-    // checkpoints as observe metrics (the q176/CC literal-re-entry
-    // idiom; counts are order-free exact) — the readout used to run a
-    // separate agg job + 1-row broadcast over each checkpoint it had
-    // just written, including a full re-scan of the wedge set (the
-    // dominant O(Σ deg²) intermediate)
-    def ckptWithCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-      (out, obs.get.apply("n").asInstanceOf[Long])
-    }
+    // the edge and wedge counts are observed by their frames'
+    // materializing checkpoints, so the readout never re-scans a frame
+    // it has just written
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), (col("l_partkey") % 100).as("cat"))
       .distinct()
-    val (und, nEdges) = ckptWithCount(items.as("a").join(items.as("b"), Seq("l_orderkey"))
+    // feeds degrees, orientation, and the edge count
+    val (und, edgeStats) = Materialize.sliver(items.as("a").join(items.as("b"), Seq("l_orderkey"))
       .filter(col("a.cat") < col("b.cat"))
       .groupBy(col("a.cat").as("u"), col("b.cat").as("v"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= minSupport)
-      .select(col("u"), col("v"))) // feeds degrees, orientation, and the edge count
+      .select(col("u"), col("v")))(count(lit(1)).as("n"))
     val deg = und.select(col("u").as("node")).unionAll(und.select(col("v")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     // orient low→high in the (degree, node) total order
@@ -295,21 +262,22 @@ object Graph {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(true) // feeds the wedge self-join AND the closer
     val degOf = deg // (node, d) — for ordering wedge endpoints
-    val (wedges, nWedges) = ckptWithCount(oe.as("x").join(oe.as("y"), Seq("src"))
+    // the wedge set — the dominant O(Σ deg²) intermediate — feeds its own
+    // count AND the closing semi-join; materialized once, counted by the
+    // materializing job itself
+    val (wedges, wedgeStats) = Materialize.sliver(oe.as("x").join(oe.as("y"), Seq("src"))
       .join(degOf.select(col("node").as("xd_node"), col("d").as("xd")),
         col("x.dst") === col("xd_node"))
       .join(degOf.select(col("node").as("yd_node"), col("d").as("yd")),
         col("y.dst") === col("yd_node"))
       .filter(col("xd") < col("yd") ||
         (col("xd") === col("yd") && col("x.dst") < col("y.dst")))
-      .select(col("x.dst").as("wu"), col("y.dst").as("wv")))
-      // the wedge set — the dominant O(Σ deg²) intermediate — feeds its
-      // own count AND the closing semi-join; materialized once, counted
-      // by the materializing job itself
+      .select(col("x.dst").as("wu"), col("y.dst").as("wv")))(count(lit(1)).as("n"))
     val tri = wedges.join(oe,
       col("wu") === col("src") && col("wv") === col("dst"), "left_semi")
     tri.agg(count(lit(1)).as("n_triangles"))
-      .select(lit(nEdges).as("n_edges"), lit(nWedges).as("n_wedges"),
+      .select(lit(edgeStats.getLong(0)).as("n_edges"),
+        lit(wedgeStats.getLong(0)).as("n_wedges"),
         col("n_triangles"))
   }
 

@@ -369,18 +369,15 @@ object Scoring {
     // r22: ONE model-build pass instead of three — the target and raw
     // counts fold into a single per-f aggregate (ct = Σ 1[lang=en] is the
     // old left-joined tcnt with its coalesce(·,0) pre-applied; exact
-    // integer arithmetic) and the two totals are its margins, riding the
-    // ≤`buckets`-row checkpoint as observe metrics. The corpus explode
-    // now runs twice (model build + scoring join) instead of four times.
-    val obs = org.apache.spark.sql.Observation()
-    val fc = feat.groupBy(col("f")).agg(count(lit(1)).as("cr"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"))
-      .observe(obs, sum(col("ct")).as("nt"), sum(col("cr")).as("nr"))
-      .localCheckpoint(true)
-    val m = obs.get
-    // null only on an EMPTY corpus, where the join emits no rows
-    val nt = Option(m("nt")).fold(0L)(_.asInstanceOf[Long])
-    val nr = Option(m("nr")).fold(0L)(_.asInstanceOf[Long])
+    // integer arithmetic) and the two totals are its margins, observed
+    // by the ≤`buckets`-row checkpoint. The corpus explode now runs
+    // twice (model build + scoring join) instead of four times. An empty
+    // corpus joins no rows.
+    val counts = feat.groupBy(col("f")).agg(count(lit(1)).as("cr"),
+      sum(when(col("lang") === "en", 1L).otherwise(0L)).as("ct"))
+    val (fc, m) = Materialize.sliver(counts)(
+      coalesce(sum(col("ct")), lit(0L)).as("nt"), coalesce(sum(col("cr")), lit(0L)).as("nr"))
+    val (nt, nr) = (m.getLong(0), m.getLong(1))
     feat.join(broadcast(fc), Seq("f"))
       .groupBy(col("doc_id"), col("lang"))
       .agg(round(sum(log(
@@ -402,15 +399,12 @@ object Scoring {
                    buckets: Int = DsirBuckets): DataFrame = {
     // r22: the weight table (the full q96 scoring pipeline) used to be
     // computed TWICE — once for its rows and once for the w_max agg.
-    // One per-doc-sliver checkpoint with the max riding it as an observe
-    // metric (max over doubles is order-free exact — no summation);
-    // w_max re-enters as a literal instead of a 1-row BroadcastExchange.
-    val obs = org.apache.spark.sql.Observation()
-    val w = dsirWeights(spark, dir, buckets)
-      .observe(obs, max(col("log_weight")).as("lw_max"))
-      .localCheckpoint(true)
-    // null only on an EMPTY corpus, where the select emits no rows
-    val lwMax = Option(obs.get.apply("lw_max")).fold(0.0)(_.asInstanceOf[Double])
+    // One per-doc-sliver checkpoint observes the max (max over doubles
+    // is order-free exact — no summation); w_max re-enters as a literal
+    // instead of a 1-row BroadcastExchange. An empty corpus emits no rows.
+    val (w, m) = Materialize.sliver(dsirWeights(spark, dir, buckets))(
+      coalesce(max(col("log_weight")), lit(0.0)).as("lw_max"))
+    val lwMax = m.getDouble(0)
     w
       // acceptance threshold t = w/w_max computed as round(exp(Δlogw), 6):
       // exp() is libm (1-ulp across engines), so the comparison runs on

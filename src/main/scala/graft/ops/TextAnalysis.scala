@@ -82,18 +82,15 @@ object TextAnalysis {
     * |sources|·|langs|-row sliver; the lang margin broadcasts. Nothing
     * corpus-sized shuffles twice. */
   def sourceLangKl(spark: SparkSession, dir: String): DataFrame = {
-    // the corpus total rides the sliver's materializing checkpoint as an
-    // observe metric (r22, the literal-re-entry idiom; exact integer
-    // sum) — no third margin agg + 1-row BroadcastExchange in the plan
-    val obs = org.apache.spark.sql.Observation()
-    val sl = Tables.documents(spark, dir)
+    // the sliver feeds three margins — truncate so the corpus
+    // aggregation runs once; the corpus total (exact integer sum) is
+    // observed by that checkpoint, so no third margin agg + 1-row
+    // BroadcastExchange appears in the plan. An empty corpus
+    // emits no rows for any literal.
+    val counts = Tables.documents(spark, dir)
       .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c"))
-      // the sliver feeds three margins — truncate so the corpus
-      // aggregation runs once
-      .observe(obs, sum(col("c")).as("n"))
-      .localCheckpoint(true)
-    // null only on an EMPTY corpus, where the joins emit no rows anyway
-    val n = Option(obs.get.apply("n")).fold(1L)(_.asInstanceOf[Long])
+    val (sl, tot) = Materialize.sliver(counts)(coalesce(sum(col("c")), lit(1L)).as("n"))
+    val n = tot.getLong(0)
     val s = sl.groupBy(col("source")).agg(sum(col("c")).as("ns"))
     val l = sl.groupBy(col("lang")).agg(sum(col("c")).as("nl"))
     sl.join(s, "source").join(broadcast(l), "lang")
@@ -1037,15 +1034,12 @@ object TextAnalysis {
     // so c_a = Σ_b c_ab, c_b = Σ_a c_ab, N = Σ c_ab — all order-free
     // integer sums). The prior spelling aggregated the unmaterialized
     // explode FOUR separate times (cab/ca/cb/tot — 8 parquet scans in
-    // the physical plan); N now rides the pair-table checkpoint as an
-    // observe metric and the margins are sliver-sized re-aggregations.
-    val obs = org.apache.spark.sql.Observation()
-    val cab = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
-      .observe(obs, sum(col("c_ab")).as("n"))
-      .localCheckpoint(true)
-    // null only on an EMPTY pair table, where the joins below emit no
-    // rows for any literal — 1L keeps the division total
-    val nPairs = Option(obs.get.apply("n")).fold(1L)(_.asInstanceOf[Long])
+    // the physical plan); N is now observed by the pair-table checkpoint
+    // and the margins are sliver-sized re-aggregations. An empty pair
+    // table emits no rows for any literal.
+    val (cab, tot) = Materialize.sliver(pairs.groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("c_ab")))(coalesce(sum(col("c_ab")), lit(1L)).as("n"))
+    val nPairs = tot.getLong(0)
     val ca = cab.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
     val cb = cab.groupBy(col("b")).agg(sum(col("c_ab")).as("c_b"))
     val w = org.apache.spark.sql.expressions.Window

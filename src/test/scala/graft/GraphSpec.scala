@@ -48,22 +48,6 @@ class GraphSpec extends SparkSpec {
     assert(out.map(_.getAs[String]("kind")).toSet.subsetOf(Set("order", "customer")))
   }
 
-  test("pagerank through reliable checkpoint() matches the localCheckpoint path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_pr").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val edges = undirected(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)))
-      val local = Graph.rankTable(edges, iters = 7, damping = 0.85)
-        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
-      val reliable = Graph.rankTable(edges, iters = 7, damping = 0.85,
-          checkpointer = _.checkpoint(true))
-        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
-      assert(reliable == local, "checkpoint strategy must not change results")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("q176 HITS matches a driver-side power iteration on the same edges") {
     val edges = Tables.lineitem(spark, sf)
       .select((col("l_orderkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))

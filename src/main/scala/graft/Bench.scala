@@ -1,272 +1,160 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-
-/** Per-round benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR.
+/** Timing mains over [[SparkEntry.queries]], all on the [[Harness]] core:
   *
-  * Machine-parsable by construction (round-1 driver got "parsed": null
-  * from sbt log noise): the bare JSON is the FINAL stdout line, and the
-  * same JSON is written to BENCH.json in the working directory.
-  * Comparability: a JIT/session warmup query runs first (uncounted), and
-  * each query reports the MIN of two runs (first-run codegen/classload
-  * skew was ~5s on whichever query ran first in round 1). r21 adds
-  * `queries_min`/`value_min` — the same vector after one targeted third
-  * run of the 10 widest intra-query spreads — as the round-over-round
-  * comparison denominator (VERDICT r20 item 3: the host's
-  * non-reproducing fat tail swings identical code up to 3.6×);
-  * `queries`/`value` keep their r01-compatible min-of-2 semantics.
-  */
+  *  - `Bench` — every query on `SPARK_GRAFT_SF_DIR`; the bare JSON is the
+  *    FINAL stdout line and is also written to BENCH.json.
+  *  - `Bench family <sfDir> [outFile] [graph|q1,q2,...]` — the scale-trend
+  *    bench of the corpus-structural family (or the graph/agg head, or an
+  *    explicit list); needs only documents + embeddings for the default
+  *    family, exactly what ScaleGen synthesizes.
+  *  - `Bench ab <sfDir> [outFile] [q1,q2,...]` — same-session min/median/
+  *    max of flagged queries, to adjudicate cross-session deltas.
+  *
+  * Bench and family run the calibrated sweep ([[Harness.sweep]]); their
+  * differences are the [[BenchSweep]] / [[FamilySweep]] constants.
+  * `queries`/`value` stay min-of-2-sweep-runs (comparable with every
+  * earlier artifact); `queries_min`/`value_min` add the targeted re-runs
+  * and are the round-over-round denominator (BASELINE.md). */
 object Bench {
-  /** Execute a query's FULL physical plan and return its row count.
-    *
-    * `df.count()` is NOT that: Catalyst re-optimizes around the count —
-    * every output column is pruned, and any cardinality-preserving tail
-    * is eliminated outright (a left join whose build side is an
-    * aggregate has provably-unique keys, so q133's entire substring-
-    * dedup pipeline collapsed to `FileScan parquet []` + count(1):
-    * measured 0.97 s "at sf100" while reading 2.4 MB of an 811 MB
-    * corpus — r16 found the bench had been timing a metadata count for
-    * such queries since the operator landed). `queryExecution.toRdd`
-    * compiles the dataframe's own physical plan — every column, every
-    * operator — and counting THAT RDD executes it without giving the
-    * optimizer a count to collapse. Eager operators (the checkpointing
-    * pipelines) are unaffected; lazy operators with row-preserving
-    * tails now pay their real cost. */
-  private[graft] def runFully(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
+  /** 193 sub-second-median queries: a calibrator per 10 queries costs
+    * ~2% of the sweep; a query failure is recorded, never fatal (one
+    * broken query must not lose the whole artifact); ONE-SIDED bound —
+    * at sf0.1 the calibrator keeps improving across the whole run from
+    * shared-path warm-in no pre-warm reaches, so only in-run
+    * DEGRADATION rejects. */
+  val BenchSweep = Harness.SweepMode(segmentLen = 10, spreadReruns = 10, maxReruns = 16,
+    capGrows = true, twoSidedBound = false, failFast = false)
+  /** 8–40 multi-second queries: a calibrator after every query (the
+    * per-segment host constant `calib_s`), 3 spread re-runs capped at 8
+    * (a fully-degraded train is a re-run-the-window case), a symmetric
+    * bound, and fail-fast (a broken family query voids the scale claim). */
+  val FamilySweep = Harness.SweepMode(segmentLen = 1, spreadReruns = 3, maxReruns = 8,
+    capGrows = false, twoSidedBound = true, failFast = true)
+  /** A/B: round-robin passes over the set, so slow load drift hits every
+    * query equally; min-of-N is the load-robust current cost. */
+  val AbRounds = 5
 
-  /** 1/5/15-min system load averages — recorded in the artifact so a
-    * judge can adjudicate cross-session timing swings (the box carries
-    * external load; SURVEY §12.1) from the artifact itself instead of
-    * re-deriving the noise story every round. */
-  private[graft] def loadAvg(): String =
-    try scala.util.Using.resource(scala.io.Source.fromFile("/proc/loadavg")) {
-      src => src.mkString.trim.split(" ").take(3).mkString("[", ",", "]")
-    } catch { case _: Throwable => "[]" }
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq() => bench()
+    case "family" +: rest if rest.nonEmpty => family(rest)
+    case "ab" +: rest if rest.nonEmpty => ab(rest)
+    case _ => sys.error("usage: Bench | Bench family <sfDir> [outFile] [graph|q1,q2,...] | " +
+      "Bench ab <sfDir> [outFile] [q1,q2,...]")
+  }
 
-  /** Window calibrator (r20, VERDICT r19 item 4 — the FamilyBench
-    * self-labeling ported to the bench denominator): a fixed cheap
-    * query (q21 min-of-2) runs before and after the sweep; a
-    * last/first swing past [[CalibratorBound]] labels the window
-    * REJECTED in-artifact. NOTE the label's semantics (ADVICE r19):
-    * ACCEPTED certifies INTRA-RUN stability only — a window that is
-    * uniformly degraded the whole run (the r19 bench's own 1.29×-slow
-    * boot) still self-labels ACCEPTED; compare `calibrator.first_s`
-    * against a healthy-window record (BASELINE.md) for host health. */
-  private val CalibratorQuery = "q21_dedup_exact"
-  private val CalibratorBound = 1.6
+  private def num(o: Option[Double]): String = o.fold("null")(v => f"$v%.3f")
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  private def list(names: Seq[String]): String = names.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-  /** r21 session-2 (OPTIMIZATION_r21 "Not yet optimized" item 1): the
-    * 193-query sweep used to carry only ENDPOINT calibrators, so
-    * MID-run degradation (the documented erratic-train regime — runs
-    * that degrade for a stretch behind clean endpoints) was invisible
-    * in-artifact and cost manual solo re-runs to adjudicate. The
-    * calibrator now also runs once after every [[SegmentLen]] queries
-    * (~20 sub-second runs ≈ 2% of the sweep wall); a segment whose
-    * calibrator exceeds CalibratorBound × first_s marks its queries
-    * degraded, and the targeted re-run set becomes
-    * [[FamilyBench.selectReruns]] (every degraded-segment query plus
-    * the [[SpreadReruns]] widest intra-query spreads, train order,
-    * capped at [[MaxReruns]]) — the family train's spec-pinned
-    * selection at bench scale. `queries`/`value` keep their
-    * r01-compatible min-of-2-sweep-runs semantics; only the min vector
-    * and the artifact fields grew. Single calibrator run per segment:
-    * the segment signal is a degradation FLAG, not a denominator —
-    * min-of-2 would double its cost for no sharper flag. */
-  private val SegmentLen = 10
-  private val SpreadReruns = 10
-  private val MaxReruns = 16
-
-  def main(args: Array[String]): Unit = {
+  private def bench(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadBefore = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tuning.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: exercise scan + join + agg codegen paths once, uncounted —
-    // then warm the calibrator query to a JIT FIXPOINT (r20): a
-    // sub-second calibrator keeps speeding up across the whole ~260 s
-    // run from shared-path tiered compilation (one warm run measured
-    // first/last 0.37/0.20 s on an idle box — a spurious REJECT that
-    // has nothing to do with the window). Re-run until two consecutive
-    // runs agree within 15% (≤ 6 tries) before taking first_s.
-    try etl.Transform.topkEnriched(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    {
-      var prev = Double.MaxValue
-      var n = 0
-      var stable = false
-      while (n < 6 && !stable) {
-        val t0 = System.nanoTime()
-        // a thrown calibrator run is NON-MEASURABLE (ADVICE r20): its
-        // time-to-throw must not feed the stability test — two fast
-        // consecutive failures used to exit the loop as "stable"
-        val ok = try { runFully(SparkEntry.queries(CalibratorQuery)(spark, sfDir)); true }
-                 catch { case e: Throwable =>
-                   System.err.println(s"[bench] calibrator warmup FAILED: ${e.getMessage}"); false }
-        if (ok) {
-          val t = (System.nanoTime() - t0) / 1e9
-          stable = t > prev * 0.85 && t < prev * 1.15
-          prev = t
-        }
-        n += 1
-        spark.catalog.clearCache()
-      }
-    }
-    // a transient calibrator failure must never abort the run AFTER the
-    // whole sweep was measured (ADVICE r20: an uncaught throw here lost
-    // the entire BENCH.json) — a failed calibration is recorded as null
-    // and the window labeled CALIBRATOR_FAILED
-    def calibrate(): Option[Double] =
-      try Some((1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        runFully(SparkEntry.queries(CalibratorQuery)(spark, sfDir))
-        val t = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t
-      }.min)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] calibrator FAILED: ${e.getMessage}")
-        spark.catalog.clearCache()
-        None
-      }
-    val calibFirst = calibrate()
-    // a throwing query is recorded as FAILED (and excluded from the
-    // total), never as a fast "success" timing — a regression that breaks
-    // a query must not read as a speedup. Each run also reports the
-    // hot-key guard's detection wall-seconds (GuardStats — r22, VERDICT
-    // r21 item 8: the cost was only visible in FamilyBench/probe
-    // artifacts; a silent detection regression must show in the artifact
-    // the driver reads).
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean, Double) = {
-      GuardStats.reset()
-      val t0 = System.nanoTime()
-      val ok = try { runFully(fn(spark, sfDir)); true }
-               catch { case e: Throwable =>
-                 System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
-      ((System.nanoTime() - t0) / 1e9, ok, GuardStats.detectionSeconds)
-    }
-    val sortedQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-    val segCalib = scala.collection.mutable.ArrayBuffer[Double]()
-    val results = sortedQueries.zipWithIndex.map { case ((name, fn), idx) =>
-      val runs = (1 to 2).map(_ => timeOnce(name, fn))
-      val okTimes = runs.collect { case (t, true, _) => t }
-      // detection seconds of the min successful run (the run `queries`
-      // reports) — FamilyBench's convention
-      val detMin = runs.collect { case (t, true, d) => (t, d) }
-        .sortBy(_._1).headOption.map(_._2).getOrElse(0.0)
-      // one query's cache hygiene must never bill the next: drop any
-      // plan-cache entries it left behind before the next query runs
-      spark.catalog.clearCache()
-      // segment calibrator (see [[SegmentLen]] scaladoc): one run closes
-      // every SegmentLen-query segment; a failed run records -1 (never a
-      // fast "healthy" reading). A reading past the degradation bound
-      // gets ONE confirming retry before it flags (ADVICE r21: a single
-      // noisy sub-second sample otherwise marks all 10 segment queries
-      // degraded and consumes most of the rerun cap) — min-of-2 is the
-      // segment constant only when the first read was already suspect.
-      if ((idx + 1) % SegmentLen == 0 || idx == sortedQueries.size - 1) {
-        var (t, ok, _) = timeOnce(CalibratorQuery, SparkEntry.queries(CalibratorQuery))
-        spark.catalog.clearCache()
-        if (ok && calibFirst.exists(f => t > CalibratorBound * f)) {
-          val (t2, ok2, _) = timeOnce(CalibratorQuery, SparkEntry.queries(CalibratorQuery))
-          spark.catalog.clearCache()
-          if (ok2) t = math.min(t, t2)
-        }
-        segCalib += (if (ok) t else -1.0)
-      }
-      // a failed run's time-to-throw must never publish as the query's
-      // timing — report min over SUCCESSFUL runs only, -1 if none
-      (name, okTimes, runs.forall(_._2), detMin)
-    }
-    // r21 fat-tail denoiser (VERDICT r20 item 3): this host swings
-    // identical-code per-query times up to 3.6× between runs with a
-    // NON-reproducing outlier set; the 10 queries with the widest
-    // absolute intra-query spread (max−min over their own two runs) get
-    // ONE targeted third run, and the artifact publishes the per-query
-    // min over ALL runs as `queries_min`/`value_min` — the denominator
-    // BASELINE.md defines round-over-round comparison on. The legacy
-    // `queries`/`value` (min-of-first-2) stay untouched for
-    // comparability with r01–r20 artifacts.
-    val spreads = results
-      .collect { case (n, ts, true, _) if ts.size >= 2 => (n, ts.max - ts.min) }
-      .toMap
-    // a query is degraded when ITS segment's calibrator degraded (r21
-    // session-2; a -1 failed calibrator run never flags)
-    val degraded: Set[String] = calibFirst match {
-      case Some(f) => sortedQueries.map(_._1).zipWithIndex.collect {
-        case (n, idx) if segCalib.lift(idx / SegmentLen)
-          .exists(c => c > 0 && c > CalibratorBound * f) => n
-      }.toSet
-      case None => Set.empty
-    }
-    // the rerun cap grows with the degraded set (ADVICE r21: two degraded
-    // segments = 20 queries used to starve the spread-based picks the min
-    // vector was added for) — degraded picks never consume the spread
-    // quota
-    val maxReruns = math.max(MaxReruns, degraded.size + SpreadReruns)
-    val rerunNames = FamilyBench.selectReruns(
-      sortedQueries.map(_._1), spreads, degraded, SpreadReruns, maxReruns)
-    val rerun: Map[String, Double] = rerunNames.flatMap { name =>
-      val (t, ok, _) = timeOnce(name, SparkEntry.queries(name))
-      spark.catalog.clearCache()
-      if (ok) Some(name -> t) else None
-    }.toMap
-    val qs = results.map { case (k, ts, _, _) =>
-      "\"" + k + "\":" + (if (ts.nonEmpty) ts.min else -1.0)
-    }.mkString("{", ",", "}")
-    val qsMin = results.map { case (k, ts, _, _) =>
-      val all = ts ++ rerun.get(k)
-      "\"" + k + "\":" + (if (all.nonEmpty) all.min else -1.0)
-    }.mkString("{", ",", "}")
-    // per-query detection seconds (min run), FamilyBench's convention:
-    // present only where the hot-key guard's detection pass actually ran
-    val detJson = results.collect { case (k, _, true, d) if d > 0 =>
-      f""""$k":$d%.3f""" }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false, _) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case (_, ts, true, _) if ts.nonEmpty => ts.min }.sum
-    val totalMin = results.collect { case (k, ts, true, _) if ts.nonEmpty =>
-      (ts ++ rerun.get(k)).min }.sum
-    val rerunJson = rerunNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val calibLast = calibrate()
-    val calibRatio = for (f <- calibFirst; l <- calibLast) yield l / f
-    // ONE-SIDED bound (unlike FamilyBench's symmetric one): at sf0.1 the
-    // calibrator is sub-second and keeps improving across the ~260 s run
-    // from WHOLE-RUN shared-path warm-in (codegen cache, parquet page
-    // cache) that no q21-only pre-warm can reach — measured 0.35 → 0.19
-    // even after a warm-to-fixpoint loop on an idle box. An improving
-    // ratio is expected warm-in, never window evidence; only
-    // DEGRADATION (last/first > bound) labels the run REJECTED. The
-    // start-degraded-then-recovered corner is adjudicated from
-    // loadavg_before + first_s vs the healthy record, both in-artifact.
-    val windowStatus = calibRatio match {
-      case None => "CALIBRATOR_FAILED"
-      case Some(r) if r > CalibratorBound => "REJECTED"
-      case _ => "ACCEPTED"
-    }
-    if (windowStatus == "REJECTED") System.err.println(
-      f"WARN: bench window REJECTED by its calibrator — $CalibratorQuery " +
-        f"${calibFirst.get}%.2f s before vs ${calibLast.get}%.2f s after " +
-        f"(${calibRatio.get}%.2fx, bound ${CalibratorBound}x)")
-    def optNum(o: Option[Double]): String =
-      o.map(v => f"$v%.3f").getOrElse("null")
+    val loadBefore = Harness.loadAvg()
+    val spark = Harness.session("4")
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val s = Harness.sweep(spark, sfDir, names, BenchSweep)
+    val ok = s.results.filter(_.ok)
+    val qs = obj(s.results.map(r => r.name -> (if (r.secs.nonEmpty) r.secs.min else -1.0).toString))
+    val qsMin = obj(s.results.map { r =>
+      val all = r.secs ++ s.rerun.get(r.name)
+      r.name -> (if (all.nonEmpty) all.min else -1.0).toString })
+    val det = obj(ok.collect { case r if r.detectionSec > 0 => r.name -> f"${r.detectionSec}%.3f" })
     val calib =
-      s"""{"query":"$CalibratorQuery","first_s":${optNum(calibFirst)},"last_s":${optNum(calibLast)},"ratio":${optNum(calibRatio)},"bound":$CalibratorBound,"label_semantics":"one-sided: REJECTED only on in-run degradation (ratio > bound); ratio < 1 is expected whole-run warm-in; judge host health from first_s + loadavg_before vs a healthy-window record"}"""
-    val segCalibJson = segCalib.map(v => f"$v%.3f").mkString("[", ",", "]")
-    val degradedJson = sortedQueries.map(_._1).filter(degraded)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"query":"${Harness.CalibratorQuery}","first_s":${num(s.calibFirst)},"last_s":${num(s.calibLast)},"ratio":${num(s.ratio)},"bound":${Harness.CalibratorBound},"label_semantics":"one-sided: REJECTED only on in-run degradation (ratio > bound); ratio < 1 is expected whole-run warm-in; judge host health from first_s + loadavg_before vs a healthy-window record"}"""
+    val m = BenchSweep
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","runs_per_query":2,"value_min":$totalMin,"queries_min":$qsMin,"rerun_queries":$rerunJson,"min_semantics":"queries_min/value_min = per-query min over the 2 sweep runs plus one targeted re-run of each degraded-segment query and the $SpreadReruns widest absolute intra-query spreads (rerun_queries, train order, cap $maxReruns = max($MaxReruns, degraded + $SpreadReruns) so degraded picks never starve the spread quota); the round-over-round comparison denominator per BASELINE.md","segment_len":$SegmentLen,"calib_segments":$segCalibJson,"segments_degraded":$degradedJson,"detection_s":$detJson,"detection_semantics":"per-query wall seconds of the hot-key guard's sampled detection pass (2% doc sample + mega-doc screen, GuardStats) in the min run; present only where detection ran","window_status":"$windowStatus","calibrator":$calib,"loadavg_before":$loadBefore,"loadavg_after":${loadAvg()}}"""
-    Files.writeString(Paths.get("BENCH.json"), json)
-    println(json)
+      s"""{"metric":"total","value":${ok.map(_.secs.min).sum},"unit":"sec","queries":$qs,"failed":${list(s.results.filterNot(_.ok).map(_.name))},"sf":"$sfDir","runs_per_query":2,"value_min":${ok.map(s.minOf).sum},"queries_min":$qsMin,"rerun_queries":${list(s.rerunNames)},"min_semantics":"queries_min/value_min = per-query min over the 2 sweep runs plus one targeted re-run of each degraded-segment query and the ${m.spreadReruns} widest absolute intra-query spreads (rerun_queries, train order, cap ${s.rerunCap} = max(${m.maxReruns}, degraded + ${m.spreadReruns}) so degraded picks never starve the spread quota); the round-over-round comparison denominator per BASELINE.md","segment_len":${m.segmentLen},"calib_segments":${s.segCalib.map(v => f"$v%.3f").mkString("[", ",", "]")},"segments_degraded":${list(names.filter(s.degraded))},"detection_s":$det,"detection_semantics":"per-query wall seconds of the hot-key guard's sampled detection pass (2% doc sample + mega-doc screen, GuardStats) in the min run; present only where detection ran","window_status":"${s.windowStatus}","calibrator":$calib,"loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()}}"""
+    Harness.emit("BENCH.json", json)
+    spark.stop()
+  }
+
+  /** The corpus-structural family: operators whose cost depends on corpus
+    * structure, not just volume. q94/q103 are excluded (ScaleGen's
+    * replica token prefixes make their literal BM25 terms vanish), q116
+    * too (it sketches lineitem, which docs-only ScaleGen does not grow);
+    * q182–q184 and q189 run via explicit lists. */
+  private val Family = Seq(
+    "q21_dedup_exact", "q22_jaccard_neardup", "q23_minhash_lsh",
+    "q24_simhash_neardup", "q25_cosine_topk", "q26_ann_ivf",
+    "q27_embedding_neardup", "q54_dedup_clusters", "q76_ann_lsh",
+    "q88_bloom_decontaminate", "q89_chunk_dedup", "q90_shard_manifest",
+    "q154_cdc_chunks", "q95_lm_xent", "q96_dsir_weights", "q99_vocab_encode",
+    "q105_random_projection", "q111_kmeans", "q115_priority_sample",
+    "q118_semdedup", "q119_containment", "q129_dedup_apply",
+    "q130_integrity_manifest", "q133_substring_dedup", "q134_bpe_merges",
+    "q135_heavy_hitters", "q136_chunk_sliding", "q138_substring_apply",
+    "q139_semdedup_ivf", "q140_semdedup_apply", "q141_cms_registers",
+    "q142_gopher_rules", "q143_leakage_safe_split",
+    "q155_embedding_neardup_ivf", "q171_kn_xent", "q174_ngram_diversity",
+    "q175_zipf_slope", "q180_neyman_alloc", "q181_dup_spectrum",
+    "q186_source_lang_kl", "q187_bitext_mining")
+
+  /** Graph/agg head: needs orders/lineitem/events, which full ScaleGen
+    * synthesizes with offset key spaces. */
+  private val GraphFamily = Seq(
+    "q97_pagerank", "q124_basket_pairs", "q125_rfm_segments",
+    "q126_assoc_rules", "q128_triangles", "q129_dedup_apply",
+    "q132_cohort_retention", "q54_dedup_clusters")
+
+  private def family(args: Seq[String]): Unit = {
+    val sfDir = args(0)
+    val outFile = args.lift(1).getOrElse("FAMILY_BENCH.json")
+    val names = args.lift(2) match {
+      case None => Family
+      case Some("graph") => GraphFamily
+      case Some(csv) =>
+        val qs = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        val unknown = qs.filterNot(SparkEntry.queries.contains)
+        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+        qs
+    }
+    val loadBefore = Harness.loadAvg()
+    // shuffle partitioning independent of parallelism (AQE's pre-coalesce
+    // width follows it)
+    val spark = Harness.session("32",
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toSeq: _*)
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    val s = Harness.sweep(spark, sfDir, names, FamilySweep)
+    def per(f: Harness.Swept => Double) = obj(s.results.map(r => r.name -> f"${f(r)}%.3f"))
+    // on-disk input volume: the scale point describes itself instead of
+    // relying on the sfDir name matching a ScaleGen rep count
+    val inputMib = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
+      try files.filter(p => java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+        .mapToLong(java.nio.file.Files.size).sum / (1024.0 * 1024.0)
+      finally files.close()
+    }
+    val metric = if (names eq GraphFamily) "graph_agg_family_total" else "dedup_similarity_family_total"
+    val m = FamilySweep
+    val json =
+      f"""{"metric":"$metric","value":${s.results.map(_.secs.min).sum}%.2f,"unit":"sec","sf":"$sfDir","input_mib":$inputMib%.1f,"cpus":${Harness.cpus(spark)},"shuffle_partitions":$shuffle,"aqe_initial_partitions":$shuffle,"runs_per_query":2,"aggregation":"min_of_2_warm","exec":"full_plan","value_min":${s.results.map(s.minOf).sum}%.2f,"queries_min":${per(s.minOf)},"rerun_queries":${list(s.rerunNames)},"min_semantics":"queries_min/value_min = per-query min over the 2 sweep runs plus one targeted re-run of each degraded-segment query and the ${m.spreadReruns} widest intra-query spreads (rerun_queries, cap ${m.maxReruns}); the scale-trend denominator","window_status":"${s.windowStatus}","calibrator":{"query":"${Harness.CalibratorQuery}","first_s":${num(s.calibFirst)},"last_s":${num(s.calibLast)},"ratio":${num(s.ratio)},"bound":${Harness.CalibratorBound},"label_semantics":"intra-train stability only; compare first_s to a healthy-window record for host health"},"calib_s":${obj(s.results.zip(s.segCalib).map { case (r, c) => r.name -> f"$c%.3f" })},"segments_degraded":${list(names.filter(s.degraded))},"segment_semantics":"calib_s[q] = one calibrator wall right after q's runs — the per-segment host constant; segments_degraded = queries whose segment calibrator exceeded bound x first_s (their timings are window-suspect and were re-run)","loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()},"queries":${per(_.secs.min)},"detection_s":${obj(s.results.collect { case r if r.detectionSec > 0 => r.name -> f"${r.detectionSec}%.3f" })},"detection_semantics":"per-query wall seconds of the hot-key guard's sampled detection pass (2%% doc sample + mega-doc screen) in the min run; present only where detection ran"}"""
+    Harness.emit(outFile, json)
+    spark.stop()
+  }
+
+  /** The round-9 flagged set, the A/B default. */
+  private val DefaultFlagged = Seq(
+    "q37_csv_roundtrip", "q38_sink_insert_absent", "q39_merge_timestamped",
+    "q40_cube_agg", "q41_grouping_sets", "q42_pivot_status",
+    "q86_stream_join", "q87_pq_ann", "q97_pagerank",
+    "q119_containment", "q127_robust_outliers", "q136_chunk_sliding")
+
+  private def ab(args: Seq[String]): Unit = {
+    val sfDir = args(0)
+    val outFile = args.lift(1).getOrElse("AB.json")
+    val queries = args.lift(2).fold(DefaultFlagged)(_.split(",").toSeq)
+    val spark = Harness.session("32")
+    val loadBefore = Harness.loadAvg()
+    def time(q: String): Double = Harness.time(spark, q)(SparkEntry.queries(q)(spark, sfDir)).get.sec
+    time(queries.head) // codegen/classload warmup, uncounted
+    val runs = (1 to AbRounds).flatMap(_ => queries.map(q => q -> time(q)))
+    val qs = obj(queries.map { q =>
+      val ts = runs.collect { case (`q`, t) => t }.sorted
+      q -> f"""{"min":${ts.head}%.3f,"median":${ts(ts.size / 2)}%.3f,"max":${ts.last}%.3f}""" })
+    val json =
+      s"""{"metric":"same_session_ab_r09","sf":"$sfDir","cpus":${Harness.cpus(spark)},"runs_per_query":$AbRounds,"aggregation":"min_median_max_round_robin","loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()},"queries":$qs}"""
+    Harness.emit(outFile, json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: per-partition candidate-mass diagnostic for q187's band
@@ -29,16 +28,7 @@ object BitextSkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outFile = if (args.length > 1) args(1) else "BITEXT_SKEW.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     import ops.TextAnalysis._
     graft.functions.VectorExprs.register(spark)
     val hv = hashVecOf(spark, sfDir)
@@ -54,7 +44,7 @@ object BitextSkewProbe {
     // joins at (mirrors withBitextTuning's arithmetic)
     val floor = ((BitextBands.toLong * n * BitextBuildRowBytes +
       BitextHashBuildTarget - 1) / BitextHashBuildTarget).toInt
-    val parts = math.max(floor, cpus.toInt)
+    val parts = math.max(floor, Harness.cpus(spark))
     val bandCols = (0 until BitextBands).map(b =>
       struct(lit(b).as("band"), col("bb").getItem(b).as("bv")))
     def sideCounts(langPred: org.apache.spark.sql.Column, name: String) =
@@ -85,9 +75,8 @@ object BitextSkewProbe {
     val mx = if (perPart.isEmpty) 0L else perPart.last
     val ratio = if (med > 0) mx.toDouble / med else 0.0
     val json =
-      f"""{"metric":"bitext_skew_probe","sf":"$sfDir","n":$n,"r":$r,"cap":$cap,"parts":$parts,"occupied_parts":${perPart.length},"cand_total":$total,"cand_max_partition":$mx,"cand_med_partition":$med,"part_max_over_med":$ratio%.3f,"top_buckets":[${top.mkString(",")}],"loadavg":${Bench.loadAvg()}}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)
-    println(json)
+      f"""{"metric":"bitext_skew_probe","sf":"$sfDir","n":$n,"r":$r,"cap":$cap,"parts":$parts,"occupied_parts":${perPart.length},"cand_total":$total,"cand_max_partition":$mx,"cand_med_partition":$med,"part_max_over_med":$ratio%.3f,"top_buckets":[${top.mkString(",")}],"loadavg":${Harness.loadAvg()}}"""
+    Harness.emit(outFile, json)
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
@@ -44,7 +43,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * Scope notes, honestly stated:
   *  - the listener bus is ASYNC — after each query the tool quiesces
-  *    (polls until no new events for 300 ms, 10 s cap) before
+  *    ([[Harness.quiesce]] on the captured count) before
   *    attributing captured executions to the query; a `leftover`
   *    count records any stragglers attributed to the NEXT query, and
   *    the total leftover count lands in TOTALS (ADVICE r18).
@@ -118,16 +117,7 @@ object ExecutedSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = if (args.length > 1) args(1) else "EXECSWEEP.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+    val spark = Harness.session("32")
     val captured = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -138,17 +128,6 @@ object ExecutedSweep {
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     })
-
-    def quiesce(): Unit = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var last = -1
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-        (captured.size != last || System.nanoTime() - stableSince < 300L * 1000 * 1000)) {
-        if (captured.size != last) { last = captured.size; stableSince = System.nanoTime() }
-        Thread.sleep(50)
-      }
-    }
 
     def drain(): Seq[(String, QueryExecution)] = {
       val b = Seq.newBuilder[(String, QueryExecution)]
@@ -162,13 +141,13 @@ object ExecutedSweep {
       hay.sliding(needle.length).count(_ == needle)
 
     // warmup (codegen/classload) — drained, not attributed
-    Bench.runFully(SparkEntry.queries("q21_dedup_exact")(spark, sfDir))
-    quiesce(); drain()
+    Harness.runFully(SparkEntry.queries("q21_dedup_exact")(spark, sfDir))
+    Harness.quiesce(captured.size.toLong); drain()
 
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val leftoverBefore = captured.size
-      Bench.runFully(fn(spark, sfDir))
-      quiesce()
+      Harness.runFully(fn(spark, sfDir))
+      Harness.quiesce(captured.size.toLong)
       val execs = drain()
       val plans = execs.map(_._2.executedPlan)
       val texts = plans.map(_.toString)
@@ -202,12 +181,10 @@ object ExecutedSweep {
         s""""bnlj_build_rows_over_bound":$overTotal,"bnlj_build_rows_unknown":$unknownTotal,""" +
         s""""leftover_total":$leftoverTotal,"per_query":{""",
       ",", "}}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      json.getBytes("UTF-8"))
-    println(json.take(500))
     println(s"TOTALS: " + smells.map(s => s"$s=${totals(s)}").mkString(" ") +
       s" leftover=$leftoverTotal bnlj_max_build_rows=$maxBuild" +
       s" bnlj_over_bound=$overTotal bnlj_unknown=$unknownTotal")
+    Harness.emit(outFile, json)
     spark.stop()
   }
 }

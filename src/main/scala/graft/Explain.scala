@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time and/or explain individual SparkEntry queries.
   *
   * Usage: runMain graft.Explain <sfDir> [--explain] [--plan-only] <queryName>...
-  * Times each named query (full-plan execution + wall-clock, 2 runs)
+  * Times each named query ([[Harness.time]], 2 runs)
   * and optionally prints the formatted physical plan — the feedback
   * loop for checking pushdown/broadcast/codegen claims (SURVEY.md §4).
   * `--plan-only` implies --explain and skips the timed runs (the
@@ -22,17 +20,7 @@ object Explain {
     val showPlan = args.contains("--explain") || planOnly
     val names = args.drop(1).filterNot(a =>
       a == "--explain" || a == "--plan-only" || a == "--executed")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS) — session conf, required by
-      // every events-backed query (same as Bench/Verify/SparkSpec)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("32")
     val targets: Seq[String] =
       if (names.nonEmpty) names.toSeq else SparkEntry.queries.keys.toSeq.sorted
     targets.foreach { name =>
@@ -40,20 +28,15 @@ object Explain {
         case None => println(s"UNKNOWN $name")
         case Some(fn) =>
           if (showPlan) { println(s"== $name =="); fn(spark, sfDir).explain("formatted") }
-          // time the full invocation (some queries materialize eagerly
-          // inside fn and release their caches — same shape Bench times);
-          // full-plan execution, NOT df.count() (the r16 hollow-timing
-          // collapse — see Bench.runFully)
           if (executed) {
             val df = fn(spark, sfDir)
-            Bench.runFully(df)
+            Harness.runFully(df)
             println(s"== $name (executed/adaptive) ==")
             println(df.queryExecution.executedPlan.toString.take(20000))
           }
           if (!planOnly) (1 to 2).foreach { i =>
-            val t0 = System.nanoTime()
-            val n = Bench.runFully(fn(spark, sfDir))
-            println(f"TIME $name run$i ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n")
+            val t = Harness.time(spark, name)(fn(spark, sfDir)).get
+            println(f"TIME $name run$i ${t.sec}%.2f s rows=${t.rows}")
           }
       }
     }

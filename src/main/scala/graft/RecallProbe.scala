@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: measured top-1 recall of the q187 banded bitext miner
@@ -42,20 +41,8 @@ object RecallProbe {
     // the shipped bitextBucketCap(n) rule, resolved inside the frame
     // from the corpus it measures, and nocap stays the limit case
     val cap = if (args.length > 4) args(4).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // liveness tolerance for single-JVM probe runs: a long driver
-      // pause (GC, big task-result processing) must not let the
-      // heartbeat receiver declare the local executor dead mid-probe
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val loadBefore = Bench.loadAvg()
+    val spark = Harness.session("32")
+    val loadBefore = Harness.loadAvg()
     val t0 = System.nanoTime()
     val f = ops.TextAnalysis.bitextRecallFrame(spark, sfDir, sampleN, rDelta, cap)
     val row = f.agg(
@@ -75,9 +62,8 @@ object RecallProbe {
     val gap = if (row.isNullAt(4)) 0.0 else row.getDouble(4)
     val capUsed = if (row.isNullAt(5)) cap else row.getInt(5)
     val json =
-      f"""{"metric":"bitext_recall_top1","sf":"$sfDir","sample_n":$sampleN,"r_delta":$rDelta,"cap":$capUsed,"cap_arg":$cap,"n_q":$nQ,"recall_top1":${frac(1)}%.4f,"recall_top1_nocap":${frac(2)}%.4f,"coverage":${frac(3)}%.4f,"mean_cos_gap":$gap%.6f,"sec":$sec%.1f,"cpus":$cpus,"loadavg_before":$loadBefore,"loadavg_after":${Bench.loadAvg()}}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)
-    println(json)
+      f"""{"metric":"bitext_recall_top1","sf":"$sfDir","sample_n":$sampleN,"r_delta":$rDelta,"cap":$capUsed,"cap_arg":$cap,"n_q":$nQ,"recall_top1":${frac(1)}%.4f,"recall_top1_nocap":${frac(2)}%.4f,"coverage":${frac(3)}%.4f,"mean_cos_gap":$gap%.6f,"sec":$sec%.1f,"cpus":${Harness.cpus(spark)},"loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()}}"""
+    Harness.emit(outFile, json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: synthesize a larger scale factor for the dedup/similarity
@@ -29,15 +28,9 @@ object ScaleGen {
     // "docs" mode: synthesize documents+embeddings only — the doc-family
     // third-decade runs don't need 600M lineitem rows on disk
     val docsOnly = args.length > 3 && args(3) == "docs"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // source events.parquet is TIMESTAMP(NANOS); read raw as long and
-      // write BIGINT ns — Tables.events handles both encodings
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.parquet is read raw (NANOS as long) and written as BIGINT
+    // ns — Tables.events handles both encodings
+    val spark = Harness.session("32")
     val docs = Tables.documents(spark, src)
     val emb = Tables.embeddings(spark, src)
     // replica id offset derived from the source's own key range — a fixed

@@ -83,25 +83,15 @@ class ObserveSpec extends SparkSpec {
       "detectHotKeys must restore the previous job description")
   }
 
-  test("family re-run selection: degraded segments + widest spreads, train order, capped (r21 min vector)") {
-    val order = Seq("a", "b", "c", "d", "e", "f")
-    val spreads = Map("a" -> 0.1, "b" -> 5.0, "c" -> 0.2,
-      "d" -> 3.0, "e" -> 0.0, "f" -> 4.0)
-    // top-3 spreads are b/f/d; e's segment is degraded — all four
-    // selected, in TRAIN order, no duplicates
-    assert(FamilyBench.selectReruns(order, spreads, degraded = Set("e")) ==
-      Seq("b", "d", "e", "f"))
-    // a degraded query that is ALSO a top spread appears once
-    assert(FamilyBench.selectReruns(order, spreads, degraded = Set("b")) ==
-      Seq("b", "d", "f"))
-    // no degradation, uniform spreads: exactly topSpread picks, ties
-    // broken by name so the selection is deterministic
-    val flat = order.map(_ -> 1.0).toMap
-    assert(FamilyBench.selectReruns(order, flat, degraded = Set.empty) ==
-      Seq("a", "b", "c"))
-    // a fully-degraded train stops at the cap (re-run the window, not
-    // every query)
-    assert(FamilyBench.selectReruns(order, spreads, degraded = order.toSet,
-      cap = 4) == Seq("a", "b", "c", "d"))
+  test("runFully executes the projected columns that count() prunes") {
+    // a deterministic UDF that counts its calls: count() prunes the
+    // projected column, so a query timed by count() can skip its work
+    val calls = spark.sparkContext.longAccumulator("runFully-spec")
+    val touch = udf { (x: Long) => calls.add(1L); x }
+    val df = spark.range(0, 100).select(touch(col("id")).as("x"))
+    assert(df.count() == 100L)
+    assert(calls.value == 0L, "count() must not have evaluated the projected UDF")
+    assert(Harness.runFully(df) == 100L)
+    assert(calls.value == 100L, "runFully must evaluate the projection once per row")
   }
 }

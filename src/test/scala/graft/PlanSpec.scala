@@ -778,7 +778,7 @@ class PlanSpec extends SparkSpec {
     // is an AQE runtime decision — run first, then read the final plan);
     // hot winners ride a broadcast so no reduce task owns a hot gram
     val df = q("q190_substring_dedup_hot")
-    Bench.runFully(df)
+    Harness.runFully(df)
     // the adaptive plan string prints Final AND Initial sections — the
     // initial one never carries ReusedExchange, so pin the final only
     val full = df.queryExecution.executedPlan.toString()
@@ -836,7 +836,7 @@ class PlanSpec extends SparkSpec {
     // instead of a lump-count entry — q178 declares a centroid-panel cross
     val rows = Seq("q178_label_margin").flatMap { name =>
       val df = q(name)
-      Bench.runFully(df)
+      Harness.runFully(df)
       ExecutedSweep.bnljBuildRows(df.queryExecution.executedPlan)
         .map(name -> _)
     }

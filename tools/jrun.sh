@@ -1,8 +1,10 @@
 #!/usr/bin/env bash
-# Raw-java launcher for graft mains (Bench/Verify/StageProbe/RecallProbe):
-# runs compiled classes against the unmanaged Spark jars WITHOUT sbt, so
-# long measurement runs never contend for sbt's project lock and pay no
-# sbt JVM overhead. Mirrors build.sbt's fork settings (JDK17 --add-opens,
+# Raw-java launcher for the graft mains (graft.Verify, graft.Bench,
+# graft.SkewProbe, graft.BitextSkewProbe, graft.RecallProbe,
+# graft.ExecutedSweep, graft.Explain, graft.ScaleGen; README "Run" has
+# their arguments): runs compiled classes against the unmanaged Spark
+# jars WITHOUT sbt, so long measurement runs never contend for sbt's
+# project lock and pay no sbt JVM overhead. Mirrors build.sbt's fork settings (JDK17 --add-opens,
 # UTC, ui off, SPARK_DRIVER_MEM heap).
 #
 # Usage: tools/jrun.sh <mainClass> [args...]

@@ -121,6 +121,13 @@ object SkewProbe {
       .write.mode("overwrite").parquet(s"$work/documents.parquet")
   }
 
+  /** The AUTO hot-key guard needs more than one core
+    * ([[graft.ops.Curation.guardEngages]]): on one core the shipping plan
+    * IS the guard-off plan, and its arm would be mislabeled "guarded". */
+  private def requireGuardCores(spark: SparkSession, fam: Family, query: String): Unit =
+    require(!fam.off.contains(query) || Harness.cpus(spark) > 1,
+      s"$query's auto hot-key guard never engages on one core — run the probe with SPARK_GRAFT_CPUS > 1")
+
   /** Probe `query`'s guard-off arm (when `fam` has one) and its shipping
     * entry on the planted `work` corpus. The detection share is the
     * guard's labeled detection stages' part of all probed task time. */
@@ -143,6 +150,7 @@ object SkewProbe {
   private def cdc(src: String, work: String, outFile: String): Unit = {
     val spark = Harness.session("32")
     val cpus = Harness.cpus(spark)
+    requireGuardCores(spark, Cdc, "q154_cdc_chunks")
     plant(spark, Cdc, src, work)
     val width = cdcWidth(spark, work)
     require(width > cpus, s"auto guard would not engage (width $width <= session $cpus) — " +
@@ -157,6 +165,7 @@ object SkewProbe {
   private def gram(src: String, work: String, outFile: String, query: String): Unit = {
     require(SparkEntry.queries.contains(query), s"unknown query: $query")
     val spark = Harness.session("32")
+    requireGuardCores(spark, Gram, query)
     plant(spark, Gram, src, work)
     val (rec, loadBefore, arms) = probeArms(spark, Gram, work, query)
     val armsJson = arms.map(a => f""""${a.name}":{"probed_run_sec":${a.probedSec}%.2f,"guard_present":${a.name == "guarded"},"detection_wall_s":${a.detectionSec}%.2f,"detection_share":${a.detectionShare}%.4f,"stages":[${a.stages.mkString(",")}]}""")

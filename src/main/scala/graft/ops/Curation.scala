@@ -355,7 +355,8 @@ object Curation {
   // gram concentrates its whole occurrence mass in ONE probe task —
   // measured max/med 18.87 at sf100 with a planted ~3% gram
   // (STAGE_r19_q133_gramskew). Same convention as the CDC guard:
-  // hotMinOcc 0 = AUTO (engage past the corpus-width boundary), > 0 =
+  // hotMinOcc 0 = AUTO (engage past the corpus-width boundary on more
+  // than one core, [[guardEngages]]), > 0 =
   // forced at that threshold (the q190–q193 gates), < 0 = off (the
   // probe's BEFORE arm). ----
 
@@ -374,6 +375,16 @@ object Curation {
   private[graft] val GramHotMinOccAuto: Long =
     GramTargetPartBytes / GramRowBytes
 
+  /** Whether a hot-key guard engages: forced at `hotMinOcc > 0`, off
+    * below 0, and on AUTO (0) only when the keyed stream has outgrown the
+    * session width (`w > sessionParts`) on a session with more than one
+    * core. Salting spreads a hot key across cores; on one core it has
+    * nothing to spread and only adds the detection and salted passes
+    * (q154 at one core: 111.5 s guarded vs 52.4 s guard-off). */
+  private[graft] def guardEngages(hotMinOcc: Long, w: Int, sessionParts: Int,
+                                  cores: Int): Boolean =
+    hotMinOcc > 0L || (hotMinOcc == 0L && w > sessionParts && cores > 1)
+
   /** Hot-gram detection for the guarded gram family — empty when the
     * guard is off or nothing crosses the threshold. Keys are UPPERCASE
     * hex of the 16-byte gram hash (hex()'s output case), matched with
@@ -381,7 +392,8 @@ object Curation {
   private def hotGramsFor(spark: SparkSession, dir: String, L: Int, w: Int,
                           hotMinOcc: Long, sampleFraction: Double): Array[String] = {
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val guardOn = hotMinOcc > 0L || (hotMinOcc == 0L && w > sessionParts)
+    val guardOn = guardEngages(hotMinOcc, w, sessionParts,
+      spark.sparkContext.defaultParallelism)
     if (!guardOn) Array.empty
     else detectHotKeys(
       Tables.documents(spark, dir).filter(col("doc_id").isNotNull),
@@ -992,7 +1004,8 @@ object Curation {
     * AUTO — engage at [[CdcHotMinOccAuto]] exactly when the stream has
     * outgrown the session width (w > session partitions, i.e. the
     * corpus-proportional regime where a hot fp is a straggler rather
-    * than a ≤ 1-partition blip); > 0 = engage at that threshold with
+    * than a ≤ 1-partition blip) on more than one core
+    * ([[guardEngages]]); > 0 = engage at that threshold with
     * the given `sampleFraction` (1.0 = exact detection, the q189
     * gate); < 0 = guard OFF, the pure r18 window shape (the skew
     * probe's BEFORE arm). Detection, its mega-doc screen, and the
@@ -1012,7 +1025,8 @@ object Curation {
     val chunks = cdcChunkStream(docs, d)
     // ---- heavy-hitter detection (r19, VERDICT r18 item 1; r20 adds
     // the mega-doc screen + honest miss bound — see detectHotKeys) ----
-    val guardOn = hotMinOcc > 0L || (hotMinOcc == 0L && w > sessionParts)
+    val guardOn = guardEngages(hotMinOcc, w, sessionParts,
+      docs.sparkSession.sparkContext.defaultParallelism)
     val hotFps: Array[String] =
       if (!guardOn) Array.empty
       else detectHotKeys(docs,

@@ -35,7 +35,7 @@ object Dedup {
     * a hash relation from the array side and the (much larger)
     * candidate-pair set never shuffles — measured 2× verify speedup at
     * synthetic sf1. Beyond it, sort-merge still works. */
-  private val MaxBroadcastArrayDocs = 512L << 10
+  private[graft] val MaxBroadcastArrayDocs = 512L << 10
 
   /** Canonical text normalization shared by the dedup family. */
   def normText(c: Column): Column =
@@ -250,14 +250,16 @@ object Dedup {
     * set, restrict the shingle index to candidate docs (filter-first),
     * and collapse each doc to its sorted 60-bit hash array. Returns the
     * materialized pairs, the persisted array index (caller unpersists),
-    * and the candidate-doc count that sizes the broadcast guards. */
+    * and the candidate-doc count that sizes the broadcast guards
+    * ([[verifySizing]]). */
   private def candidateArrays(cand: DataFrame,
                               sh: DataFrame): (DataFrame, DataFrame, Long) = {
     graft.functions.VectorExprs.register(sh.sparkSession)
     // materialize the (small) candidate pair set once — it feeds the join
     // AND the filter-first doc restriction below, and for q22 it hangs off
-    // an expensive prefix self-join we must not replay per branch
-    val pairs = cand.localCheckpoint(true)
+    // an expensive prefix self-join we must not replay per branch. The
+    // checkpoint's own job observes the pair count.
+    val (pairs, stats) = Materialize.sliver(cand)(count(lit(1)).as("n"))
     // filter-first: only docs that appear in some candidate pair need
     // their sorted hash array. Candidate docs are a small fraction of the
     // corpus (near-dup rate, not corpus size), so the collect_list
@@ -265,11 +267,10 @@ object Dedup {
     // shingle index instead of all of it. The restriction broadcasts.
     val candDocs = pairs.select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .distinct()
-    // one cheap job over the materialized pair set sizes BOTH broadcast
-    // decisions exactly; a pathological corpus / low threshold where the
-    // candidate set approaches corpus size degrades to shuffled joins
-    // instead of blowing the broadcast limit
-    val nCandDocs = candDocs.count()
+    // a pathological corpus / low threshold where the candidate set
+    // approaches corpus size degrades to shuffled joins instead of
+    // blowing the broadcast limit
+    val nCandDocs = verifySizing(stats.getLong(0), candDocs.count())
     val restrict =
       if (nCandDocs <= MaxBroadcastCandDocs) broadcast(candDocs) else candDocs
     val arrays = sh.join(restrict, Seq("doc_id"), "left_semi")
@@ -280,6 +281,14 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     (pairs, arrays, nCandDocs)
   }
+
+  /** The candidate-doc count the verify broadcast guards compare: `2 ×
+    * nPairs` bounds the distinct candidate docs, so while it is within
+    * the tighter guard ([[MaxBroadcastArrayDocs]]) every guard already
+    * decides "broadcast" and the bound stands in for the count. Only a
+    * larger pair set runs the exact `exactDocs` job. */
+  private[graft] def verifySizing(nPairs: Long, exactDocs: => Long): Long =
+    if (2 * nPairs <= MaxBroadcastArrayDocs) 2 * nPairs else exactDocs
 
   private def verifyJaccard(cand: DataFrame, sh: DataFrame,
                             threshold: Double): DataFrame = {

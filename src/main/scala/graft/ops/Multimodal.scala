@@ -189,20 +189,6 @@ object Multimodal {
       expr(s"ascii_seg_sums(coalesce(text, ''), $DhashSegments)").as("ints"))
   }
 
-  /** The retired HOF spelling of [[intensitiesOf]]'s map — kept ONLY as
-    * the differential reference for MultimodalSpec's equivalence law
-    * (the shipped path never evaluates it). */
-  private[graft] def intensitiesHofExpr: String = {
-    val n = DhashSegments
-    s"""transform(sequence(0, $n - 1), s ->
-       |  CASE WHEN ((s + 1) * len) div $n >= 1 + (s * len) div $n
-       |    THEN aggregate(
-       |           sequence(1 + (s * len) div $n, ((s + 1) * len) div $n),
-       |           CAST(0 AS BIGINT),
-       |           (acc, i) -> acc + ascii(substring(text, i, 1)))
-       |    ELSE CAST(0 AS BIGINT) END)""".stripMargin
-  }
-
   /** Gradient-sign bit packing of an `ints` column into the 56-bit
     * BIGINT signature (top 8 bits clear) — the other shared half. */
   private[graft] val packSigExpr: String = {

@@ -18,9 +18,10 @@ class ClustersSpec extends SparkSpec {
 
   test("a length-64 path converges in O(log n) star rounds, not O(diameter)") {
     // the min-label round-2 algorithm needed ~64 rounds here; the
-    // large-star/small-star contraction must stay logarithmic
+    // large-star/small-star contraction must stay logarithmic (run
+    // star-only: a 64-edge path is far under the driver-finish budget)
     val path = (1L until 65L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val (labels, rounds) = Clusters.connectedComponentsWithRounds(path)
+    val (labels, rounds) = Clusters.componentsWithRounds(path, 64, finishEdges = -1L)
     assert(rounds <= 8, s"path-graph convergence took $rounds rounds (> 8)")
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (1L to 65L).map(_ -> 1L).toMap, "single component rooted at 1")
@@ -35,6 +36,60 @@ class ClustersSpec extends SparkSpec {
     val got = Clusters.connectedComponents(e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(3L -> 3L, 4L -> 3L, 5L -> 3L, 8L -> 8L, 9L -> 8L))
+  }
+
+  test("driver finish at entry and star-only label every graph identically") {
+    // independent reference: min-label propagation to a fixpoint over
+    // the non-null pairs; every non-null endpoint is a node, and any
+    // null endpoint adds one (null, null) row (the star path's labeling)
+    def reference(pairs: Seq[(Option[Long], Option[Long])]): Set[(Option[Long], Option[Long])] = {
+      val nodes = pairs.flatMap(p => Seq(p._1, p._2)).flatten.distinct
+      val edges = pairs.collect { case (Some(a), Some(b)) => (a, b) }
+      var lbl = nodes.map(n => n -> n).toMap
+      var moved = true
+      while (moved) {
+        val next = edges.foldLeft(lbl) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b)); m.updated(a, l).updated(b, l) }
+        moved = next != lbl
+        lbl = next
+      }
+      val nulls = if (pairs.exists(p => p._1.isEmpty || p._2.isEmpty)) Set((Option.empty[Long], Option.empty[Long]))
+                  else Set.empty[(Option[Long], Option[Long])]
+      lbl.map { case (n, c) => (Option(n), Option(c)) }.toSet ++ nulls
+    }
+    def labels(df: org.apache.spark.sql.DataFrame): Set[(Option[Long], Option[Long])] =
+      df.collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.get(1)).map(_.asInstanceOf[Long]))).toSet
+    // two disjoint random components (ids 100.. and 500..) with 4 edges
+    // per node, plus reversed and duplicated edges, self-loops, a
+    // self-loop-only node and a null endpoint
+    def graph(seed: Int): Seq[(Option[Long], Option[Long])] = {
+      val rnd = new scala.util.Random(seed)
+      val comps = Seq(100L, 500L).flatMap { base =>
+        val n = 20 + rnd.nextInt(20)
+        Seq.fill(4 * n)((base + rnd.nextInt(n), base + rnd.nextInt(n)))
+      }
+      val extra = comps.take(10).map(_.swap) ++ comps.take(5) ++
+        Seq((100L, 100L), (900L, 900L))
+      (comps ++ extra).map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((Option(901L), Option.empty[Long]))
+    }
+    for (seed <- 1 to 4) {
+      val pairs = graph(seed)
+      val df = pairs.toDF("a_id", "b_id")
+      val want = reference(pairs)
+      val (entry, r0) = Clusters.componentsWithRounds(df, 64, Clusters.FinishEdges)
+      assert(r0 == 0, s"seed $seed: a graph under the budget must run no star round")
+      assert(labels(entry) == want, s"seed $seed: finish at entry")
+      val (star, _) = Clusters.componentsWithRounds(df, 64, finishEdges = -1L)
+      assert(labels(star) == want, s"seed $seed: star-only")
+    }
+    // the empty edge list in both modes
+    val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    for (budget <- Seq(Clusters.FinishEdges, -1L)) {
+      val (df, r) = Clusters.componentsWithRounds(empty, 64, budget)
+      assert(df.isEmpty && r == 0, s"empty edge list at budget $budget")
+    }
   }
 
   test("every near-dup pair lands in one cluster; canonical is the min member") {

@@ -520,6 +520,23 @@ class CurationOpsSpec extends SparkSpec {
     assertSameRows(atBoundary, aboveBoundary)
   }
 
+  test("hot-key guard engagement: AUTO needs width past the session AND more than one core; forced and off ignore both") {
+    import graft.ops.Curation.guardEngages
+    // AUTO (0): the corpus-width boundary, but never on one core, where
+    // salting has nothing to spread (q154 ran 2x slower guarded there)
+    assert(guardEngages(0L, w = 8, sessionParts = 4, cores = 4))
+    assert(!guardEngages(0L, w = 4, sessionParts = 4, cores = 4))
+    assert(!guardEngages(0L, w = 2, sessionParts = 1, cores = 1))
+    assert(!guardEngages(0L, w = 64, sessionParts = 1, cores = 1))
+    assert(guardEngages(0L, w = 3, sessionParts = 2, cores = 2))
+    // forced (> 0, the q189-q193 twins) engages at any width and core
+    // count; off (< 0, the probes' guard-off arm) never does
+    for (w <- Seq(1, 4, 64); cores <- Seq(1, 4)) {
+      assert(guardEngages(5L, w, sessionParts = 4, cores))
+      assert(!guardEngages(-1L, w, sessionParts = 4, cores))
+    }
+  }
+
   test("hot-key detection: mega-doc screen catches a doc-concentrated key that sampling misses (ADVICE r19)") {
     import spark.implicits._
     import graft.ops.Curation

@@ -28,6 +28,21 @@ class MultimodalSpec extends SparkSpec {
   private def hamming(a: Long, b: Long): Int =
     java.lang.Long.bitCount(a ^ b)
 
+  /** The retired higher-order-function spelling of
+    * `Multimodal.intensitiesOf`'s map (57 interpreted `aggregate`
+    * lambdas over `ascii(substring(text, i, 1))`) — the differential
+    * reference for the ascii_seg_sums equivalence law below. */
+  private def intensitiesHofExpr: String = {
+    val n = graft.ops.Multimodal.DhashSegments
+    s"""transform(sequence(0, $n - 1), s ->
+       |  CASE WHEN ((s + 1) * len) div $n >= 1 + (s * len) div $n
+       |    THEN aggregate(
+       |           sequence(1 + (s * len) div $n, ((s + 1) * len) div $n),
+       |           CAST(0 AS BIGINT),
+       |           (acc, i) -> acc + ascii(substring(text, i, 1)))
+       |    ELSE CAST(0 AS BIGINT) END)""".stripMargin
+  }
+
   /** The planted corpus: base text, a near-dup (one word uppercased —
     * one segment's intensity drops by 32/char, flipping exactly the
     * adjacent gradient signs; reference Hamming = 2), an exact copy
@@ -106,7 +121,7 @@ class MultimodalSpec extends SparkSpec {
       .withColumn("len", length(col("text")))
       .withColumn("fast", expr(
         s"ascii_seg_sums(text, ${graft.ops.Multimodal.DhashSegments})"))
-      .withColumn("hof", expr(graft.ops.Multimodal.intensitiesHofExpr))
+      .withColumn("hof", expr(intensitiesHofExpr))
     val rows = df.select(col("doc_id"), col("fast"), col("hof")).collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2),
@@ -118,7 +133,7 @@ class MultimodalSpec extends SparkSpec {
     val nulls = Seq((0L, null: String)).toDF("doc_id", "text")
       .withColumn("len", length(col("text")))
       .select(expr("ascii_seg_sums(coalesce(text, ''), 57)").as("shipped"),
-        expr(graft.ops.Multimodal.intensitiesHofExpr).as("hof"),
+        expr(intensitiesHofExpr).as("hof"),
         expr("ascii_seg_sums(text, 57)").as("bare"))
       .collect().head
     assert(nulls.getSeq[Long](0) == nulls.getSeq[Long](1),

@@ -23,6 +23,22 @@ class ObserveSpec extends SparkSpec {
     assert(m("total").asInstanceOf[Double] > 0)
   }
 
+  /** The job ids run so far under job group `group`. Job ids reach the
+    * status tracker through the async listener bus: poll until the
+    * group's job list stops growing (10 s cap). */
+  private def settledJobs(group: String): Set[Int] = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(10)
+    var last = sc.statusTracker.getJobIdsForGroup(group).toSet
+    var stable = 0
+    while (stable < 6 && System.nanoTime() < deadline) {
+      Thread.sleep(50)
+      val now = sc.statusTracker.getJobIdsForGroup(group).toSet
+      if (now == last) stable += 1 else { last = now; stable = 0 }
+    }
+    last
+  }
+
   test("Materialize.sliver: metrics arrive with the eager checkpoint in one job; an empty frame never blocks") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -30,25 +46,12 @@ class ObserveSpec extends SparkSpec {
     import spark.implicits._
     val sc = spark.sparkContext
     val group = "materialize-sliver-spec"
-    // job ids reach the status tracker through the async listener bus:
-    // poll until the group's job list stops growing (10 s cap)
-    def settledJobs(): Set[Int] = {
-      val deadline = System.nanoTime() + 10.seconds.toNanos
-      var last = sc.statusTracker.getJobIdsForGroup(group).toSet
-      var stable = 0
-      while (stable < 6 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val now = sc.statusTracker.getJobIdsForGroup(group).toSet
-        if (now == last) stable += 1 else { last = now; stable = 0 }
-      }
-      last
-    }
     sc.setJobGroup(group, "sliver")
     try {
-      val before = settledJobs()
+      val before = settledJobs(group)
       val (out, m) = ops.Materialize.sliver(spark.range(1, 101).toDF("x"))(
         count(lit(1)).as("n"), sum(col("x")).as("s"))
-      val jobs = settledJobs() -- before
+      val jobs = settledJobs(group) -- before
       assert(jobs.size == 1, s"observe + eager checkpoint must be ONE job, saw ${jobs.size}")
       assert(m.getLong(0) == 100L && m.getLong(1) == 5050L)
       // the returned frame is the checkpoint: reading it recomputes nothing
@@ -60,6 +63,39 @@ class ObserveSpec extends SparkSpec {
       val e = Await.result(empty, 60.seconds)
       assert(e.getLong(0) == 0L && e.isNullAt(1))
     } finally sc.clearJobGroup()
+  }
+
+  test("connected components on a small graph: call to collected labels in at most 2 jobs") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val group = "cc-finish-jobs-spec"
+    val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L), (21L, 20L), (7L, 7L)).toDF("a_id", "b_id")
+    sc.setJobGroup(group, "cc")
+    try {
+      val before = settledJobs(group)
+      val got = ops.Clusters.connectedComponents(edges).collect()
+      val jobs = settledJobs(group) -- before
+      assert(got.length == 8)
+      // the input sliver and the collect of its pairs; the labels come
+      // back as a local frame, so collecting them runs no job. The
+      // star-only path runs 23 here (canonical sliver, rounds, except,
+      // labels).
+      assert(jobs.size <= 2, s"small-graph CC ran ${jobs.size} jobs (budget 2)")
+    } finally sc.clearJobGroup()
+  }
+
+  test("verify sizing runs the exact candidate-doc count only when 2 x pairs exceeds the broadcast guard") {
+    val guard = ops.Dedup.MaxBroadcastArrayDocs
+    var calls = 0
+    def exact(): Long = { calls += 1; 42L }
+    // within the guard 2 x pairs bounds the distinct docs: every
+    // broadcast guard already decides "broadcast", so no count job
+    assert(ops.Dedup.verifySizing(0L, exact()) == 0L)
+    assert(ops.Dedup.verifySizing(guard / 2, exact()) == guard)
+    assert(calls == 0, "the bound must stand in for the count within the guard")
+    // one pair past it, the decision needs the exact distinct count
+    assert(ops.Dedup.verifySizing(guard / 2 + 1, exact()) == 42L)
+    assert(calls == 1)
   }
 
   test("guard detection telemetry: detectHotKeys publishes its wall cost through GuardStats (VERDICT r20 item 5)") {

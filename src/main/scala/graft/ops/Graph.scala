@@ -1,8 +1,9 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond connected components (Clusters.scala):
@@ -227,58 +228,49 @@ object Graph {
     * part-category pairs bought together in ≥ `minSupport` orders —
     * the q124 pair space). Each undirected edge orients low→high in the
     * total (degree, node) order, so every wedge is enumerated at its
-    * LOWEST-degree vertex — out-degrees are bounded by √(2m), which is
-    * what kills the "last reducer" hot key on power-law graphs — and a
-    * triangle counts exactly once as wedge + closing edge (one
-    * self-join plus one semi-join-shaped equi-join, all map-side-
-    * combinable). Output carries edge/wedge/triangle counts so the
-    * driver hash checks the intermediate cardinalities too. */
+    * LOWEST-degree vertex (out-degrees are bounded by √(2m), which is
+    * what kills the "last reducer" hot key on power-law graphs), and a
+    * triangle counts exactly once as wedge + closing edge. Output
+    * carries edge/wedge/triangle counts so the driver hash checks the
+    * intermediate cardinalities too.
+    *
+    * Bounded domain: a node is `l_partkey % 100`, so the graph has at
+    * most 199 nodes and C(199, 2) = 19,701 edges at ANY scale. Only the
+    * lineitem self-join that finds the edges is corpus-sized; it runs
+    * distributed and its edge list is collected. Degrees, orientation,
+    * wedges and closing edges are then counted on the driver, and the
+    * counts come back as a one-row local frame. */
   def triangles(spark: SparkSession, dir: String,
                 minSupport: Long = 20): DataFrame = {
     require(minSupport >= 1)
-    // the edge and wedge counts are observed by their frames'
-    // materializing checkpoints, so the readout never re-scans a frame
-    // it has just written
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), (col("l_partkey") % 100).as("cat"))
       .distinct()
-    // feeds degrees, orientation, and the edge count
-    val (und, edgeStats) = Materialize.sliver(items.as("a").join(items.as("b"), Seq("l_orderkey"))
+    val und = items.as("a").join(items.as("b"), Seq("l_orderkey"))
       .filter(col("a.cat") < col("b.cat"))
       .groupBy(col("a.cat").as("u"), col("b.cat").as("v"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= minSupport)
-      .select(col("u"), col("v")))(count(lit(1)).as("n"))
-    val deg = und.select(col("u").as("node")).unionAll(und.select(col("v")))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
-    // orient low→high in the (degree, node) total order
-    val withDeg = und
-      .join(deg.select(col("node").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("node").as("v"), col("d").as("dv")), "v")
-    val oe = withDeg.select(
-      when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-        struct(col("u").as("src"), col("v").as("dst")))
-        .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true) // feeds the wedge self-join AND the closer
-    val degOf = deg // (node, d) — for ordering wedge endpoints
-    // the wedge set — the dominant O(Σ deg²) intermediate — feeds its own
-    // count AND the closing semi-join; materialized once, counted by the
-    // materializing job itself
-    val (wedges, wedgeStats) = Materialize.sliver(oe.as("x").join(oe.as("y"), Seq("src"))
-      .join(degOf.select(col("node").as("xd_node"), col("d").as("xd")),
-        col("x.dst") === col("xd_node"))
-      .join(degOf.select(col("node").as("yd_node"), col("d").as("yd")),
-        col("y.dst") === col("yd_node"))
-      .filter(col("xd") < col("yd") ||
-        (col("xd") === col("yd") && col("x.dst") < col("y.dst")))
-      .select(col("x.dst").as("wu"), col("y.dst").as("wv")))(count(lit(1)).as("n"))
-    val tri = wedges.join(oe,
-      col("wu") === col("src") && col("wv") === col("dst"), "left_semi")
-    tri.agg(count(lit(1)).as("n_triangles"))
-      .select(lit(edgeStats.getLong(0)).as("n_edges"),
-        lit(wedgeStats.getLong(0)).as("n_wedges"),
-        col("n_triangles"))
+      .select(col("u"), col("v"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val deg = und.flatMap { case (u, v) => Seq(u, v) }
+      .groupBy(identity).view.mapValues(_.length).toMap
+    // orient low→high in the (degree, node) total order; out(x) holds
+    // x's higher neighbors
+    val out = und.map { case (u, v) =>
+      if (deg(u) < deg(v) || (deg(u) == deg(v) && u < v)) (u, v) else (v, u)
+    }.groupMap(_._1)(_._2)
+    val edges = und.toSet
+    val nWedges = out.values.map(d => d.length.toLong * (d.length - 1) / 2).sum
+    // a wedge at x closes when its two higher neighbors share an edge
+    val nTriangles = out.values.map { d =>
+      (for (i <- d.indices; j <- i + 1 until d.length
+            if edges((d(i) min d(j), d(i) max d(j)))) yield 1L).sum
+    }.sum
+    val schema = StructType(Seq("n_edges", "n_wedges", "n_triangles")
+      .map(StructField(_, LongType, nullable = false)))
+    spark.createDataFrame(
+      java.util.List.of(Row(und.length.toLong, nWedges, nTriangles)), schema)
   }
 
   val oracle: Map[String, String] = {

@@ -118,25 +118,42 @@ class GraphSpec extends SparkSpec {
 
   test("q128 triangle count equals a brute-force enumeration of the same graph") {
     import org.apache.spark.sql.functions._
-    val minSup = 5L
     val items = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), (col("l_partkey") % 100).as("cat")).distinct()
-    val edges = items.as("a").join(items.as("b"), Seq("l_orderkey"))
+    val support = items.as("a").join(items.as("b"), Seq("l_orderkey"))
       .filter(col("a.cat") < col("b.cat"))
       .groupBy(col("a.cat").as("u"), col("b.cat").as("v"))
-      .agg(count(lit(1)).as("n")).filter(col("n") >= minSup)
-      .select("u", "v").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSeq.distinct.sorted
-    def has(a: Long, b: Long) = edges((math.min(a, b), math.max(a, b)))
-    val brute = (for {
-      i <- nodes.indices; j <- (i + 1) until nodes.length if has(nodes(i), nodes(j))
-      k <- (j + 1) until nodes.length
-      if has(nodes(i), nodes(k)) && has(nodes(j), nodes(k))
-    } yield 1).size.toLong
-    val row = Graph.triangles(spark, sf, minSupport = minSup).collect().head
-    assert(row.getLong(0) == edges.size, "edge count")
-    assert(row.getLong(2) == brute, s"triangles ${row.getLong(2)} vs brute $brute")
-    assert(row.getLong(2) <= row.getLong(1), "each triangle closes one wedge")
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+    val maxSup = support.values.max
+    // from a dense graph down to an empty one: above every pair count
+    // no edge survives, and the row must still come back as (0, 0, 0)
+    for (minSup <- Seq(1L, 3L, 5L, maxSup, maxSup + 1)) {
+      val edges = support.filter(_._2 >= minSup).keySet
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSeq.distinct.sorted
+      def has(a: Long, b: Long) = edges((math.min(a, b), math.max(a, b)))
+      val brute = (for {
+        i <- nodes.indices; j <- (i + 1) until nodes.length if has(nodes(i), nodes(j))
+        k <- (j + 1) until nodes.length
+        if has(nodes(i), nodes(k)) && has(nodes(j), nodes(k))
+      } yield 1).size.toLong
+      // wedges under the same orientation: a node x and two neighbors
+      // that both come after x in the (degree, node) order
+      val deg = nodes.map(n => n -> nodes.count(has(n, _))).toMap
+      def before(a: Long, b: Long) = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+      val bruteWedges = (for {
+        x <- nodes; ys = nodes.filter(y => has(x, y) && before(x, y))
+        i <- ys.indices; j <- (i + 1) until ys.length
+      } yield 1).size.toLong
+      val rows = Graph.triangles(spark, sf, minSupport = minSup).collect()
+      assert(rows.length == 1, s"one row at minSupport $minSup, even with no edge")
+      val row = rows.head
+      assert(row.getLong(0) == edges.size, s"edge count at minSupport $minSup")
+      assert(row.getLong(1) == bruteWedges,
+        s"wedges ${row.getLong(1)} vs brute $bruteWedges at minSupport $minSup")
+      assert(row.getLong(2) == brute,
+        s"triangles ${row.getLong(2)} vs brute $brute at minSupport $minSup")
+      assert(row.getLong(2) <= row.getLong(1), "each triangle closes one wedge")
+    }
   }
 }

@@ -23,22 +23,6 @@ class ObserveSpec extends SparkSpec {
     assert(m("total").asInstanceOf[Double] > 0)
   }
 
-  /** The job ids run so far under job group `group`. Job ids reach the
-    * status tracker through the async listener bus: poll until the
-    * group's job list stops growing (10 s cap). */
-  private def settledJobs(group: String): Set[Int] = {
-    val sc = spark.sparkContext
-    val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(10)
-    var last = sc.statusTracker.getJobIdsForGroup(group).toSet
-    var stable = 0
-    while (stable < 6 && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      val now = sc.statusTracker.getJobIdsForGroup(group).toSet
-      if (now == last) stable += 1 else { last = now; stable = 0 }
-    }
-    last
-  }
-
   test("Materialize.sliver: metrics arrive with the eager checkpoint in one job; an empty frame never blocks") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -82,6 +66,16 @@ class ObserveSpec extends SparkSpec {
       // labels).
       assert(jobs.size <= 2, s"small-graph CC ran ${jobs.size} jobs (budget 2)")
     } finally sc.clearJobGroup()
+  }
+
+  test("q128 triangles: call to collected row in at most 4 jobs") {
+    Tables.lineitem(spark, sf) // the table's schema is cached: no inference job below
+    val (got, jobs) = jobsOf("q128-jobs-spec")(ops.Graph.triangles(spark, sf).collect())
+    assert(got.length == 1)
+    // the edge list's collect (one job per adaptive query stage); the
+    // counts come back as a local frame, so collecting them runs no
+    // job. The distributed finish ran 21 per pass.
+    assert(jobs.size <= 4, s"q128 ran ${jobs.size} jobs (budget 4)")
   }
 
   test("verify sizing runs the exact candidate-doc count only when 2 x pairs exceeds the broadcast guard") {

@@ -10,6 +10,33 @@ trait SparkSpec extends AnyFunSuite {
   /** Fast-loop scale factor for data-driven specs. */
   val sf: String = "/root/testdata/sf0.001"
 
+  /** The job ids run so far under job group `group`. Job ids reach the
+    * status tracker through the async listener bus: poll until the
+    * group's job list stops growing (10 s cap). */
+  def settledJobs(group: String): Set[Int] = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(10)
+    var last = sc.statusTracker.getJobIdsForGroup(group).toSet
+    var stable = 0
+    while (stable < 6 && System.nanoTime() < deadline) {
+      Thread.sleep(50)
+      val now = sc.statusTracker.getJobIdsForGroup(group).toSet
+      if (now == last) stable += 1 else { last = now; stable = 0 }
+    }
+    last
+  }
+
+  /** (result, ids of the jobs `body` ran) under job group `group`. */
+  def jobsOf[T](group: String)(body: => T): (T, Set[Int]) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try {
+      val before = settledJobs(group)
+      val out = body
+      (out, settledJobs(group) -- before)
+    } finally sc.clearJobGroup()
+  }
+
   /** Order-insensitive DataFrame equality on collected rows. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     val ca = a.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap

@@ -43,6 +43,10 @@ object Bench {
       "Bench ab <sfDir> [outFile] [q1,q2,...]")
   }
 
+  /** What each artifact's per-query `compiles` means. */
+  private val CompilesSemantics = "classes Spark compiled during the min run (CodegenMetrics compilation count delta); " +
+    "0 when every generated class was already in the codegen cache"
+
   private def num(o: Option[Double]): String = o.fold("null")(v => f"$v%.3f")
   private def obj(kvs: Seq[(String, String)]): String =
     kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -60,11 +64,12 @@ object Bench {
       val all = r.secs ++ s.rerun.get(r.name)
       r.name -> (if (all.nonEmpty) all.min else -1.0).toString })
     val det = obj(ok.collect { case r if r.detectionSec > 0 => r.name -> f"${r.detectionSec}%.3f" })
+    val compiles = obj(ok.map(r => r.name -> r.compiles.toString))
     val calib =
       s"""{"query":"${Harness.CalibratorQuery}","first_s":${num(s.calibFirst)},"last_s":${num(s.calibLast)},"ratio":${num(s.ratio)},"bound":${Harness.CalibratorBound},"label_semantics":"one-sided: REJECTED only on in-run degradation (ratio > bound); ratio < 1 is expected whole-run warm-in; judge host health from first_s + loadavg_before vs a healthy-window record"}"""
     val m = BenchSweep
     val json =
-      s"""{"metric":"total","value":${ok.map(_.secs.min).sum},"unit":"sec","queries":$qs,"failed":${list(s.results.filterNot(_.ok).map(_.name))},"sf":"$sfDir","runs_per_query":2,"value_min":${ok.map(s.minOf).sum},"queries_min":$qsMin,"rerun_queries":${list(s.rerunNames)},"min_semantics":"queries_min/value_min = per-query min over the 2 sweep runs plus one targeted re-run of each degraded-segment query and the ${m.spreadReruns} widest absolute intra-query spreads (rerun_queries, train order, cap ${s.rerunCap} = max(${m.maxReruns}, degraded + ${m.spreadReruns}) so degraded picks never starve the spread quota); the round-over-round comparison denominator per BASELINE.md","segment_len":${m.segmentLen},"calib_segments":${s.segCalib.map(v => f"$v%.3f").mkString("[", ",", "]")},"segments_degraded":${list(names.filter(s.degraded))},"detection_s":$det,"detection_semantics":"per-query wall seconds of the hot-key guard's sampled detection pass (2% doc sample + mega-doc screen, GuardStats) in the min run; present only where detection ran","window_status":"${s.windowStatus}","calibrator":$calib,"loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()}}"""
+      s"""{"metric":"total","value":${ok.map(_.secs.min).sum},"unit":"sec","queries":$qs,"failed":${list(s.results.filterNot(_.ok).map(_.name))},"sf":"$sfDir","runs_per_query":2,"value_min":${ok.map(s.minOf).sum},"queries_min":$qsMin,"rerun_queries":${list(s.rerunNames)},"min_semantics":"queries_min/value_min = per-query min over the 2 sweep runs plus one targeted re-run of each degraded-segment query and the ${m.spreadReruns} widest absolute intra-query spreads (rerun_queries, train order, cap ${s.rerunCap} = max(${m.maxReruns}, degraded + ${m.spreadReruns}) so degraded picks never starve the spread quota); the round-over-round comparison denominator per BASELINE.md","segment_len":${m.segmentLen},"calib_segments":${s.segCalib.map(v => f"$v%.3f").mkString("[", ",", "]")},"segments_degraded":${list(names.filter(s.degraded))},"detection_s":$det,"detection_semantics":"per-query wall seconds of the hot-key guard's sampled detection pass (2% doc sample + mega-doc screen, GuardStats) in the min run; present only where detection ran","compiles":$compiles,"compiles_semantics":"$CompilesSemantics","window_status":"${s.windowStatus}","calibrator":$calib,"loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()}}"""
     Harness.emit("BENCH.json", json)
     spark.stop()
   }
@@ -128,7 +133,7 @@ object Bench {
     val metric = if (names eq GraphFamily) "graph_agg_family_total" else "dedup_similarity_family_total"
     val m = FamilySweep
     val json =
-      f"""{"metric":"$metric","value":${s.results.map(_.secs.min).sum}%.2f,"unit":"sec","sf":"$sfDir","input_mib":$inputMib%.1f,"cpus":${Harness.cpus(spark)},"shuffle_partitions":$shuffle,"aqe_initial_partitions":$shuffle,"runs_per_query":2,"aggregation":"min_of_2_warm","exec":"full_plan","value_min":${s.results.map(s.minOf).sum}%.2f,"queries_min":${per(s.minOf)},"rerun_queries":${list(s.rerunNames)},"min_semantics":"queries_min/value_min = per-query min over the 2 sweep runs plus one targeted re-run of each degraded-segment query and the ${m.spreadReruns} widest intra-query spreads (rerun_queries, cap ${m.maxReruns}); the scale-trend denominator","window_status":"${s.windowStatus}","calibrator":{"query":"${Harness.CalibratorQuery}","first_s":${num(s.calibFirst)},"last_s":${num(s.calibLast)},"ratio":${num(s.ratio)},"bound":${Harness.CalibratorBound},"label_semantics":"intra-train stability only; compare first_s to a healthy-window record for host health"},"calib_s":${obj(s.results.zip(s.segCalib).map { case (r, c) => r.name -> f"$c%.3f" })},"segments_degraded":${list(names.filter(s.degraded))},"segment_semantics":"calib_s[q] = one calibrator wall right after q's runs — the per-segment host constant; segments_degraded = queries whose segment calibrator exceeded bound x first_s (their timings are window-suspect and were re-run)","loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()},"queries":${per(_.secs.min)},"detection_s":${obj(s.results.collect { case r if r.detectionSec > 0 => r.name -> f"${r.detectionSec}%.3f" })},"detection_semantics":"per-query wall seconds of the hot-key guard's sampled detection pass (2%% doc sample + mega-doc screen) in the min run; present only where detection ran"}"""
+      f"""{"metric":"$metric","value":${s.results.map(_.secs.min).sum}%.2f,"unit":"sec","sf":"$sfDir","input_mib":$inputMib%.1f,"cpus":${Harness.cpus(spark)},"shuffle_partitions":$shuffle,"aqe_initial_partitions":$shuffle,"runs_per_query":2,"aggregation":"min_of_2_warm","exec":"full_plan","value_min":${s.results.map(s.minOf).sum}%.2f,"queries_min":${per(s.minOf)},"rerun_queries":${list(s.rerunNames)},"min_semantics":"queries_min/value_min = per-query min over the 2 sweep runs plus one targeted re-run of each degraded-segment query and the ${m.spreadReruns} widest intra-query spreads (rerun_queries, cap ${m.maxReruns}); the scale-trend denominator","window_status":"${s.windowStatus}","calibrator":{"query":"${Harness.CalibratorQuery}","first_s":${num(s.calibFirst)},"last_s":${num(s.calibLast)},"ratio":${num(s.ratio)},"bound":${Harness.CalibratorBound},"label_semantics":"intra-train stability only; compare first_s to a healthy-window record for host health"},"calib_s":${obj(s.results.zip(s.segCalib).map { case (r, c) => r.name -> f"$c%.3f" })},"segments_degraded":${list(names.filter(s.degraded))},"segment_semantics":"calib_s[q] = one calibrator wall right after q's runs — the per-segment host constant; segments_degraded = queries whose segment calibrator exceeded bound x first_s (their timings are window-suspect and were re-run)","loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()},"queries":${per(_.secs.min)},"detection_s":${obj(s.results.collect { case r if r.detectionSec > 0 => r.name -> f"${r.detectionSec}%.3f" })},"detection_semantics":"per-query wall seconds of the hot-key guard's sampled detection pass (2%% doc sample + mega-doc screen) in the min run; present only where detection ran","compiles":${obj(s.results.map(r => r.name -> r.compiles.toString))},"compiles_semantics":"$CompilesSemantics"}"""
     Harness.emit(outFile, json)
     spark.stop()
   }
@@ -146,12 +151,12 @@ object Bench {
     val queries = args.lift(2).fold(DefaultFlagged)(_.split(",").toSeq)
     val spark = Harness.session("32")
     val loadBefore = Harness.loadAvg()
-    def time(q: String): Double = Harness.time(spark, q)(SparkEntry.queries(q)(spark, sfDir)).get.sec
+    def time(q: String): Harness.Timing = Harness.time(spark, q)(SparkEntry.queries(q)(spark, sfDir)).get
     time(queries.head) // codegen/classload warmup, uncounted
     val runs = (1 to AbRounds).flatMap(_ => queries.map(q => q -> time(q)))
     val qs = obj(queries.map { q =>
-      val ts = runs.collect { case (`q`, t) => t }.sorted
-      q -> f"""{"min":${ts.head}%.3f,"median":${ts(ts.size / 2)}%.3f,"max":${ts.last}%.3f}""" })
+      val ts = runs.collect { case (`q`, t) => t }.sortBy(_.sec)
+      q -> f"""{"min":${ts.head.sec}%.3f,"median":${ts(ts.size / 2).sec}%.3f,"max":${ts.last.sec}%.3f,"compiles":${ts.head.compiles}}""" })
     val json =
       s"""{"metric":"same_session_ab_r09","sf":"$sfDir","cpus":${Harness.cpus(spark)},"runs_per_query":$AbRounds,"aggregation":"min_median_max_round_robin","loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()},"queries":$qs}"""
     Harness.emit(outFile, json)

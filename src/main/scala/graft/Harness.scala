@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 import java.nio.file.{Files, Paths}
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -53,11 +54,17 @@ object Harness {
     * ObserveSpec pins the difference. */
   def runFully(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
+  /** Classes Spark has compiled in this JVM so far (whole-stage and
+    * expression codegen, each a cache miss in `CodeGenerator`'s class
+    * cache, see [[Tuning.CodegenCacheEntries]]). */
+  private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One timed run: wall seconds (query construction included — eager
     * checkpoints run while the frame is built), rows, the hot-key
-    * guard's detection seconds, and the error when the run threw. A
-    * thrown run is a failure, never a fast timing. */
-  final case class Timing(sec: Double, rows: Long, detectionSec: Double,
+    * guard's detection seconds, the classes compiled during the run,
+    * and the error when the run threw. A thrown run is a failure, never
+    * a fast timing. */
+  final case class Timing(sec: Double, rows: Long, detectionSec: Double, compiles: Long,
                           error: Option[Throwable]) {
     def ok: Boolean = error.isEmpty
     /** This timing, or the run's error rethrown (fail-fast callers). */
@@ -68,12 +75,14 @@ object Harness {
     * then clearCache, so one run's cache entries never bill the next. */
   def time(spark: SparkSession, label: String)(df: => DataFrame): Timing = {
     GuardStats.reset()
+    val c0 = compileCount
     val t0 = System.nanoTime()
     val result = try Right(runFully(df)) catch { case e: Throwable =>
       System.err.println(s"[harness] $label FAILED: ${e.getMessage}"); Left(e) }
     val sec = (System.nanoTime() - t0) / 1e9
+    val compiles = compileCount - c0
     spark.catalog.clearCache()
-    Timing(sec, result.getOrElse(-1L), GuardStats.detectionSeconds, result.left.toOption)
+    Timing(sec, result.getOrElse(-1L), GuardStats.detectionSeconds, compiles, result.left.toOption)
   }
 
   /** Poll `count` until it has not moved for 500 ms (10 s cap). Spark's
@@ -139,9 +148,11 @@ object Harness {
       failFast: Boolean)
 
   /** One query's sweep record: the successful runs' seconds, whether
-    * every run succeeded, and the guard's detection seconds in the
-    * fastest run (0 when detection did not run). */
-  final case class Swept(name: String, secs: Seq[Double], ok: Boolean, detectionSec: Double)
+    * every run succeeded, and the guard's detection seconds (0 when
+    * detection did not run) and the classes compiled in the fastest
+    * run. */
+  final case class Swept(name: String, secs: Seq[Double], ok: Boolean, detectionSec: Double,
+                         compiles: Long)
 
   /** The calibrated sweep's outcome. `rerun` holds the successful targeted
     * re-runs; [[Swept.secs]] ++ `rerun` is the min vector. */
@@ -220,7 +231,8 @@ object Harness {
       }
       System.err.println(f"SWEEP_PROGRESS $name ${fastest.fold(-1.0)(_.sec)}%.3f " +
         f"(detection ${fastest.fold(0.0)(_.detectionSec)}%.3f s)")
-      Swept(name, runs.filter(_.ok).map(_.sec), runs.forall(_.ok), fastest.fold(0.0)(_.detectionSec))
+      Swept(name, runs.filter(_.ok).map(_.sec), runs.forall(_.ok), fastest.fold(0.0)(_.detectionSec),
+        fastest.fold(0L)(_.compiles))
     }
     val degraded = calibFirst.fold(Set.empty[String]) { f =>
       names.zipWithIndex.collect { case (n, i)

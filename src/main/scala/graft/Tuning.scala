@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * with the measurement behind each knob — the
   * `spark.sql.shuffle.partitions = cores` convention lives at each
   * builder; what belongs here is anything whose default silently
-  * changes an operator's EXECUTION MODE.
+  * changes an operator's EXECUTION MODE or makes a warm pass redo work.
   *
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
   * (default 128): every custom typed aggregator in this library
@@ -63,6 +63,29 @@ object Tuning {
       math.max(ShjConvertBytesMin, heap / 4 / slots))
   }
 
+  /** `spark.sql.codegen.cache.maxEntries` (static, default 100): the
+    * LRU cache of compiled generated classes (whole-stage stages,
+    * projections, orderings). The library's working set is far larger
+    * than 100: one pass of perfbench's `curation_scaled` ops generates
+    * 186–188 distinct classes, `etl_ingest`'s 33, and one pass of all
+    * 193 `SparkEntry.queries` 2,838 at sf0.01 and 2,839 at sf0.1. At
+    * the default the cache thrashes: each warm curation pass recompiled
+    * 181 classes (4,780 in a second corpus pass), and perfbench's
+    * `curation_scaled` warm pass took 8.16 s against 5.91 s once the
+    * cache held them (median of 10 pairs, 4-core host). 4096 is the
+    * smallest power of two above the larger corpus count; holding it
+    * costs ~25 MB of Metaspace (219 → 245 MB after two corpus passes
+    * at sf0.01). `etl_ingest` fits either way.
+    *
+    * Spark sizes this cache ONCE per JVM, when `CodeGenerator$` first
+    * initializes, from the `SQLConf` active at that moment: the setting
+    * takes effect only if the tuned session exists before any code is
+    * generated, and a JVM that generated code first keeps 100 entries
+    * whatever a later session sets. CodegenCacheSpec pins the effect,
+    * not the conf string. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheEntries: Int = 4096
+
   /** `SPARK_GRAFT_NO_TUNING=1` — the A/B switch. Disables the
     * session-level tuning below AND the operator-scoped sets inside
     * [[graft.ops.TextAnalysis.bitextMining]] (ADVICE r15 item 3: the
@@ -86,4 +109,5 @@ object Tuning {
       // deployment should size this from ITS executors instead:
       // min(256MB, executor_heap/4 / spark.executor.cores)
       .config(ShjConvertKey, shjConvertBytes.toString)
+      .config(CodegenCacheKey, CodegenCacheEntries.toString)
 }

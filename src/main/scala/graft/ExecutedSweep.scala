@@ -1,12 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev utility: executed-plan operator-smell sweep over EVERY
   * execution each query triggers — including the eager-checkpoint
@@ -19,10 +17,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * `localCheckpoint` declares only a post-checkpoint Scan — q87's
   * per-subspace struct-min, q97/q176's per-round join+agg, q54's
   * star-contraction rounds all execute during query CONSTRUCTION and
-  * never appear in `df.explain`. This tool registers a
-  * [[QueryExecutionListener]] (every `Dataset.withAction` — count,
-  * collect, checkpoint — reports its QueryExecution on success), runs
-  * each `SparkEntry.queries` entry fully, and greps the FINAL
+  * never appear in `df.explain`. This tool runs each
+  * `SparkEntry.queries` entry fully inside a [[Harness.Recorder]]
+  * window (every `Dataset.withAction` — count, collect, checkpoint —
+  * reports its QueryExecution on success), and greps the FINAL
   * executed plan of every captured execution for the three smells the
   * plan sweeps police: SortAggregate, CartesianProduct,
   * BroadcastNestedLoopJoin. Output is one JSON line with per-query
@@ -41,12 +39,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (`bnlj_build_rows_over_bound`, `bnlj_build_rows_unknown`) land in
   * the artifact; violations also print loudly.
   *
-  * Scope notes, honestly stated:
-  *  - the listener bus is ASYNC — after each query the tool quiesces
-  *    ([[Harness.quiesce]] on the captured count) before
-  *    attributing captured executions to the query; a `leftover`
-  *    count records any stragglers attributed to the NEXT query, and
-  *    the total leftover count lands in TOTALS (ADVICE r18).
+  * Scope notes:
+  *  - a query's executions are exactly those its window delivered: the
+  *    window's closing fence is a sentinel job on the same FIFO
+  *    listener queue, so no execution reaches the next query's window.
   *  - streaming micro-batches do not report through
   *    QueryExecutionListener; the streaming queries' batch-side
   *    executions (source prep, result readout) still do. */
@@ -118,37 +114,17 @@ object ExecutedSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = if (args.length > 1) args(1) else "EXECSWEEP.json"
     val spark = Harness.session("32")
-    val captured = new ConcurrentLinkedQueue[(String, QueryExecution)]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        // executedPlan here is the FINAL plan (AQE has run by success
-        // time), so ReusedExchange / SMJ→SHJ conversions are visible
-        captured.add(funcName -> qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    })
-
-    def drain(): Seq[(String, QueryExecution)] = {
-      val b = Seq.newBuilder[(String, QueryExecution)]
-      var e = captured.poll()
-      while (e != null) { b += e; e = captured.poll() }
-      b.result()
-    }
+    val rec = new Harness.Recorder(spark)
 
     val smells = Seq("SortAggregate", "CartesianProduct", "BroadcastNestedLoopJoin")
     def count(hay: String, needle: String): Int =
       hay.sliding(needle.length).count(_ == needle)
 
-    // warmup (codegen/classload) — drained, not attributed
+    // warmup (codegen/classload), outside every query's window
     Harness.runFully(SparkEntry.queries("q21_dedup_exact")(spark, sfDir))
-    Harness.quiesce(captured.size.toLong); drain()
 
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val leftoverBefore = captured.size
-      Harness.runFully(fn(spark, sfDir))
-      Harness.quiesce(captured.size.toLong)
-      val execs = drain()
+      val execs = rec.window(Harness.runFully(fn(spark, sfDir)))._2.executions
       val plans = execs.map(_._2.executedPlan)
       val texts = plans.map(_.toString)
       val counts = smells.map(s => s -> texts.map(count(_, s)).sum).toMap
@@ -161,28 +137,25 @@ object ExecutedSweep {
       println(f"$name%-34s execs=${execs.size}%3d " +
         smells.map(s => s"${s.take(4).toLowerCase}=${counts(s)}").mkString(" ") +
         (if (builds.nonEmpty) s" bnlj_max_rows=${builds.max}" else ""))
-      (name, execs.size, leftoverBefore, counts,
-        if (builds.nonEmpty) builds.max else 0L, over, unknown)
+      (name, execs.size, counts, if (builds.nonEmpty) builds.max else 0L, over, unknown)
     }
 
-    val totals = smells.map(s => s -> rows.map(_._4(s)).sum).toMap
-    val leftoverTotal = rows.map(_._3).sum
-    val overTotal = rows.map(_._6).sum
-    val unknownTotal = rows.map(_._7).sum
-    val maxBuild = rows.map(_._5).max
-    val json = rows.map { case (n, e, lo, c, mx, ov, un) =>
-      s""""${esc(n)}":{"executions":$e,"leftover_at_start":$lo,""" +
+    val totals = smells.map(s => s -> rows.map(_._3(s)).sum).toMap
+    val overTotal = rows.map(_._5).sum
+    val unknownTotal = rows.map(_._6).sum
+    val maxBuild = rows.map(_._4).max
+    val json = rows.map { case (n, e, c, mx, ov, un) =>
+      s""""${esc(n)}":{"executions":$e,""" +
         smells.map(s => s""""$s":${c(s)}""").mkString(",") +
         s""","bnlj_max_build_rows":$mx,"bnlj_over_bound":$ov,"bnlj_unknown":$un}"""
     }.mkString(
       s"""{"metric":"executed_sweep","sf":"${esc(sfDir)}","queries":${rows.size},""" +
         smells.map(s => s""""total_$s":${totals(s)}""").mkString(",") +
         s""","bnlj_build_rows_bound":$MaxBnljBuildRows,"max_bnlj_build_rows":$maxBuild,""" +
-        s""""bnlj_build_rows_over_bound":$overTotal,"bnlj_build_rows_unknown":$unknownTotal,""" +
-        s""""leftover_total":$leftoverTotal,"per_query":{""",
+        s""""bnlj_build_rows_over_bound":$overTotal,"bnlj_build_rows_unknown":$unknownTotal,"per_query":{""",
       ",", "}}")
     println(s"TOTALS: " + smells.map(s => s"$s=${totals(s)}").mkString(" ") +
-      s" leftover=$leftoverTotal bnlj_max_build_rows=$maxBuild" +
+      s" bnlj_max_build_rows=$maxBuild" +
       s" bnlj_over_bound=$overTotal bnlj_unknown=$unknownTotal")
     Harness.emit(outFile, json)
     spark.stop()

@@ -2,14 +2,15 @@ package graft
 
 import scala.collection.mutable
 import java.nio.file.{Files, Paths}
-import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The measurement core every measurement main runs through: the one
-  * session builder, the one timing function, the one probe loop, the
-  * calibrated sweep and the artifact writer.
+  * session builder, the one timing function, the one run recorder, the
+  * one probe loop, the calibrated sweep and the artifact writer.
   *
   * Modes built on it (Bench's bench/family/ab, SkewProbe's
   * stage/cdc/gram) differ only in named constants
@@ -85,38 +86,167 @@ object Harness {
     Timing(sec, result.getOrElse(-1L), GuardStats.detectionSeconds, compiles, result.left.toOption)
   }
 
-  /** Poll `count` until it has not moved for 500 ms (10 s cap). Spark's
-    * listener bus is async: a boundary taken when the action returns
-    * drops the final task wave — the slowest tasks a max/med verdict
-    * needs. False when the cap was hit with events still arriving. */
-  def quiesce(count: => Long): Boolean = {
-    val start = System.nanoTime()
-    var last = count
-    var since = start
-    while (System.nanoTime() - since < 500L * 1000 * 1000 &&
-           System.nanoTime() - start < 10L * 1000 * 1000 * 1000) {
-      Thread.sleep(50)
-      val now = count
-      if (now != last) { last = now; since = System.nanoTime() }
-    }
-    System.nanoTime() - since >= 500L * 1000 * 1000
-  }
-
   /** Runs per probe: the first pays codegen, class loading and page-cache
     * fill; the last is the probed run. */
   val ProbeRuns = 2
 
-  /** The one probe loop: `runs` fail-fast timings of `df`, with the
-    * recorder quiesced and cleared before the last run and quiesced
-    * after it, so its stage rows hold exactly the probed run's tasks. */
-  def probe(spark: SparkSession, rec: StageRecorder, label: String,
-            runs: Int = ProbeRuns)(df: => DataFrame): Seq[Timing] =
-    (1 to runs).map { i =>
-      if (i == runs) { rec.quiesce(); rec.clear() }
-      val t = time(spark, label)(df).get
-      if (i == runs) rec.quiesce()
-      t
+  /** The one probe loop: `runs` fail-fast timings of `df`, the last
+    * inside a [[Recorder.window]], so the returned window holds exactly
+    * the probed run's events. */
+  def probe(spark: SparkSession, rec: Recorder, label: String,
+            runs: Int = ProbeRuns)(df: => DataFrame): (Seq[Timing], Window) = {
+    val warm = (1 until runs).map(_ => time(spark, label)(df).get)
+    val (last, w) = rec.window(time(spark, label)(df).get)
+    (warm :+ last, w)
+  }
+
+  /** A job as its start event named it; `group` and `description` are
+    * null when the job ran without them. */
+  final case class Job(id: Int, group: String, description: String, stageIds: Seq[Int])
+
+  /** One task end's runtime and spill/shuffle/input volumes. */
+  final case class Task(stageId: Int, runMs: Long, spillMem: Long, spillDisk: Long,
+                        shuffleRead: Long, shuffleWrite: Long, input: Long)
+
+  /** What the listener bus delivered between two fences of a
+    * [[Recorder]]: the jobs started, every task end, and every
+    * successful `Dataset` action's (name, QueryExecution), in delivery
+    * order. */
+  final case class Window(jobs: Seq[Job], tasks: Seq[Task], executions: Seq[(String, QueryExecution)]) {
+    /** Each stage's tasks, stages in order of their first task end. */
+    lazy val stages: Seq[(Int, Seq[Task])] = {
+      val byStage = tasks.groupBy(_.stageId)
+      tasks.map(_.stageId).distinct.map(id => id -> byStage(id))
     }
+
+    private def runMs(ts: Seq[Task]): Long = ts.map(_.runMs).sum
+
+    /** Fraction of all task time spent in stages whose job description
+      * starts with `prefix` (the hot-key guard labels its detection
+      * jobs, see [[GuardStats.DetectionJobPrefix]]). 0.0 when no task
+      * ran. */
+    def taskTimeShare(prefix: String): Double = {
+      val desc = jobs.filter(_.description != null).flatMap(j => j.stageIds.map(_ -> j.description)).toMap
+      val total = runMs(tasks)
+      val hit = runMs(tasks.filter(t => desc.get(t.stageId).exists(_.startsWith(prefix))))
+      if (total > 0) hit.toDouble / total else 0.0
+    }
+
+    private def heaviestFirst: Seq[(Int, Seq[Task])] = stages.sortBy { case (_, ts) => -runMs(ts) }
+
+    private def sortedMs(ts: Seq[Task]): Seq[Long] = ts.map(_.runMs).sorted
+
+    /** Median task seconds of the heaviest stage (by total task time):
+      * the host-speed constant a probe artifact carries so absolutes can
+      * be normalized across windows (same query and scale only). 0.0 if
+      * no task ran. */
+    def medianHeavyStageTaskSec: Double =
+      heaviestFirst.headOption.fold(0.0) { case (_, ts) => val s = sortedMs(ts); s(s.size / 2) / 1e3 }
+
+    /** Top `n` stages by total task time, as JSON rows. */
+    def jsonRows(n: Int = 12): Seq[String] = {
+      def mb(f: Task => Long, ts: Seq[Task]): String = f"${ts.map(f).sum / (1024.0 * 1024.0)}%.1f"
+      heaviestFirst.take(n).map { case (id, ts) =>
+        val sorted = sortedMs(ts)
+        val med = sorted(sorted.size / 2)
+        val mx = sorted.last
+        val ratio = if (med > 0) mx.toDouble / med else 0.0
+        f"""{"stage":$id,"tasks":${ts.size},"task_time_sum_s":${sorted.sum / 1e3}%.1f,"task_time_max_s":${mx / 1e3}%.2f,"task_time_med_s":${med / 1e3}%.2f,"max_over_med":$ratio%.2f,"spill_mem_mb":${mb(_.spillMem, ts)},"spill_disk_mb":${mb(_.spillDisk, ts)},"shuffle_read_mb":${mb(_.shuffleRead, ts)},"shuffle_write_mb":${mb(_.shuffleWrite, ts)},"input_mb":${mb(_.input, ts)}}"""
+      }
+    }
+  }
+
+  /** The library's one run recorder: a [[SparkListener]] for job starts
+    * and task ends and a [[QueryExecutionListener]] for executed plans,
+    * recording only inside a [[window]].
+    *
+    * Spark delivers both through its shared listener queue, which is
+    * asynchronous and FIFO. A fence submits a one-task sentinel job and
+    * waits until the listener sees that job end: by then every event
+    * posted before the fence has been delivered, task ends and plans of
+    * eager checkpoints included. Sentinel jobs, their stages and their
+    * tasks are never recorded. Windows on one recorder do not nest. */
+  final class Recorder(spark: SparkSession) {
+    private val sc = spark.sparkContext
+    private val lock = new Object
+    private var recording = false
+    private var jobs = Vector.empty[Job]
+    private var tasks = Vector.empty[Task]
+    private var executions = Vector.empty[(String, QueryExecution)]
+    private val sentinelStages = mutable.HashSet.empty[Int]
+    // the fence in flight: its sentinel's description and job id, whether
+    // recording follows it, and the window its sentinel's end cut
+    private var awaited: String = null
+    private var awaitedJob = -1
+    private var recordAfter = false
+    private var cut: Window = null
+
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
+        def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        val group = prop("spark.jobGroup.id")
+        if (group == Recorder.SentinelGroup) {
+          sentinelStages ++= e.stageIds
+          if (prop("spark.job.description") == awaited) awaitedJob = e.jobId
+        } else if (recording) jobs :+= Job(e.jobId, group, prop("spark.job.description"), e.stageIds)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = lock.synchronized {
+        if (e.jobId == awaitedJob) {
+          cut = Window(jobs, tasks, executions)
+          jobs = Vector.empty; tasks = Vector.empty; executions = Vector.empty
+          recording = recordAfter
+          awaited = null; awaitedJob = -1
+          lock.notifyAll()
+        }
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = lock.synchronized {
+        val m = e.taskMetrics
+        if (recording && m != null && !sentinelStages(e.stageId))
+          tasks :+= Task(e.stageId, m.executorRunTime, m.memoryBytesSpilled, m.diskBytesSpilled,
+            m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten, m.inputMetrics.bytesRead)
+      }
+    })
+
+    spark.listenerManager.register(new QueryExecutionListener {
+      // executedPlan is final here: AQE has run by success time
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        lock.synchronized { if (recording) executions :+= funcName -> qe }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+
+    /** Runs a sentinel job, waits for the listener to see it end, and
+      * returns what was recorded before it; recording continues after it
+      * when `record`. Throws when the sentinel's end is not delivered
+      * within 30 s. Clears the calling thread's job group. */
+    private def fence(record: Boolean): Window = {
+      val token = s"fence ${Recorder.fences.incrementAndGet()}"
+      lock.synchronized { awaited = token; recordAfter = record; cut = null }
+      sc.setJobGroup(Recorder.SentinelGroup, token)
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      lock.synchronized {
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (cut == null && System.nanoTime() < deadline) lock.wait(50)
+        if (cut == null) throw new IllegalStateException(s"listener bus did not deliver $token within 30 s")
+        val w = cut
+        cut = null
+        w
+      }
+    }
+
+    /** Fences, runs `body`, fences again: `body`'s result and exactly
+      * the events it posted. */
+    def window[T](body: => T): (T, Window) = {
+      fence(record = true)
+      val out = try body catch { case e: Throwable => fence(record = false); throw e }
+      (out, fence(record = false))
+    }
+  }
+
+  object Recorder {
+    /** Job group of the fences' sentinel jobs. */
+    val SentinelGroup = "graft.fence"
+    private val fences = new java.util.concurrent.atomic.AtomicLong(0L)
+  }
 
   /** Fixed window calibrator: cheap, corpus-structural, and it reads
     * only the documents table, present at every bench and family scale
@@ -265,100 +395,6 @@ object Harness {
   }
 }
 
-/** Per-stage task metrics for the probes: every task-end's runtime and
-  * spill/shuffle/input volumes, rendered as the top stages' JSON rows,
-  * plus the job description each stage ran under (the hot-key guard
-  * labels its detection jobs, see [[GuardStats.DetectionJobPrefix]]). */
-private[graft] final class StageRecorder(sc: SparkContext) {
-  final class Acc {
-    var tasks = 0
-    val runMs = mutable.ArrayBuffer.empty[Long]
-    var spillMem = 0L
-    var spillDisk = 0L
-    var shufRead = 0L
-    var shufWrite = 0L
-    var input = 0L
-  }
-
-  private val stages = mutable.LinkedHashMap.empty[Int, Acc]
-  private val stageDesc = mutable.HashMap.empty[Int, String]
-  @volatile var quiesceTimeout = false
-
-  sc.addSparkListener(new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val d =
-        if (e.properties == null) null
-        else e.properties.getProperty("spark.job.description")
-      if (d != null) stages.synchronized {
-        e.stageInfos.foreach(si => stageDesc(si.stageId) = d)
-      }
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      if (e.taskMetrics != null) stages.synchronized {
-        val a = stages.getOrElseUpdate(e.stageId, new Acc)
-        a.tasks += 1
-        a.runMs += e.taskMetrics.executorRunTime
-        a.spillMem += e.taskMetrics.memoryBytesSpilled
-        a.spillDisk += e.taskMetrics.diskBytesSpilled
-        a.shufRead += e.taskMetrics.shuffleReadMetrics.totalBytesRead
-        a.shufWrite += e.taskMetrics.shuffleWriteMetrics.bytesWritten
-        a.input += e.taskMetrics.inputMetrics.bytesRead
-      }
-  })
-
-  /** [[Harness.quiesce]] on the task-end count; a cap hit means the run
-    * boundary leaked — flagged in the artifact, warned on stderr. */
-  def quiesce(): Unit =
-    if (!Harness.quiesce(stages.synchronized(stages.valuesIterator.map(_.tasks.toLong).sum))) {
-      quiesceTimeout = true
-      System.err.println(
-        "WARN: StageRecorder quiesce hit the 10s cap with task-ends still " +
-          "arriving — probe boundaries are contaminated; treat this " +
-          "probe's stage stats as unreliable (quiesce_timeout=true)")
-    }
-
-  def clear(): Unit = stages.synchronized { stages.clear(); stageDesc.clear() }
-
-  /** Fraction of ALL recorded task time spent in stages whose job
-    * description starts with `prefix`. 0.0 when nothing was recorded. */
-  def taskTimeShare(prefix: String): Double = {
-    val (tot, hit) = stages.synchronized {
-      val t = stages.valuesIterator.map(_.runMs.sum).sum
-      val h = stages.iterator.collect {
-        case (id, a) if stageDesc.get(id).exists(_.startsWith(prefix)) =>
-          a.runMs.sum
-      }.sum
-      (t, h)
-    }
-    if (tot > 0) hit.toDouble / tot else 0.0
-  }
-
-  private def heaviestFirst: Seq[(Int, Acc)] =
-    stages.synchronized(stages.toSeq).sortBy { case (_, a) => -a.runMs.sum }
-
-  /** Median task seconds of the HEAVIEST stage (by total task time): the
-    * host-speed constant a probe artifact carries so absolutes can be
-    * normalized across windows (same query and scale only). 0.0 if
-    * nothing was recorded. */
-  def medianHeavyStageTaskSec: Double =
-    heaviestFirst.headOption.map { case (_, a) =>
-      val sorted = a.runMs.sorted
-      if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2) / 1e3
-    }.getOrElse(0.0)
-
-  /** Top `n` stages by total task time, as JSON rows. */
-  def jsonRows(n: Int = 12): Seq[String] = {
-    def mb(b: Long): String = f"${b / (1024.0 * 1024.0)}%.1f"
-    heaviestFirst.take(n).map { case (id, a) =>
-      val sorted = a.runMs.sorted
-      val med = if (sorted.isEmpty) 0L else sorted(sorted.size / 2)
-      val mx = if (sorted.isEmpty) 0L else sorted.last
-      val ratio = if (med > 0) mx.toDouble / med else 0.0
-      f"""{"stage":$id,"tasks":${a.tasks},"task_time_sum_s":${sorted.sum / 1e3}%.1f,"task_time_max_s":${mx / 1e3}%.2f,"task_time_med_s":${med / 1e3}%.2f,"max_over_med":$ratio%.2f,"spill_mem_mb":${mb(a.spillMem)},"spill_disk_mb":${mb(a.spillDisk)},"shuffle_read_mb":${mb(a.shufRead)},"shuffle_write_mb":${mb(a.shufWrite)},"input_mb":${mb(a.input)}}"""
-    }
-  }
-}
-
 /** Telemetry-only accumulator for the hot-key guard's DETECTION cost:
   * the sampled 2%-of-docs + mega-doc-screen pass in
   * `ops.Curation.detectHotKeys` runs inside every guarded query, and a
@@ -371,7 +407,8 @@ private[graft] object GuardStats {
   private val nanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Job-description prefix detectHotKeys sets while its detection
-    * action runs — StageRecorder attributes stage task time on it. */
+    * action runs; [[Harness.Window.taskTimeShare]] attributes stage task
+    * time on it. */
   val DetectionJobPrefix = "hot-key detection"
 
   def addDetectionNanos(n: Long): Unit = { nanos.addAndGet(n); () }

@@ -93,22 +93,23 @@ object SkewProbe {
       "SkewProbe cdc <srcSfDir> <workDir> [outFile] | SkewProbe gram <srcSfDir> <workDir> [outFile] [query]")
   }
 
-  private def tail(rec: StageRecorder, loadBefore: String): String =
-    f""""quiesce_timeout":${rec.quiesceTimeout},"calib_med_map_task_s":${rec.medianHeavyStageTaskSec}%.2f,"loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()}"""
+  private def tail(w: Harness.Window, loadBefore: String): String =
+    f""""calib_med_map_task_s":${w.medianHeavyStageTaskSec}%.2f,"loadavg_before":$loadBefore,"loadavg_after":${Harness.loadAvg()}"""
 
   private def stage(sfDir: String, query: String, outFile: String, runs: Int): Unit = {
     require(SparkEntry.queries.contains(query), s"unknown query: $query")
     val spark = Harness.session("32")
-    val rec = new StageRecorder(spark.sparkContext)
     val loadBefore = Harness.loadAvg()
-    val timed = Harness.probe(spark, rec, query, runs)(SparkEntry.queries(query)(spark, sfDir))
+    val (timed, w) = Harness.probe(spark, new Harness.Recorder(spark), query, runs)(SparkEntry.queries(query)(spark, sfDir))
     Harness.emit(outFile,
-      f"""{"metric":"stage_probe","query":"$query","sf":"$sfDir","cpus":${Harness.cpus(spark)},"runs":$runs,"probed_run_sec":${timed.last.sec}%.2f,"all_run_secs":[${timed.map(r => f"${r.sec}%.2f").mkString(",")}],${tail(rec, loadBefore)},"stages":[${rec.jsonRows().mkString(",")}]}""")
+      f"""{"metric":"stage_probe","query":"$query","sf":"$sfDir","cpus":${Harness.cpus(spark)},"runs":$runs,"probed_run_sec":${timed.last.sec}%.2f,"all_run_secs":[${timed.map(r => f"${r.sec}%.2f").mkString(",")}],${tail(w, loadBefore)},"stages":[${w.jsonRows().mkString(",")}]}""")
     spark.stop()
   }
 
-  private final case class Arm(name: String, probedSec: Double, detectionSec: Double,
-                               detectionShare: Double, stages: Seq[String])
+  /** One arm's probed run and its window. */
+  private final case class Arm(name: String, probed: Harness.Timing, w: Harness.Window) {
+    def detectionShare: Double = w.taskTimeShare(GuardStats.DetectionJobPrefix)
+  }
 
   /** Copy `src`'s documents to `work` with `fam`'s text planted. */
   private def plant(spark: SparkSession, fam: Family, src: String, work: String): Unit = {
@@ -130,21 +131,22 @@ object SkewProbe {
 
   /** Probe `query`'s guard-off arm (when `fam` has one) and its shipping
     * entry on the planted `work` corpus. The detection share is the
-    * guard's labeled detection stages' part of all probed task time. */
+    * guard's labeled detection stages' part of all probed task time.
+    * The artifact's host constant is read from the last arm. */
   private def probeArms(spark: SparkSession, fam: Family, work: String,
-                        query: String): (StageRecorder, String, Seq[Arm]) = {
-    val rec = new StageRecorder(spark.sparkContext)
+                        query: String): (String, Seq[Arm]) = {
+    val rec = new Harness.Recorder(spark)
     val loadBefore = Harness.loadAvg()
     def arm(name: String, df: => DataFrame): Arm = {
-      val probed = Harness.probe(spark, rec, name)(df).last
-      val share = rec.taskTimeShare(GuardStats.DetectionJobPrefix)
-      System.err.println(f"SKEW_PROBE arm=$name probed=${probed.sec}%.1f detection=${probed.detectionSec}%.1fs (share $share%.3f)")
-      Arm(name, probed.sec, probed.detectionSec, share, rec.jsonRows())
+      val (timed, w) = Harness.probe(spark, rec, name)(df)
+      val a = Arm(name, timed.last, w)
+      System.err.println(f"SKEW_PROBE arm=$name probed=${a.probed.sec}%.1f detection=${a.probed.detectionSec}%.1fs (share ${a.detectionShare}%.3f)")
+      a
     }
     val off = fam.off.get(query)
     val arms = off.map(b => arm(fam.offArm, b(spark, work))).toSeq :+
       arm(if (off.isDefined) "guarded" else "shipping", SparkEntry.queries(query)(spark, work))
-    (rec, loadBefore, arms)
+    (loadBefore, arms)
   }
 
   private def cdc(src: String, work: String, outFile: String): Unit = {
@@ -155,10 +157,10 @@ object SkewProbe {
     val width = cdcWidth(spark, work)
     require(width > cpus, s"auto guard would not engage (width $width <= session $cpus) — " +
       "run the probe at a corpus scale where the straggler regime exists (sf100)")
-    val (rec, loadBefore, arms) = probeArms(spark, Cdc, work, "q154_cdc_chunks")
-    val armsJson = arms.map(a => f""""${a.name}":{"probed_run_sec":${a.probedSec}%.2f,"stages":[${a.stages.mkString(",")}]}""")
+    val (loadBefore, arms) = probeArms(spark, Cdc, work, "q154_cdc_chunks")
+    val armsJson = arms.map(a => f""""${a.name}":{"probed_run_sec":${a.probed.sec}%.2f,"stages":[${a.w.jsonRows().mkString(",")}]}""")
     Harness.emit(outFile,
-      f"""{"metric":"cdc_skew_probe","src":"$src","work":"$work","cpus":$cpus,"plant_every":$PlantEvery,"repeats":$CdcRepeats,"width":$width,${tail(rec, loadBefore)},"arms":{${armsJson.mkString(",")}}}""")
+      f"""{"metric":"cdc_skew_probe","src":"$src","work":"$work","cpus":$cpus,"plant_every":$PlantEvery,"repeats":$CdcRepeats,"width":$width,${tail(arms.last.w, loadBefore)},"arms":{${armsJson.mkString(",")}}}""")
     spark.stop()
   }
 
@@ -167,10 +169,10 @@ object SkewProbe {
     val spark = Harness.session("32")
     requireGuardCores(spark, Gram, query)
     plant(spark, Gram, src, work)
-    val (rec, loadBefore, arms) = probeArms(spark, Gram, work, query)
-    val armsJson = arms.map(a => f""""${a.name}":{"probed_run_sec":${a.probedSec}%.2f,"guard_present":${a.name == "guarded"},"detection_wall_s":${a.detectionSec}%.2f,"detection_share":${a.detectionShare}%.4f,"stages":[${a.stages.mkString(",")}]}""")
+    val (loadBefore, arms) = probeArms(spark, Gram, work, query)
+    val armsJson = arms.map(a => f""""${a.name}":{"probed_run_sec":${a.probed.sec}%.2f,"guard_present":${a.name == "guarded"},"detection_wall_s":${a.probed.detectionSec}%.2f,"detection_share":${a.detectionShare}%.4f,"stages":[${a.w.jsonRows().mkString(",")}]}""")
     Harness.emit(outFile,
-      f"""{"metric":"gram_skew_probe","query":"$query","src":"$src","work":"$work","cpus":${Harness.cpus(spark)},"plant_every":$PlantEvery,"planted_tokens":$GramTokens,${tail(rec, loadBefore)},"arms":{${armsJson.mkString(",")}}}""")
+      f"""{"metric":"gram_skew_probe","query":"$query","src":"$src","work":"$work","cpus":${Harness.cpus(spark)},"plant_every":$PlantEvery,"planted_tokens":$GramTokens,${tail(arms.last.w, loadBefore)},"arms":{${armsJson.mkString(",")}}}""")
     spark.stop()
   }
 }

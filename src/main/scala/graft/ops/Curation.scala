@@ -946,8 +946,8 @@ object Curation {
       if (sampleFraction >= 1.0) hotMin.toDouble
       else sampleFraction * hotMin / 4.0).toLong)
     // detection-cost accounting (VERDICT r20 item 5): label the
-    // detection jobs so probe StageRecorders can attribute their task
-    // time, and publish the wall cost through GuardStats — the screen's
+    // detection jobs so a probe's recorder window can attribute their
+    // task time, and publish the wall cost through GuardStats — the screen's
     // work grows with the number of docs ≥ hotMin/4 chars, and this is
     // what keeps that growth visible in the artifacts
     val sc = docs.sparkSession.sparkContext

@@ -1,11 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import scala.jdk.CollectionConverters._
 
-/** The measurement core's pure parts, and the documented entry points. */
-class HarnessSpec extends AnyFunSuite {
+/** The measurement core's pure parts, its run recorder, and the
+  * documented entry points. */
+class HarnessSpec extends SparkSpec {
 
   test("family re-run selection: degraded segments + widest spreads, train order, capped (r21 min vector)") {
     val order = Seq("a", "b", "c", "d", "e", "f")
@@ -47,5 +48,34 @@ class HarnessSpec extends AnyFunSuite {
           s"$where names graft.$n, which has no main method")
       }
     }
+  }
+
+  test("a recorder window holds every event its body posted and nothing after it") {
+    val sc = spark.sparkContext
+    // a listener ahead of the recorder on the shared queue that lags it,
+    // as a busy bus does: the body returns before its events reach the
+    // recorder, so only the fence can make the window whole
+    val lag = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Thread.sleep(50)
+    }
+    sc.addSparkListener(lag)
+    val (_, w) = try SparkSpec.recorder.window {
+      sc.setJobGroup("fence-law", "fence-law")
+      // the last partition's task end is the straggler a boundary taken
+      // when the action returns would drop
+      try sc.parallelize(0 until 8, 8).foreach(i => if (i == 7) Thread.sleep(300))
+      finally sc.clearJobGroup()
+      spark.range(100).localCheckpoint(eager = true)
+    } finally sc.removeSparkListener(lag)
+    val ranged = w.jobs.filter(_.group == "fence-law")
+    assert(ranged.size == 1, s"the 8-partition job is one job, saw ${ranged.size}")
+    val stages = ranged.head.stageIds.toSet
+    assert(w.tasks.count(t => stages(t.stageId)) == 8)
+    assert(w.executions.map(_._1).contains("localCheckpoint"),
+      s"the eager checkpoint's execution is missing: ${w.executions.map(_._1)}")
+    assert(!w.jobs.exists(_.group == Harness.Recorder.SentinelGroup))
+    val (_, next) = SparkSpec.recorder.window(())
+    assert(next.jobs.isEmpty && next.tasks.isEmpty && next.executions.isEmpty,
+      s"a window straight after holds ${next.jobs.size} jobs, ${next.tasks.size} tasks, ${next.executions.size} executions")
   }
 }

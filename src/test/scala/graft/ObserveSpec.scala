@@ -28,44 +28,30 @@ class ObserveSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     import spark.implicits._
-    val sc = spark.sparkContext
-    val group = "materialize-sliver-spec"
-    sc.setJobGroup(group, "sliver")
-    try {
-      val before = settledJobs(group)
-      val (out, m) = ops.Materialize.sliver(spark.range(1, 101).toDF("x"))(
-        count(lit(1)).as("n"), sum(col("x")).as("s"))
-      val jobs = settledJobs(group) -- before
-      assert(jobs.size == 1, s"observe + eager checkpoint must be ONE job, saw ${jobs.size}")
-      assert(m.getLong(0) == 100L && m.getLong(1) == 5050L)
-      // the returned frame is the checkpoint: reading it recomputes nothing
-      assert(out.queryExecution.executedPlan.toString.contains("Scan ExistingRDD"))
-      // empty input: count 0, sum null — and the call returns rather
-      // than waiting on a metric that never fires
-      val empty = Future(ops.Materialize.sliver(Seq.empty[Long].toDF("x"))(
-        count(lit(1)).as("n"), sum(col("x")).as("s"))._2)
-      val e = Await.result(empty, 60.seconds)
-      assert(e.getLong(0) == 0L && e.isNullAt(1))
-    } finally sc.clearJobGroup()
+    val ((out, m), jobs) = jobsOf("materialize-sliver-spec")(ops.Materialize.sliver(
+      spark.range(1, 101).toDF("x"))(count(lit(1)).as("n"), sum(col("x")).as("s")))
+    assert(jobs.size == 1, s"observe + eager checkpoint must be ONE job, saw ${jobs.size}")
+    assert(m.getLong(0) == 100L && m.getLong(1) == 5050L)
+    // the returned frame is the checkpoint: reading it recomputes nothing
+    assert(out.queryExecution.executedPlan.toString.contains("Scan ExistingRDD"))
+    // empty input: count 0, sum null — and the call returns rather
+    // than waiting on a metric that never fires
+    val empty = Future(ops.Materialize.sliver(Seq.empty[Long].toDF("x"))(
+      count(lit(1)).as("n"), sum(col("x")).as("s"))._2)
+    val e = Await.result(empty, 60.seconds)
+    assert(e.getLong(0) == 0L && e.isNullAt(1))
   }
 
   test("connected components on a small graph: call to collected labels in at most 2 jobs") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val group = "cc-finish-jobs-spec"
     val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L), (21L, 20L), (7L, 7L)).toDF("a_id", "b_id")
-    sc.setJobGroup(group, "cc")
-    try {
-      val before = settledJobs(group)
-      val got = ops.Clusters.connectedComponents(edges).collect()
-      val jobs = settledJobs(group) -- before
-      assert(got.length == 8)
-      // the input sliver and the collect of its pairs; the labels come
-      // back as a local frame, so collecting them runs no job. The
-      // star-only path runs 23 here (canonical sliver, rounds, except,
-      // labels).
-      assert(jobs.size <= 2, s"small-graph CC ran ${jobs.size} jobs (budget 2)")
-    } finally sc.clearJobGroup()
+    val (got, jobs) = jobsOf("cc-finish-jobs-spec")(ops.Clusters.connectedComponents(edges).collect())
+    assert(got.length == 8)
+    // the input sliver and the collect of its pairs; the labels come
+    // back as a local frame, so collecting them runs no job. The
+    // star-only path runs 23 here (canonical sliver, rounds, except,
+    // labels).
+    assert(jobs.size <= 2, s"small-graph CC ran ${jobs.size} jobs (budget 2)")
   }
 
   test("q128 triangles: call to collected row in at most 4 jobs") {

@@ -9,7 +9,10 @@ import scala.jdk.CollectionConverters._
   * runs the checkpoint eagerly itself, so no caller can pair an
   * observation with a lazy checkpoint and block forever on a metric that
   * never fires. Building a session is `Harness.session`, so every main
-  * runs with the same tuning and confs. */
+  * runs with the same tuning and confs. Recording a run's events is
+  * `Harness.Recorder.window`, whose sentinel fence is exact, so nothing
+  * registers its own listener or polls the async listener bus with
+  * sleeps. */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** `file:line: pattern` for each banned pattern in src/main/scala
@@ -36,5 +39,15 @@ class SourceGuardSpec extends AnyFunSuite {
   test("SparkSession.builder() appears only in Harness.scala") {
     val found = hits(Seq("SparkSession.builder()"), "Harness.scala")
     assert(found.isEmpty, "build sessions with Harness.session instead:\n" + found.mkString("\n"))
+  }
+
+  test("listeners are registered, and sleeps appear, only in Harness.scala") {
+    val found = hits(Seq("addSparkListener(", "listenerManager.register(", "Thread.sleep("), "Harness.scala")
+    assert(found.isEmpty, "record run events with Harness.Recorder.window instead:\n" + found.mkString("\n"))
+    val polls = Seq("src/main/scala/graft/Harness.scala", "src/test/scala/graft/SparkSpec.scala")
+      .filter(f => Files.readString(Paths.get(f)).contains("Thread.sleep("))
+    assert(polls.isEmpty, s"sleep-polls in ${polls.mkString(", ")}: fence with Harness.Recorder.window")
+    val retired = hits(Seq("quiesce", "settledJobs", "leftover_"), "")
+    assert(retired.isEmpty, "the fence made these repair paths unnecessary:\n" + retired.mkString("\n"))
   }
 }

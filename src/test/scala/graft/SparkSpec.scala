@@ -10,31 +10,15 @@ trait SparkSpec extends AnyFunSuite {
   /** Fast-loop scale factor for data-driven specs. */
   val sf: String = "/root/testdata/sf0.001"
 
-  /** The job ids run so far under job group `group`. Job ids reach the
-    * status tracker through the async listener bus: poll until the
-    * group's job list stops growing (10 s cap). */
-  def settledJobs(group: String): Set[Int] = {
-    val sc = spark.sparkContext
-    val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(10)
-    var last = sc.statusTracker.getJobIdsForGroup(group).toSet
-    var stable = 0
-    while (stable < 6 && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      val now = sc.statusTracker.getJobIdsForGroup(group).toSet
-      if (now == last) stable += 1 else { last = now; stable = 0 }
-    }
-    last
-  }
-
-  /** (result, ids of the jobs `body` ran) under job group `group`. */
+  /** (result, ids of the jobs `body` ran) under job group `group`: the
+    * jobs of the shared recorder's window that carry the group. */
   def jobsOf[T](group: String)(body: => T): (T, Set[Int]) = {
     val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try {
-      val before = settledJobs(group)
-      val out = body
-      (out, settledJobs(group) -- before)
-    } finally sc.clearJobGroup()
+    val (out, w) = SparkSpec.recorder.window {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    (out, w.jobs.filter(_.group == group).map(_.id).toSet)
   }
 
   /** Order-insensitive DataFrame equality on collected rows. */
@@ -80,4 +64,7 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The recorder every suite's windows run on. */
+  lazy val recorder: Harness.Recorder = new Harness.Recorder(session)
 }

@@ -41,10 +41,8 @@ object BitextSkewProbe {
     val wb = bitextBanded(w, r, nn, s)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the partition count the miner's scoped floor would run the band
-    // joins at (mirrors withBitextTuning's arithmetic)
-    val floor = ((BitextBands.toLong * n * BitextBuildRowBytes +
-      BitextHashBuildTarget - 1) / BitextHashBuildTarget).toInt
-    val parts = math.max(floor, Harness.cpus(spark))
+    // joins at
+    val parts = math.max(bitextPartitionFloor(n), Harness.cpus(spark))
     val bandCols = (0 until BitextBands).map(b =>
       struct(lit(b).as("band"), col("bb").getItem(b).as("bv")))
     def sideCounts(langPred: org.apache.spark.sql.Column, name: String) =

@@ -8,14 +8,15 @@ import org.apache.spark.sql.types._
 
 /** Loaders for the driver-provided testdata tables (TESTDATA.md / FIXTURES.md §A).
   *
-  * Schema rule: every read is `spark.read.schema(s).parquet(path)`, where
-  * `s` is the table's footer schema inferred once and cached. Inference
-  * is a one-task Spark job (85–102 ms per read of sf0.1 lineitem on a
-  * 4-core host, against 7–11 ms with the schema given), so an uncached
-  * loader paid one job per call. The cache key is the qualified path,
-  * the sorted files under it with their lengths and modification times
-  * (one Hadoop listing per call), and the session's
-  * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` values: a
+  * Schema rule: every read is `spark.read.schema(s).parquet(path)`, and
+  * every stream source (`streaming.StreamingEvents.tableStream`) is
+  * declared with the same `s`: the table's footer schema ([[schemaOf]])
+  * inferred once and cached. Inference is a one-task Spark job (85–102 ms
+  * per read of sf0.1 lineitem on a 4-core host, against 7–11 ms with the
+  * schema given), so an uncached loader paid one job per call. The cache
+  * key is the qualified path, the sorted files under it with their
+  * lengths and modification times (one Hadoop listing per call), and the
+  * session's `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` values: a
   * rewritten or added file, or a conf that changes how footers map to
   * types, infers again. Column pruning and predicate pushdown still
   * reach the scan (verify with `.explain`: `ReadSchema` /
@@ -39,10 +40,11 @@ object Tables {
   private val schemas = new ConcurrentHashMap[(String, Seq[(String, String)]),
     (Seq[(String, Long, Long)], StructType)]()
 
-  /** `path` read with its cached footer schema (the schema rule above).
-    * No lock is held across the inference job: two racing misses both
-    * infer, and either result is the same schema. */
-  private def parquet(spark: SparkSession, path: String): DataFrame = {
+  /** The footer schema of `dir`'s table `name`, cached (the schema rule
+    * above). No lock is held across the inference job: two racing misses
+    * both infer, and either result is the same schema. */
+  private[graft] def schemaOf(spark: SparkSession, dir: String, name: String): StructType = {
+    val path = s"$dir/$name.parquet"
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualified = fs.makeQualified(p)
@@ -59,40 +61,34 @@ object Tables {
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     }.sorted
     val key = (qualified.toString, confs)
-    val schema = Option(schemas.get(key)).collect {
+    Option(schemas.get(key)).collect {
       case (files, s) if files == listing => s
     }.getOrElse {
       val s = spark.read.parquet(path).schema
       schemas.put(key, (listing, s))
       s
     }
-    spark.read.schema(schema).parquet(path)
   }
+
+  /** `dir`'s table `name` read with its cached footer schema. */
+  private def parquet(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schemaOf(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else parquet(spark, s"$dir/$name.parquet")
-
-  /** True when this dir's `events.ts` carries the legacy parquet
-    * TIMESTAMP(NANOS,false) encoding (surfaced as BIGINT ns under the
-    * session conf `spark.sql.legacy.parquet.nanosAsLong=true` — a
-    * SESSION conf the BUILDER must set: Verify, Bench, and the test
-    * fixture all do; loaders never mutate session conf); false when it
-    * carries TIMESTAMP(MICROS) (surfaced as TIMESTAMP_NTZ directly).
-    * The driver's testdata switched from NANOS to MICROS between
-    * rounds 11 and 12 — the batch loader and every stream source
-    * branch on the actual footer type (the cached footer schema: no job
-    * once the table has been read) rather than assuming either
-    * encoding. */
-  private[graft] def eventsTsIsLong(spark: SparkSession, dir: String): Boolean =
-    parquet(spark, s"$dir/events.parquet").schema("ts").dataType == LongType
+    else parquet(spark, dir, name)
 
   /** Surfaces `events` with a microsecond TIMESTAMP_NTZ `ts` whichever
-    * raw encoding the dir carries — for legacy NANOS that is the same
-    * truncation DuckDB applies casting TIMESTAMP_NS → TIMESTAMP, so
-    * oracle comparisons stay exact. */
+    * raw encoding the dir carries, read off the footer's `ts` type:
+    * legacy TIMESTAMP(NANOS) surfaces as BIGINT ns under the session conf
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (which the session
+    * BUILDER sets; loaders never mutate session conf), TIMESTAMP(MICROS)
+    * as TIMESTAMP_NTZ. For NANOS the conversion is the same truncation
+    * DuckDB applies casting TIMESTAMP_NS → TIMESTAMP, so oracle
+    * comparisons stay exact. The events stream source branches on the
+    * same cached footer type. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = parquet(spark, s"$dir/events.parquet")
+    val raw = parquet(spark, dir, "events")
     raw.schema("ts").dataType match {
       // `ts div 1000` is integer division — ns epoch values exceed 2^53,
       // so double division (plain `/`) would lose up to ±256 ns and

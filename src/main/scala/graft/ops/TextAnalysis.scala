@@ -543,6 +543,13 @@ object TextAnalysis {
     * executor, large enough that gate-scale runs never bump). */
   private[graft] val BitextHashBuildTarget = 256L << 20
 
+  /** The scoped shuffle-partition floor for an `n`-doc corpus: enough
+    * partitions that each band join's hash build stays under
+    * [[BitextHashBuildTarget]]. */
+  private[graft] def bitextPartitionFloor(n: Long): Int =
+    ((BitextBands.toLong * n * BitextBuildRowBytes +
+      BitextHashBuildTarget - 1) / BitextHashBuildTarget).toInt
+
   /** Hard SHUFFLE_HASH gate (ADVICE r15 item 1): a ShuffledHashJoin
     * builds ONE in-memory hash map per shuffle PARTITION, not per
     * bucket — "the build side is bucket-bounded" bounds the map only
@@ -647,8 +654,7 @@ object TextAnalysis {
       if (graft.Tuning.disabled) Map.empty
       else {
         val spKey = "spark.sql.shuffle.partitions"
-        val floor = ((BitextBands.toLong * n * BitextBuildRowBytes +
-          BitextHashBuildTarget - 1) / BitextHashBuildTarget).toInt
+        val floor = bitextPartitionFloor(n)
         val cur = spark.conf.get(spKey).toInt
         Map(graft.Tuning.ObjectAggFallbackKey ->
           graft.Tuning.ObjectAggFallbackKeys.toString) ++

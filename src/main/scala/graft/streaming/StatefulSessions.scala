@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 import java.time.{LocalDateTime, ZoneOffset}
 
@@ -27,7 +27,7 @@ case class UserSession(
   * cross-session carry-over).
   *
   * Batch and streaming share one function: in batch Spark runs it as a
-  * single group pass; under `Trigger.AvailailableNow` on the bounded file
+  * single group pass; under AvailableNow on the bounded file
   * source all data arrives in one microbatch, so NoTimeout + Append
   * yields exactly the batch sessions (a long-running deployment would use
   * a watermark + EventTimeTimeout to emit sessions as they close; that
@@ -164,9 +164,10 @@ object StatefulSessions {
   }
 
   /** q47: the same state function as a Structured Streaming query over
-    * the events file source, AvailableNow, memory sink. The shared
-    * source ([[StreamingEvents.eventsStream]]) absorbs the raw ts
-    * encoding branch (legacy BIGINT ns vs TIMESTAMP(MICROS)). */
+    * the events file source, run by the shared AvailableNow runner
+    * ([[StreamingEvents.drain]]). The shared source
+    * ([[StreamingEvents.eventsStream]]) absorbs the raw ts encoding
+    * branch (legacy BIGINT ns vs TIMESTAMP(MICROS)). */
   def sessionizeStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val events = StreamingEvents.eventsStream(spark, dir)
@@ -177,13 +178,7 @@ object StatefulSessions {
     val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(stateFn)
-    val name = s"stream_sessions_${System.nanoTime()}"
-    val q = sessions.toDF()
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StreamingEvents.freeze(spark, name)
+    StreamingEvents.drain(sessions.toDF(), "append")
       .select(col("session_start"), col("session_end"), col("user_id"),
         col("n_events"), col("sum_value"))
   }

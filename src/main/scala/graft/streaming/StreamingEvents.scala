@@ -13,76 +13,72 @@ import org.apache.spark.sql.types._
   * In production this is `readStream` on an arriving-files directory with
   * a watermark bounding state; `AvailableNow` processes the current
   * backlog in bounded batches then stops — the exact cron-replacement
-  * semantics. The memory sink is only for the verification harness; a
-  * real deployment writes parquet/Delta.
+  * semantics. Every streaming query (here and q47 in
+  * [[StatefulSessions]]) runs through the one runner [[drain]], and every
+  * stream source is [[tableStream]], which takes the table's cached
+  * footer schema from `graft.Tables.schemaOf`. The memory sink is only
+  * for the verification harness; a real deployment writes parquet/Delta.
   */
 object StreamingEvents {
 
-  /** Schema of events.parquet as the stream source sees it — file
-    * stream sources require an EXPLICIT schema, which must match the
-    * dir's raw encoding: legacy TIMESTAMP(NANOS) surfaces as BIGINT ns
-    * (the nanosAsLong session conf applies to streaming reads too),
-    * TIMESTAMP(MICROS) as TIMESTAMP_NTZ (the driver's encoding since
-    * round 12; `Tables.eventsTsIsLong` reads the footer). */
-  private def rawSchema(tsLong: Boolean) = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", if (tsLong) LongType else TimestampNTZType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
+  /** `dir`'s table `name` as a file stream source. File stream sources
+    * require an explicit schema; it is the footer schema the batch
+    * loaders use, so the raw encoding is decided in one place. */
+  private def tableStream(ss: SparkSession, dir: String, name: String): DataFrame =
+    ss.readStream
+      .schema(graft.Tables.schemaOf(ss, dir, name))
+      .option("pathGlobFilter", s"$name.parquet")
+      .parquet(dir)
 
   /** The events file-stream source with `ts` surfaced as a
     * watermark-able TIMESTAMP (not NTZ; the session tz is UTC so the
     * wall-clock is identical — callers cast back to NTZ on output for
-    * oracle parity) whichever raw encoding the dir carries. */
+    * oracle parity) whichever raw encoding the footer carries: legacy
+    * TIMESTAMP(NANOS) as BIGINT ns (the nanosAsLong session conf applies
+    * to streaming reads too), TIMESTAMP(MICROS) as TIMESTAMP_NTZ. */
   private[streaming] def eventsStream(ss: SparkSession, dir: String): DataFrame = {
-    val tsLong = graft.Tables.eventsTsIsLong(ss, dir)
-    ss.readStream
-      .schema(rawSchema(tsLong))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val raw = tableStream(ss, dir, "events")
+    raw.withColumn("ts",
       // legacy ns → `div 1000` integer division (ns epochs exceed 2^53;
       // double division would shift some microseconds vs truncation)
-      .withColumn("ts",
-        if (tsLong) timestamp_micros(expr("ts div 1000"))
-        else col("ts").cast(TimestampType))
+      if (raw.schema("ts").dataType == LongType) timestamp_micros(expr("ts div 1000"))
+      else col("ts").cast(TimestampType))
+  }
+
+  /** Runs `df` to completion as a `Trigger.AvailableNow` query on the
+    * memory sink of `df`'s own session and returns a local checkpoint of
+    * the result. Blocking — intended for verification/bench, not a
+    * long-running service. The sink's temp view is dropped before
+    * returning: the memory sink registers one per query that clearCache
+    * never touches, so each run would otherwise pin a full result copy in
+    * driver memory. The checkpoint is GC'd with the returned frame by the
+    * ContextCleaner. */
+  private[streaming] def drain(df: DataFrame, outputMode: String): DataFrame = {
+    val ss = df.sparkSession
+    val name = s"stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val q = df.writeStream
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try {
+      q.awaitTermination()
+      ss.table(name).localCheckpoint(true)
+    } finally ss.catalog.dropTempView(name)
   }
 
   /** Runs the tumbling aggregation as a streaming query over the events
-    * file source and returns the final result table. Blocking — intended
-    * for verification/bench, not a long-running service. */
+    * file source and returns the final result table. */
   def tumblingAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    // nanosAsLong comes from the session builder (Tables.scala's rule:
-    // loaders never mutate session conf)
-    val events = eventsStream(spark, dir)
-    val agg = events
+    val agg = eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
       .select(col("window.start").cast(TimestampNTZType).as("ws"),
         col("event_type"), col("n"), col("sum_value"))
-    val name = s"stream_tumbling_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
-  }
-
-  /** Copy a memory-sink table out and DROP the temp view — each
-    * invocation would otherwise pin a full result copy in driver memory
-    * forever (the memory sink registers a per-query temp view that
-    * clearCache never touches). The localCheckpoint copy is GC'd with
-    * the returned frame by the ContextCleaner. */
-  private[streaming] def freeze(spark: SparkSession, name: String): DataFrame = {
-    val out = spark.table(name).localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
+    drain(agg, "complete")
   }
 
   /** q86: watermarked stream-stream INNER join — clicks joined to the
@@ -119,17 +115,7 @@ object StreamingEvents {
         col("click_user").as("user_id"),
         col("click_ts").cast(TimestampNTZType).as("click_ts"),
         col("purchase_ts").cast(TimestampNTZType).as("purchase_ts"))
-    val name = s"stream_join_${System.nanoTime()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // the memory sink registers its temp view in the session that started
-    // the query — freeze from the clone (the checkpointed result outlives it)
-    freeze(ss, name)
+    drain(joined, "append")
   }
 
   /** q92: streaming exact dedup — the streaming face of q21's
@@ -143,20 +129,9 @@ object StreamingEvents {
     * bounds state with `dropDuplicatesWithinWatermark` instead — that
     * variant's re-delivery/expiry semantics are pinned in
     * StreamingDedupSpec. */
-  def streamDistinctKeys(spark: SparkSession, dir: String): DataFrame = {
-    val events = eventsStream(spark, dir)
-    val name = s"stream_dedup_${System.nanoTime()}"
-    val q = events.select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
-  }
+  def streamDistinctKeys(spark: SparkSession, dir: String): DataFrame =
+    drain(eventsStream(spark, dir).select(col("user_id"), col("event_type"))
+      .dropDuplicates("user_id", "event_type"), "append")
 
   /** q166: BOUNDED-STATE streaming dedup — q92's distinct-key stream
     * through `dropDuplicatesWithinWatermark`, the operator a continuous
@@ -174,22 +149,11 @@ object StreamingEvents {
     *
     * The watermark column must still be present at the dedup (expiry is
     * keyed by each row's event time); keys project AFTER the operator. */
-  def streamDedupTtl(spark: SparkSession, dir: String): DataFrame = {
-    val events = eventsStream(spark, dir)
-    val name = s"stream_dedup_ttl_${System.nanoTime()}"
-    val q = events
+  def streamDedupTtl(spark: SparkSession, dir: String): DataFrame =
+    drain(eventsStream(spark, dir)
       .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select(col("user_id"), col("event_type"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
-  }
+      .select(col("user_id"), col("event_type")), "append")
 
   /** q102: stream-STATIC enrichment join — the remaining Structured
     * Streaming join class (q86 covers stream-stream): each micro-batch
@@ -208,18 +172,9 @@ object StreamingEvents {
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
-    val name = s"stream_static_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
+    drain(agg, "complete")
   }
 
-  /** Schema of documents.parquet as the stream source sees it. */
   /** q185: STREAMING corpus-quality telemetry — per-language doc
     * counts, mean quality, and low-quality counts maintained as
     * running stateful-aggregation state over the arriving-documents
@@ -234,21 +189,8 @@ object StreamingEvents {
     * additivity), which is exactly the oracle. The low gate compares
     * the QUANTIZED score (qfp < 5000), so stream, batch, and oracle
     * agree bit-for-bit at the 0.5 boundary. */
-  def streamQualityRollup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val name = s"stream_quality_${System.nanoTime()}"
-    val q = qualityFold(docs).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
-  }
+  def streamQualityRollup(spark: SparkSession, dir: String): DataFrame =
+    drain(qualityFold(tableStream(spark, dir, "documents")), "complete")
 
   /** The shared q185 fold (batch and streaming frames alike). */
   private[graft] def qualityFold(docs: DataFrame): DataFrame =
@@ -260,13 +202,6 @@ object StreamingEvents {
       .select(col("lang"), col("n_docs"),
         round(col("sq").cast("double") / col("n_docs") / 1e4, 6).as("mean_quality"),
         col("n_low"))
-
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   /** q144: STREAMING count–min sketch — q141's register table
     * maintained incrementally over the arriving-documents stream.
@@ -285,22 +220,8 @@ object StreamingEvents {
     * arriving-files directory and emits the register table per
     * trigger (complete mode is safe precisely because the result is
     * sketch-sized, not data-sized). */
-  def streamCmsRegisters(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val regs = graft.ops.Sketches.cmsOf(docs)
-    val name = s"stream_cms_${System.nanoTime()}"
-    val q = regs.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
-  }
+  def streamCmsRegisters(spark: SparkSession, dir: String): DataFrame =
+    drain(graft.ops.Sketches.cmsOf(tableStream(spark, dir, "documents")), "complete")
 
   /** q149: STREAMING MinHash near-dup — the dedup-family member of the
     * §2.9 batch≡stream discipline, split the way a 100 TB deployment
@@ -326,22 +247,9 @@ object StreamingEvents {
     * order-free), so the composition equals the batch SQL the oracle
     * states; StreamingSpec also proves the multi-batch fold (two files,
     * maxFilesPerTrigger = 1 → identical final state). */
-  private[graft] def streamMinhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val sig = graft.ops.Dedup.signaturesOf(graft.ops.Dedup.shinglesOf(docs))
-    val name = s"stream_minhash_${System.nanoTime()}"
-    val q = sig.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
-  }
+  private[graft] def streamMinhashSignatures(spark: SparkSession, dir: String): DataFrame =
+    drain(graft.ops.Dedup.signaturesOf(
+      graft.ops.Dedup.shinglesOf(tableStream(spark, dir, "documents"))), "complete")
 
   /** q149: (a_id, b_id, match_cnt) near-dup pairs from the streamed
     * signature store — see [[streamMinhashSignatures]]. */
@@ -375,21 +283,8 @@ object StreamingEvents {
     * ⇒ the sum is that row's vector; multi-row arrivals fold by the
     * same algebra) — StreamingSpec pins the state law and the
     * multi-batch fold; the oracle is q148's, identical — the point. */
-  private[graft] def streamDhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val name = s"stream_dhash_${System.nanoTime()}"
-    val q = dhashFold(docs).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    freeze(spark, name)
-  }
+  private[graft] def streamDhashSignatures(spark: SparkSession, dir: String): DataFrame =
+    drain(dhashFold(tableStream(spark, dir, "documents")), "complete")
 
   /** The shared q158 fold: map-side intensities → per-doc vector-sum
     * state → packed 56-bit signature (works on batch and streaming

@@ -12,7 +12,9 @@ import scala.jdk.CollectionConverters._
   * runs with the same tuning and confs. Recording a run's events is
   * `Harness.Recorder.window`, whose sentinel fence is exact, so nothing
   * registers its own listener or polls the async listener bus with
-  * sleeps. */
+  * sleeps. Running a streaming query is `StreamingEvents.drain`, which
+  * drops the memory sink's temp view, and its sources read the cached
+  * footer schema, so stream sources and writers live in one file. */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** `file:line: pattern` for each banned pattern in src/main/scala
@@ -49,5 +51,13 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(polls.isEmpty, s"sleep-polls in ${polls.mkString(", ")}: fence with Harness.Recorder.window")
     val retired = hits(Seq("quiesce", "settledJobs", "leftover_"), "")
     assert(retired.isEmpty, "the fence made these repair paths unnecessary:\n" + retired.mkString("\n"))
+  }
+
+  test("stream sources, writers and AvailableNow appear only in StreamingEvents.scala; writeStream once") {
+    val found = hits(Seq("writeStream", "readStream", "Trigger.AvailableNow"), "StreamingEvents.scala")
+    assert(found.isEmpty, "run streaming queries with StreamingEvents.drain instead:\n" + found.mkString("\n"))
+    val home = Paths.get("src/main/scala/graft/streaming/StreamingEvents.scala")
+    val writers = "writeStream".r.findAllIn(Files.readString(home)).size
+    assert(writers == 1, s"writeStream appears $writers times in $home: the one runner is drain")
   }
 }

@@ -266,7 +266,8 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
       "the fold must have seen at least two non-empty micro-batches")
-    assertSameRows(spark.table(name), graft.ops.Dedup.minhashSignatures(spark, sf))
+    try assertSameRows(spark.table(name), graft.ops.Dedup.minhashSignatures(spark, sf))
+    finally spark.catalog.dropTempView(name)
   }
 
   test("streaming MinHash pairs equal the batch sweep over batch signatures (q149 end-to-end)") {
@@ -301,7 +302,8 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
       "the fold must have seen at least two non-empty micro-batches")
-    assertSameRows(spark.table(name), graft.ops.Multimodal.dhashSignatures(spark, sf))
+    try assertSameRows(spark.table(name), graft.ops.Multimodal.dhashSignatures(spark, sf))
+    finally spark.catalog.dropTempView(name)
   }
 
   test("streaming dHash pairs equal the batch q148 sweep (q158 end-to-end)") {
@@ -342,8 +344,9 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
       "the fold must have seen at least two non-empty micro-batches")
-    assertSameRows(spark.table(name),
+    try assertSameRows(spark.table(name),
       graft.streaming.StreamingEvents.qualityFold(docs))
+    finally spark.catalog.dropTempView(name)
   }
 
   test("q166 TTL dedup with delay past the backlog span equals batch distinct") {
@@ -355,6 +358,18 @@ class StreamingSpec extends SparkSpec {
     val batch = Tables.events(spark, sf)
       .select(col("user_id"), col("event_type")).distinct()
     assertSameRows(streamed, batch)
+  }
+
+  test("every streaming query leaves no active stream and no temp view in the caller's session") {
+    val streams = SparkEntry.queries.filter(_._1.contains("_stream_"))
+    assert(streams.size == 10, s"streaming entries: ${streams.keys.toSeq.sorted}")
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    for ((name, q) <- streams) {
+      q(spark, sf)
+      assert(spark.streams.active.isEmpty, s"$name left a stream running")
+      assert(views == before, s"$name left temp views ${views -- before}")
+    }
   }
 
   private implicit class Pipe[A](a: A) { def |>[B](f: A => B): B = f(a) }

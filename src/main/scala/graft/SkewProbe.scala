@@ -23,7 +23,6 @@ object SkewProbe {
   private type Builder = (SparkSession, String) => DataFrame
 
   private val PlantEvery = 10
-  private val CdcDivisor = 8
   private val CdcRepeats = 12
   private val GramTokens = 160
 
@@ -38,8 +37,7 @@ object SkewProbe {
     * chunk rows; guard off = the pure window shape, where the hot fp's
     * whole row mass lands in ONE reduce partition. */
   private lazy val Cdc = Family(Seq.fill(CdcRepeats)(CdcUnit).flatten.mkString(" "), "window",
-    Map("q154_cdc_chunks" -> ((s, d) => ops.Curation.cdcChunksOf(
-      Tables.documents(s, d), CdcDivisor, cdcWidth(s, d), hotMinOcc = -1L))))
+    Map("q154_cdc_chunks" -> ((s, d) => ops.Curation.cdcChunks(s, d, hotMinOcc = -1L))))
 
   /** Gram join-backs: a single-token text makes every L-gram the SAME
     * gram (~3% of the gram stream), which a width-pinned exchange — where
@@ -54,7 +52,7 @@ object SkewProbe {
     * pair (last, first) does — searched with the operator's own boundary
     * rule so "unit × repeats" chunks to `repeats` identical fingerprints. */
   private lazy val CdcUnit: Seq[String] = {
-    val d = CdcDivisor
+    val d = ops.Curation.CdcDivisor
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     def anchors(a: String, b: String): Boolean =
@@ -77,11 +75,6 @@ object SkewProbe {
         u.sliding(2).forall(pr => !anchors(pr(0), pr(1)))
     }.getOrElse(sys.error(s"no CDC-stable unit found for d=$d"))
   }
-
-  /** The shipping q154 entry's corpus-proportional width (4 fp-exchange
-    * bytes per input byte), read from `dir`. */
-  private def cdcWidth(spark: SparkSession, dir: String): Int =
-    ops.Curation.streamWidth(spark, dir, 4L)
 
   def main(args: Array[String]): Unit = args.toSeq match {
     case "stage" +: sfDir +: query +: rest =>
@@ -154,7 +147,7 @@ object SkewProbe {
     val cpus = Harness.cpus(spark)
     requireGuardCores(spark, Cdc, "q154_cdc_chunks")
     plant(spark, Cdc, src, work)
-    val width = cdcWidth(spark, work)
+    val width = ops.Curation.cdcWidth(spark, work)
     require(width > cpus, s"auto guard would not engage (width $width <= session $cpus) — " +
       "run the probe at a corpus scale where the straggler regime exists (sf100)")
     val (loadBefore, arms) = probeArms(spark, Cdc, work, "q154_cdc_chunks")

@@ -385,24 +385,73 @@ object Curation {
                                   cores: Int): Boolean =
     hotMinOcc > 0L || (hotMinOcc == 0L && w > sessionParts && cores > 1)
 
-  /** Hot-gram detection for the guarded gram family — empty when the
-    * guard is off or nothing crosses the threshold. Keys are UPPERCASE
-    * hex of the 16-byte gram hash (hex()'s output case), matched with
-    * `hex(h) === hh` at the tag joins. */
-  private def hotGramsFor(spark: SparkSession, dir: String, L: Int, w: Int,
-                          hotMinOcc: Long, sampleFraction: Double): Array[String] = {
+  /** The one hot-key detection path of every guard (gram and CDC): the
+    * keys of `keyStreamOf(docs)` that cross the threshold, or none when
+    * the guard does not engage at stream width `w` ([[guardEngages]]).
+    * The mode sets the detection: forced (`hotMinOcc > 0`) counts every
+    * document, exact at `hotMinOcc`; auto (0) samples
+    * [[CdcHotSampleFraction]] of the documents against `autoMin`. */
+  private def hotKeysFor(docs: DataFrame, w: Int, hotMinOcc: Long, autoMin: Long,
+                         what: String)(keyStreamOf: DataFrame => DataFrame): Array[String] = {
+    val spark = docs.sparkSession
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val guardOn = guardEngages(hotMinOcc, w, sessionParts,
-      spark.sparkContext.defaultParallelism)
-    if (!guardOn) Array.empty
-    else detectHotKeys(
-      Tables.documents(spark, dir).filter(col("doc_id").isNotNull),
-      s => sdGrams(s.select(col("doc_id"),
-        split(Dedup.normText(col("text")), " ").as("toks")), L)
-        .select(hex(col("h")).as("k")),
-      if (hotMinOcc > 0L) hotMinOcc else GramHotMinOccAuto,
-      sampleFraction, "gram")
+    if (!guardEngages(hotMinOcc, w, sessionParts, spark.sparkContext.defaultParallelism)) Array.empty
+    else {
+      val (hotMin, fraction) =
+        if (hotMinOcc > 0L) (hotMinOcc, 1.0) else (autoMin, CdcHotSampleFraction)
+      detectHotKeys(docs, keyStreamOf, hotMin, fraction, what)
+    }
   }
+
+  /** Hot grams of the gram family at width `w` ([[hotKeysFor]]). Keys are
+    * UPPERCASE hex of the 16-byte gram hash (hex()'s output case),
+    * matched with `hex(h) === hh` at the tag joins. */
+  private def hotGrams(spark: SparkSession, dir: String, L: Int, w: Int,
+                       hotMinOcc: Long): Array[String] =
+    hotKeysFor(Tables.documents(spark, dir).filter(col("doc_id").isNotNull),
+        w, hotMinOcc, GramHotMinOccAuto, "gram") { s =>
+      val toks = s.select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+      sdGrams(toks, L).select(hex(col("h")).as("k"))
+    }
+
+  /** The one salting step of the gram guard: `grams` tagged with the
+    * broadcast hot set, hot grams salted over the full width on
+    * `xxhash64(saltBy)` and light grams kept at salt 0, so a light gram's
+    * single (h, 0) cell still carries its complete global stats; then
+    * the one (h, salt) exchange at width `w`. Returns the salted stream
+    * and the hot set for [[hotSplit]]. */
+  private def saltHotGrams(grams: DataFrame, hotHex: Array[String], w: Int,
+                           saltBy: Column*): (DataFrame, DataFrame) = {
+    val spark = grams.sparkSession
+    import spark.implicits._
+    val hotSet = broadcast(hotHex.toSeq.toDF("hh"))
+    val salted = grams
+      .join(hotSet, hex(col("h")) === col("hh"), "left")
+      // the coalesce makes salt PROVABLY non-nullable (pmod is
+      // nullable in non-ANSI mode — divisor 0 → null — so without it
+      // the left joins infer an isnotnull(salt) filter on the build
+      // branch ONLY, which pushes below the exchange and breaks the
+      // canonical identity ReusedExchange needs; measured as a second
+      // full corpus shuffle in the q133 plan)
+      .withColumn("salt", when(col("hh").isNotNull,
+        coalesce(pmod(xxhash64(saltBy: _*), lit(w.toLong)), lit(0L)))
+        .otherwise(lit(0L)))
+      .drop("hh")
+      .repartition(w, col("h"), col("salt"))
+    (salted, hotSet)
+  }
+
+  /** Per-(h, salt) `cells` split into (light cells, hot cells): a light
+    * cell is its gram's global aggregate; hot cells still combine per h. */
+  private def hotSplit(cells: DataFrame, hotSet: DataFrame): (DataFrame, DataFrame) = {
+    val tagged = cells.join(hotSet, hex(col("h")) === col("hh"), "left")
+    (tagged.filter(col("hh").isNull), tagged.filter(col("hh").isNotNull))
+  }
+
+  /** Combines per-cell [[firstOccAggs]] into the group's, for hot cells. */
+  private def firstOccMerge: Seq[Column] = Seq(
+    min(col("_kp")).as("_kp"), min(col("_mnd")).as("_mnd"), max(col("_mxd")).as("_mxd"),
+    min(col("_mnp")).as("_mnp"), max(col("_mxp")).as("_mxp"))
 
   /** Occurrences of DUPLICATED grams as (doc_id, pos, is_first) — the
     * shared core of q133/q138, in two plan shapes:
@@ -435,34 +484,14 @@ object Curation {
         .select(col("doc_id"), col("pos"),
           (col("doc_id") === col("k_doc") && col("pos") === col("k_pos")).as("is_first"))
     } else {
-      val spark = toks.sparkSession
-      import spark.implicits._
-      val hotSet = broadcast(hotHex.toSeq.toDF("hh"))
-      val g = sdGrams(toks, L)
-        .join(hotSet, hex(col("h")) === col("hh"), "left")
-        // the coalesce makes salt PROVABLY non-nullable (pmod is
-        // nullable in non-ANSI mode — divisor 0 → null — so without it
-        // the left joins infer an isnotnull(salt) filter on the build
-        // branch ONLY, which pushes below the exchange and breaks the
-        // canonical identity ReusedExchange needs; measured as a second
-        // full corpus shuffle in this exact plan)
-        .withColumn("salt", when(col("hh").isNotNull,
-          coalesce(pmod(xxhash64(col("doc_id"), col("pos")), lit(w.toLong)),
-            lit(0L)))
-          .otherwise(lit(0L)))
-        .drop("hh")
-        .repartition(w, col("h"), col("salt"))
-      val lvl1 = g.groupBy(col("h"), col("salt"))
-        .agg(count(lit(1)).as("c"), firstOccAggs: _*)
-      val tagged = lvl1.join(hotSet, hex(col("h")) === col("hh"), "left")
-      val light = tagged.filter(col("hh").isNull && col("c") > 1)
+      val (g, hotSet) = saltHotGrams(sdGrams(toks, L), hotHex, w, col("doc_id"), col("pos"))
+      val (lightCells, hotCells) = hotSplit(g.groupBy(col("h"), col("salt"))
+        .agg(count(lit(1)).as("c"), firstOccAggs: _*), hotSet)
+      val light = lightCells.filter(col("c") > 1)
         .select(col("h"), col("salt"),
           firstOccField("doc").as("k_doc"), firstOccField("pos").as("k_pos"))
-      val hotWin = broadcast(tagged.filter(col("hh").isNotNull)
-        .groupBy(col("h"))
-        .agg(sum(col("c")).as("c"), min(col("_kp")).as("_kp"),
-          min(col("_mnd")).as("_mnd"), max(col("_mxd")).as("_mxd"),
-          min(col("_mnp")).as("_mnp"), max(col("_mxp")).as("_mxp"))
+      val hotWin = broadcast(hotCells.groupBy(col("h"))
+        .agg(sum(col("c")).as("c"), firstOccMerge: _*)
         .filter(col("c") > 1)
         .select(col("h"), firstOccField("doc").as("hk_doc"),
           firstOccField("pos").as("hk_pos")))
@@ -477,8 +506,7 @@ object Curation {
 
   def substringDedup(spark: SparkSession, dir: String,
                      minSpan: Int = MinSpanTokens,
-                     hotMinOcc: Long = 0L,
-                     sampleFraction: Double = CdcHotSampleFraction): DataFrame = {
+                     hotMinOcc: Long = 0L): DataFrame = {
     require(minSpan > 0, "span length must be positive")
     val L = minSpan
     val toks = sdToks(spark, dir)
@@ -494,8 +522,7 @@ object Curation {
     // corpus-hot grams take the salted+broadcast path — see
     // sdDupOccurrences.
     val w = gramWidth(spark, dir)
-    val dup = sdDupOccurrences(toks, L, w,
-      hotGramsFor(spark, dir, L, w, hotMinOcc, sampleFraction))
+    val dup = sdDupOccurrences(toks, L, w, hotGrams(spark, dir, L, w, hotMinOcc))
     val wPrev = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -538,16 +565,14 @@ object Curation {
     * per-token explode on the rebuild side. */
   def substringDedupApply(spark: SparkSession, dir: String,
                           minSpan: Int = MinSpanTokens,
-                          hotMinOcc: Long = 0L,
-                          sampleFraction: Double = CdcHotSampleFraction): DataFrame = {
+                          hotMinOcc: Long = 0L): DataFrame = {
     require(minSpan > 0, "span length must be positive")
     val L = minSpan
     val toks = sdToks(spark, dir)
     // same shared-exchange + bounded-hash-build shape as substringDedup
     // (hot grams via the same salted+broadcast guard)
     val w = gramWidth(spark, dir)
-    val cuts = sdDupOccurrences(toks, L, w,
-      hotGramsFor(spark, dir, L, w, hotMinOcc, sampleFraction))
+    val cuts = sdDupOccurrences(toks, L, w, hotGrams(spark, dir, L, w, hotMinOcc))
       .filter(!col("is_first"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("pos"))).as("ss"))
@@ -659,10 +684,9 @@ object Curation {
   def boilerplateDetect(spark: SparkSession, dir: String,
                         L: Int = BoilerGramL,
                         minDf: Long = BoilerMinDf,
-                        hotMinOcc: Long = 0L,
-                        sampleFraction: Double = CdcHotSampleFraction): DataFrame = {
+                        hotMinOcc: Long = 0L): DataFrame = {
     val w = gramWidth(spark, dir)
-    val hot = hotGramsFor(spark, dir, L, w, hotMinOcc, sampleFraction)
+    val hot = hotGrams(spark, dir, L, w, hotMinOcc)
     if (hot.isEmpty)
       sdGrams(sdToks(spark, dir), L)
         // corpus-proportional width (see gramWidth): keeps the df
@@ -687,32 +711,13 @@ object Curation {
       // aggregate. Residual: a hot gram concentrated in ONE mega-doc
       // stays in one cell, but that mass is bounded by the document,
       // not the corpus.
-      val spark2 = spark
-      import spark2.implicits._
-      val hotSet = broadcast(hot.toSeq.toDF("hh"))
-      val lvl1 = sdGrams(sdToks(spark, dir), L)
-        .join(hotSet, hex(col("h")) === col("hh"), "left")
-        // coalesce: salt must be provably non-nullable (see
-        // sdDupOccurrences — nullable pmod breaks exchange reuse)
-        .withColumn("salt", when(col("hh").isNotNull,
-          coalesce(pmod(xxhash64(col("doc_id")), lit(w.toLong)), lit(0L)))
-          .otherwise(lit(0L)))
-        .drop("hh")
-        .repartition(w, col("h"), col("salt"))
-        .groupBy(col("h"), col("salt"))
+      val (g, hotSet) = saltHotGrams(sdGrams(sdToks(spark, dir), L), hot, w, col("doc_id"))
+      val (light, hotCells) = hotSplit(g.groupBy(col("h"), col("salt"))
         .agg(countDistinct(col("doc_id")).as("df"),
-          (count(lit(1)).as("tf") +: firstOccAggs): _*)
-      val tagged = lvl1.join(hotSet, hex(col("h")) === col("hh"), "left")
-      val light = tagged.filter(col("hh").isNull)
-        .select(col("h"), col("df"), col("tf"), col("_kp"),
-          col("_mnd"), col("_mxd"), col("_mnp"), col("_mxp"))
-      val hotC = tagged.filter(col("hh").isNotNull)
-        .groupBy(col("h"))
-        .agg(sum(col("df")).as("df"), sum(col("tf")).as("tf"),
-          min(col("_kp")).as("_kp"), min(col("_mnd")).as("_mnd"),
-          max(col("_mxd")).as("_mxd"), min(col("_mnp")).as("_mnp"),
-          max(col("_mxp")).as("_mxp"))
-      light.unionByName(hotC)
+          (count(lit(1)).as("tf") +: firstOccAggs): _*), hotSet)
+      val hotC = hotCells.groupBy(col("h"))
+        .agg(sum(col("df")).as("df"), (sum(col("tf")).as("tf") +: firstOccMerge): _*)
+      light.drop("salt", "hh").unionByName(hotC)
         .filter(col("df") >= minDf)
         .select(lower(hex(col("h"))).as("gram_hash"), col("df"), col("tf"),
           firstOccField("doc").as("k_doc"), firstOccField("pos").as("k_pos"))
@@ -732,11 +737,10 @@ object Curation {
   def boilerplateApply(spark: SparkSession, dir: String,
                        L: Int = BoilerGramL,
                        minDf: Long = BoilerMinDf,
-                       hotMinOcc: Long = 0L,
-                       sampleFraction: Double = CdcHotSampleFraction): DataFrame = {
+                       hotMinOcc: Long = 0L): DataFrame = {
     val toks = sdToks(spark, dir)
     val w = gramWidth(spark, dir)
-    val hot = hotGramsFor(spark, dir, L, w, hotMinOcc, sampleFraction)
+    val hot = hotGrams(spark, dir, L, w, hotMinOcc)
     val per =
       if (hot.isEmpty) {
         // same shared-exchange + bounded-hash-build shape as
@@ -760,25 +764,12 @@ object Curation {
         // (h, salt)-co-partitioned SHUFFLE_HASH build, hot flags ride
         // a broadcast, so a hot gram's probe rows spread over its doc
         // spectrum instead of one task
-        val spark2 = spark
-        import spark2.implicits._
-        val hotSet = broadcast(hot.toSeq.toDF("hh"))
-        val g = sdGrams(toks, L)
-          .join(hotSet, hex(col("h")) === col("hh"), "left")
-          // coalesce: salt must be provably non-nullable (see
-          // sdDupOccurrences — nullable pmod breaks exchange reuse)
-          .withColumn("salt", when(col("hh").isNotNull,
-            coalesce(pmod(xxhash64(col("doc_id")), lit(w.toLong)), lit(0L)))
-            .otherwise(lit(0L)))
-          .drop("hh")
-          .repartition(w, col("h"), col("salt"))
-        val lvl1 = g.groupBy(col("h"), col("salt"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-        val tagged = lvl1.join(hotSet, hex(col("h")) === col("hh"), "left")
-        val lightB = tagged.filter(col("hh").isNull && col("df") >= minDf)
+        val (g, hotSet) = saltHotGrams(sdGrams(toks, L), hot, w, col("doc_id"))
+        val (lightCells, hotCells) = hotSplit(g.groupBy(col("h"), col("salt"))
+          .agg(countDistinct(col("doc_id")).as("df")), hotSet)
+        val lightB = lightCells.filter(col("df") >= minDf)
           .select(col("h"), col("salt"), lit(1L).as("b"))
-        val hotB = broadcast(tagged.filter(col("hh").isNotNull)
-          .groupBy(col("h")).agg(sum(col("df")).as("df"))
+        val hotB = broadcast(hotCells.groupBy(col("h")).agg(sum(col("df")).as("df"))
           .filter(col("df") >= minDf)
           .select(col("h"), lit(1L).as("hb")))
         g.join(lightB.hint("SHUFFLE_HASH"), Seq("h", "salt"), "left")
@@ -804,7 +795,7 @@ object Curation {
     * (LBFS) uses 48-byte Rabin windows and 2–8 KB targets; a 2-token
     * window with D = 8 puts ~5 boundaries in the synthetic ~40-token
     * docs so the operator and its robustness law actually exercise. */
-  private val CdcDivisor = 8
+  private[graft] val CdcDivisor = 8
 
   /** q154: content-defined chunking (Muthitacharoen, Chen & Mazières,
     * LBFS, SOSP 2001; the FastCDC lineage) — the insertion-robust
@@ -845,25 +836,16 @@ object Curation {
     * heavy-hitter guard (see [[cdcChunksOf]]) detects hot fps on a 2%
     * sample, takes their exact counts from one pruned broadcast
     * aggregation, salts their rows across the full exchange width, and
-    * windows only the light tail. */
+    * windows only the light tail. `hotMinOcc` is the guard mode of
+    * [[cdcChunksOf]]; q189 forces it at 2, so every duplicated
+    * fingerprint takes the broadcast-count path at every test scale. */
   def cdcChunks(spark: SparkSession, dir: String,
-                d: Int = CdcDivisor): DataFrame =
-    cdcChunksOf(Tables.documents(spark, dir), d,
-      streamWidth(spark, dir, CdcBytesPerInputByte))
+                d: Int = CdcDivisor, hotMinOcc: Long = 0L): DataFrame =
+    cdcChunksOf(Tables.documents(spark, dir), d, cdcWidth(spark, dir), hotMinOcc)
 
-  /** q189: [[cdcChunks]] with the heavy-hitter guard FORCED — exact
-    * detection (sampleFraction = 1) at hotMinOcc = 2, so every
-    * duplicated fingerprint takes the broadcast-count path and every
-    * unique one the window path. Semantically identical to q154 (same
-    * DuckDB oracle); exists so the guard's salted-exchange shape is
-    * exercised and oracle-gated at every test scale instead of only
-    * engaging past the ~1 GB corpus boundary where the auto guard
-    * turns on. */
-  def cdcChunksHot(spark: SparkSession, dir: String,
-                   d: Int = CdcDivisor): DataFrame =
-    cdcChunksOf(Tables.documents(spark, dir), d,
-      streamWidth(spark, dir, CdcBytesPerInputByte),
-      hotMinOcc = 2L, sampleFraction = 1.0)
+  /** q154's corpus-proportional fp-exchange width, read from `dir`. */
+  private[graft] def cdcWidth(spark: SparkSession, dir: String): Int =
+    streamWidth(spark, dir, CdcBytesPerInputByte)
 
   /** ~bytes per CDC chunk row in the fp exchange (32-char hex fp —
     * part of the output schema — plus ids/spans and UnsafeRow
@@ -924,7 +906,7 @@ object Curation {
     * The miss probability decays geometrically in the straggler a miss
     * would cause, and exactness is never at stake: an undetected key's
     * rows stay unsalted, so its window/aggregate count is complete.
-    * `sampleFraction = 1` (the forced q189–q193 gates) counts every
+    * Forced mode ([[hotKeysFor]], the q189–q193 gates) counts every
     * doc — detection is exact at `hotMin`. */
   private[graft] def detectHotKeys(docs: DataFrame,
                                    keyStreamOf: DataFrame => DataFrame,
@@ -1005,34 +987,24 @@ object Curation {
     * outgrown the session width (w > session partitions, i.e. the
     * corpus-proportional regime where a hot fp is a straggler rather
     * than a ≤ 1-partition blip) on more than one core
-    * ([[guardEngages]]); > 0 = engage at that threshold with
-    * the given `sampleFraction` (1.0 = exact detection, the q189
-    * gate); < 0 = guard OFF, the pure r18 window shape (the skew
-    * probe's BEFORE arm). Detection, its mega-doc screen, and the
-    * honest miss bound live at [[detectHotKeys]]; the detect/no-detect
+    * ([[guardEngages]]); > 0 = FORCED, engage at that threshold with
+    * exact detection (the q189 gate); < 0 = guard OFF, the pure r18
+    * window shape (the skew probe's BEFORE arm). The mode resolves at
+    * [[hotKeysFor]]; detection, its mega-doc screen, and the honest
+    * miss bound live at [[detectHotKeys]]; the detect/no-detect
     * boundary and the guarded≡unguarded differential are spec laws
     * (CurationOpsSpec "exact threshold boundary" / "mega-doc screen"). */
   private[graft] def cdcChunksOf(docs: DataFrame, d: Int,
                                  width: Int = 0,
-                                 hotMinOcc: Long = 0L,
-                                 sampleFraction: Double = CdcHotSampleFraction): DataFrame = {
+                                 hotMinOcc: Long = 0L): DataFrame = {
     require(d > 0, "divisor must be positive")
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0,
-      s"sampleFraction must be in (0, 1], got $sampleFraction")
-    val sessionParts =
-      docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val w = if (width > 0) width else sessionParts
+    val w = if (width > 0) width
+      else docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val chunks = cdcChunkStream(docs, d)
-    // ---- heavy-hitter detection (r19, VERDICT r18 item 1; r20 adds
-    // the mega-doc screen + honest miss bound — see detectHotKeys) ----
-    val guardOn = guardEngages(hotMinOcc, w, sessionParts,
-      docs.sparkSession.sparkContext.defaultParallelism)
-    val hotFps: Array[String] =
-      if (!guardOn) Array.empty
-      else detectHotKeys(docs,
-        s => cdcChunkStream(s, d).select(col("chunk_fp").as("k")),
-        if (hotMinOcc > 0L) hotMinOcc else CdcHotMinOccAuto,
-        sampleFraction, "fingerprint")
+    // heavy-hitter detection (r19, VERDICT r18 item 1; r20 adds the
+    // mega-doc screen + honest miss bound — see detectHotKeys)
+    val hotFps = hotKeysFor(docs, w, hotMinOcc, CdcHotMinOccAuto, "fingerprint")(
+      s => cdcChunkStream(s, d).select(col("chunk_fp").as("k")))
     if (hotFps.isEmpty) {
       // the measured r18 single-exchange shape, verbatim: occurrence
       // count as a window over the width-bounded exchange — deliberately

@@ -483,8 +483,7 @@ class CurationOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getString(4), r.getLong(5))).sortBy(t => (t._1, t._2))
     val guardOff = Curation.cdcChunksOf(docs, 8, hotMinOcc = -1L)
-    val guarded = Curation.cdcChunksOf(docs, 8, hotMinOcc = 2L,
-      sampleFraction = 1.0)
+    val guarded = Curation.cdcChunksOf(docs, 8, hotMinOcc = 2L)
     // the guard actually engaged: hot counts broadcast back, rows salted
     val p = guarded.queryExecution.executedPlan.toString()
     assert(p.contains("BroadcastHashJoin") && p.contains("salt"),
@@ -509,10 +508,8 @@ class CurationOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val hotCount = Curation.cdcChunksOf(docs, 8, hotMinOcc = -1L)
       .collect().map(_.getLong(5)).max
-    val atBoundary = Curation.cdcChunksOf(docs, 8,
-      hotMinOcc = hotCount, sampleFraction = 1.0)
-    val aboveBoundary = Curation.cdcChunksOf(docs, 8,
-      hotMinOcc = hotCount + 1L, sampleFraction = 1.0)
+    val atBoundary = Curation.cdcChunksOf(docs, 8, hotMinOcc = hotCount)
+    val aboveBoundary = Curation.cdcChunksOf(docs, 8, hotMinOcc = hotCount + 1L)
     assert(atBoundary.queryExecution.executedPlan.toString().contains("salt"),
       "a fp AT the threshold must engage the guard (detection is >= hotMin)")
     assert(!aboveBoundary.queryExecution.executedPlan.toString().contains("salt"),
@@ -591,9 +588,9 @@ class CurationOpsSpec extends SparkSpec {
     val dir = hotGramDir
     for ((off, on) <- Seq(
       (Curation.substringDedup(spark, dir, 8, hotMinOcc = -1L),
-        Curation.substringDedup(spark, dir, 8, hotMinOcc = 3L, sampleFraction = 1.0)),
+        Curation.substringDedup(spark, dir, 8, hotMinOcc = 3L)),
       (Curation.substringDedupApply(spark, dir, 8, hotMinOcc = -1L),
-        Curation.substringDedupApply(spark, dir, 8, hotMinOcc = 3L, sampleFraction = 1.0)))) {
+        Curation.substringDedupApply(spark, dir, 8, hotMinOcc = 3L)))) {
       val p = on.queryExecution.executedPlan.toString()
       assert(p.contains("salt"), s"forced guard must salt the gram exchange:\n$p")
       assertSameRows(off, on)
@@ -601,8 +598,7 @@ class CurationOpsSpec extends SparkSpec {
     // the light-dup path really carries rows: the 2-doc shared passage
     // is duplicated (so its docs report dup_tok > 0) but sits below the
     // forced threshold 3, i.e. it took the UNSALTED (h, 0) cells
-    val dup = Curation.substringDedup(spark, dir, 8, hotMinOcc = 3L,
-      sampleFraction = 1.0).collect()
+    val dup = Curation.substringDedup(spark, dir, 8, hotMinOcc = 3L).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toMap
     assert(dup(300L) > 0L && dup(301L) > 0L,
       "the below-threshold duplicated passage must still be accounted")
@@ -614,9 +610,9 @@ class CurationOpsSpec extends SparkSpec {
     val dir = hotGramDir
     for ((off, on) <- Seq(
       (Curation.boilerplateDetect(spark, dir, 5, 3L, hotMinOcc = -1L),
-        Curation.boilerplateDetect(spark, dir, 5, 3L, hotMinOcc = 3L, sampleFraction = 1.0)),
+        Curation.boilerplateDetect(spark, dir, 5, 3L, hotMinOcc = 3L)),
       (Curation.boilerplateApply(spark, dir, 5, 3L, hotMinOcc = -1L),
-        Curation.boilerplateApply(spark, dir, 5, 3L, hotMinOcc = 3L, sampleFraction = 1.0)))) {
+        Curation.boilerplateApply(spark, dir, 5, 3L, hotMinOcc = 3L)))) {
       val p = on.queryExecution.executedPlan.toString()
       assert(p.contains("salt"), s"forced guard must salt the gram exchange:\n$p")
       assertSameRows(off, on)
@@ -625,8 +621,7 @@ class CurationOpsSpec extends SparkSpec {
     // grams occur TWICE per doc across 200 docs — a (doc,pos)-keyed
     // salt would double-count distinct docs across cells; the guarded
     // df must equal the exact 200
-    val det = Curation.boilerplateDetect(spark, dir, 5, 3L,
-      hotMinOcc = 3L, sampleFraction = 1.0).collect()
+    val det = Curation.boilerplateDetect(spark, dir, 5, 3L, hotMinOcc = 3L).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(det.nonEmpty, "planted corpus must surface boilerplate grams")
     val hotRows = det.filter(_._3 >= 400L) // tf = 200 docs x 2 repeats
@@ -661,8 +656,7 @@ class CurationOpsSpec extends SparkSpec {
         s"into different cells at width $w — adjust the planted doc ids " +
         "if the salt formula changed")
     val off = Curation.substringDedup(spark, dir, 8, hotMinOcc = -1L)
-    val on = Curation.substringDedup(spark, dir, 8, hotMinOcc = 2L,
-      sampleFraction = 1.0)
+    val on = Curation.substringDedup(spark, dir, 8, hotMinOcc = 2L)
     assert(on.queryExecution.executedPlan.toString().contains("salt"),
       "threshold-2 guard must engage on the planted corpus")
     assertSameRows(off, on)

@@ -804,14 +804,24 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("q133/q146 default plans carry NO salt — the guard is dormant below the width boundary (r20)") {
-    // the guard must not tax the uniform-corpus plan: at the test scale
-    // the auto guard is off (width == session parts), so the default
-    // plan is the measured r17/r18 shape verbatim
-    Seq("q133_substring_dedup", "q138_substring_apply",
-      "q146_boilerplate", "q147_boilerplate_apply").foreach { name =>
-      val p = plan(q(name))
-      assert(!p.contains("salt"), s"$name default plan must be unsalted:\n$p")
+  test("guard twins: each *_hot query plans salt, its default twin none (sf0.001, sf0.01)") {
+    // the forced twins must exercise the guarded branch at every test
+    // scale, and the guard must not tax the uniform-corpus plan: at these
+    // scales the auto guard is off (width == session parts), so each
+    // default plan is the measured r17/r18 shape verbatim
+    val twins = Seq(
+      "q189_cdc_chunks_hot" -> "q154_cdc_chunks",
+      "q190_substring_dedup_hot" -> "q133_substring_dedup",
+      "q191_substring_apply_hot" -> "q138_substring_apply",
+      "q192_boilerplate_hot" -> "q146_boilerplate",
+      "q193_boilerplate_apply_hot" -> "q147_boilerplate_apply")
+    assert(twins.map(_._1).toSet == SparkEntry.queries.keySet.filter(_.endsWith("_hot")),
+      "every *_hot entry needs its default twin in this table")
+    for (dir <- Seq(sf, sf.stripSuffix("sf0.001") + "sf0.01"); (hot, default) <- twins) {
+      val ph = plan(SparkEntry.queries(hot)(spark, dir))
+      assert(ph.contains("salt"), s"$hot must take the salted guard path at $dir:\n$ph")
+      val pd = plan(SparkEntry.queries(default)(spark, dir))
+      assert(!pd.contains("salt"), s"$default default plan must be unsalted at $dir:\n$pd")
     }
   }
 

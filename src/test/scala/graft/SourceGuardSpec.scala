@@ -14,7 +14,9 @@ import scala.jdk.CollectionConverters._
   * registers its own listener or polls the async listener bus with
   * sleeps. Running a streaming query is `StreamingEvents.drain`, which
   * drops the memory sink's temp view, and its sources read the cached
-  * footer schema, so stream sources and writers live in one file. */
+  * footer schema, so stream sources and writers live in one file. The
+  * hot-key guards salt in two places, the gram family's `saltHotGrams`
+  * and the CDC hot path, and detect through one resolver, `hotKeysFor`. */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** `file:line: pattern` for each banned pattern in src/main/scala
@@ -59,5 +61,15 @@ class SourceGuardSpec extends AnyFunSuite {
     val home = Paths.get("src/main/scala/graft/streaming/StreamingEvents.scala")
     val writers = "writeStream".r.findAllIn(Files.readString(home)).size
     assert(writers == 1, s"writeStream appears $writers times in $home: the one runner is drain")
+  }
+
+  test("salt columns appear twice and detectHotKeys is called once, all in Curation.scala") {
+    val salts = hits(Seq("withColumn(\"salt\""), "")
+    assert(salts.size == 2 && salts.forall(_.startsWith("graft/ops/Curation.scala:")),
+      "salt gram streams with saltHotGrams; only the CDC hot path salts on its own:\n" + salts.mkString("\n"))
+    def at(pattern: String) = hits(Seq(pattern), "").map(_.stripSuffix(s": $pattern")).toSet
+    val calls = at("detectHotKeys(") -- at("def detectHotKeys(")
+    assert(calls.size == 1 && calls.forall(_.startsWith("graft/ops/Curation.scala:")),
+      "resolve hot keys with hotKeysFor, the one detection call:\n" + calls.mkString("\n"))
   }
 }

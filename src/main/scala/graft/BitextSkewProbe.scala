@@ -30,50 +30,42 @@ object BitextSkewProbe {
     val outFile = if (args.length > 1) args(1) else "BITEXT_SKEW.json"
     val spark = Harness.session("32")
     import ops.TextAnalysis._
-    graft.functions.VectorExprs.register(spark)
-    val hv = hashVecOf(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = hv.withColumn("n2", expr("dot_long(v, v)")).filter(col("n2") > 0)
-    val n = w.count()
-    val r = bitextBandBits(n)
-    val cap = bitextBucketCap(n)
-    val (nn, s) = bitextStats(w)
-    val wb = bitextBanded(w, r, nn, s)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the partition count the miner's scoped floor would run the band
-    // joins at
-    val parts = math.max(bitextPartitionFloor(n), Harness.cpus(spark))
-    val bandCols = (0 until BitextBands).map(b =>
-      struct(lit(b).as("band"), col("bb").getItem(b).as("bv")))
-    def sideCounts(langPred: org.apache.spark.sql.Column, name: String) =
-      wb.filter(langPred)
-        .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-        .groupBy(col("bk.band").as("band"), col("bk.bv").as("bv"))
-        .agg(count(lit(1)).as(name))
-    val en = sideCounts(col("lang") === "en", "cb")
-    val tb = sideCounts(col("lang") =!= "en", "ct")
-    // capped English population per bucket: the md5 thin keeps docs
-    // whose residue mod cb lands under cap — expected kept = min(cb,
-    // cap) (uniform residues; the exact count is binomial around it).
-    // min(cb, cap) is the right model for a mass-balance diagnostic —
-    // candidate MASS per bucket ≈ ct · min(cb, cap)
-    val perBucket = tb.join(en, Seq("band", "bv"))
-      .withColumn("ce", least(col("cb"), lit(cap.toLong)))
-      .withColumn("cand", col("ct") * col("ce"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val perPart = perBucket
-      .withColumn("part", pmod(hash(col("band"), col("bv")), lit(parts)))
-      .groupBy(col("part")).agg(sum(col("cand")).as("mass"))
-      .collect().map(_.getLong(1)).sorted
-    val top = perBucket.orderBy(desc("cand")).limit(8).collect().map { row =>
-      s"""{"band":${row.getInt(0)},"bv":${row.getLong(1)},"ct":${row.getLong(2)},"cb":${row.getLong(3)},"cand":${row.getLong(5)}}"""
-    }
-    val total = perPart.sum
-    val med = if (perPart.isEmpty) 0L else perPart(perPart.length / 2)
-    val mx = if (perPart.isEmpty) 0L else perPart.last
-    val ratio = if (med > 0) mx.toDouble / med else 0.0
-    val json =
+    val json = withBitextFrames(spark, sfDir) { (_, wb, n, r) =>
+      val cap = bitextBucketCap(n)
+      // the partition count the miner's scoped floor would run the band
+      // joins at
+      val parts = math.max(bitextPartitionFloor(n), Harness.cpus(spark))
+      val bandCols = (0 until BitextBands).map(b =>
+        struct(lit(b).as("band"), col("bb").getItem(b).as("bv")))
+      def sideCounts(langPred: org.apache.spark.sql.Column, name: String) =
+        wb.filter(langPred)
+          .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
+          .groupBy(col("bk.band").as("band"), col("bk.bv").as("bv"))
+          .agg(count(lit(1)).as(name))
+      val en = sideCounts(col("lang") === "en", "cb")
+      val tb = sideCounts(col("lang") =!= "en", "ct")
+      // capped English population per bucket: the md5 thin keeps docs
+      // whose residue mod cb lands under cap — expected kept = min(cb,
+      // cap) (uniform residues; the exact count is binomial around it).
+      // min(cb, cap) is the right model for a mass-balance diagnostic —
+      // candidate MASS per bucket ≈ ct · min(cb, cap)
+      val (perPart, top) = ops.Materialize.shared(tb.join(en, Seq("band", "bv"))
+        .withColumn("ce", least(col("cb"), lit(cap.toLong)))
+        .withColumn("cand", col("ct") * col("ce"))) { perBucket =>
+        (perBucket
+          .withColumn("part", pmod(hash(col("band"), col("bv")), lit(parts)))
+          .groupBy(col("part")).agg(sum(col("cand")).as("mass"))
+          .collect().map(_.getLong(1)).sorted,
+          perBucket.orderBy(desc("cand")).limit(8).collect().map { row =>
+            s"""{"band":${row.getInt(0)},"bv":${row.getLong(1)},"ct":${row.getLong(2)},"cb":${row.getLong(3)},"cand":${row.getLong(5)}}"""
+          })
+      }
+      val total = perPart.sum
+      val med = if (perPart.isEmpty) 0L else perPart(perPart.length / 2)
+      val mx = if (perPart.isEmpty) 0L else perPart.last
+      val ratio = if (med > 0) mx.toDouble / med else 0.0
       f"""{"metric":"bitext_skew_probe","sf":"$sfDir","n":$n,"r":$r,"cap":$cap,"parts":$parts,"occupied_parts":${perPart.length},"cand_total":$total,"cand_max_partition":$mx,"cand_med_partition":$med,"part_max_over_med":$ratio%.3f,"top_buckets":[${top.mkString(",")}],"loadavg":${Harness.loadAvg()}}"""
+    }
     Harness.emit(outFile, json)
     spark.stop()
   }

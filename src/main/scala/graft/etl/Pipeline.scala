@@ -95,22 +95,19 @@ object Pipeline {
     * MERGE action. */
   def moviePipeline(spark: SparkSession, dir: String): DataFrame = {
     // the merged frame feeds five plan branches (edges→ids via an RDD
-    // job, the edges join side, both MERGE sides) — persist it once, and
-    // release it after the eager materialization of the (small) result,
-    // the same leak-free diamond lifecycle as the dedup family
-    val merged = listWithDetails(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = roleEdges(merged)
-    val ids = Normalize.surrogateIdsFor(edges.select("name").distinct())
-    val movies = moviesMerge(existingSeed(merged), merged)
-    val out = edges
-      .join(broadcast(ids), "name")
-      .join(movies.select(col("p_partkey"), col("imdb_score"), col("op")), "p_partkey")
-      .select(col("p_partkey"), col("role"), col("name"), col("name_id"),
-        col("imdb_score"), col("op"))
-      .localCheckpoint(true)
-    merged.unpersist(false)
-    out
+    // job, the edges join side, both MERGE sides), so it is shared for
+    // the call and released once the (small) result is checkpointed
+    graft.ops.Materialize.shared(listWithDetails(spark, dir)) { merged =>
+      val edges = roleEdges(merged)
+      val ids = Normalize.surrogateIdsFor(edges.select("name").distinct())
+      val movies = moviesMerge(existingSeed(merged), merged)
+      edges
+        .join(broadcast(ids), "name")
+        .join(movies.select(col("p_partkey"), col("imdb_score"), col("op")), "p_partkey")
+        .select(col("p_partkey"), col("role"), col("name"), col("name_id"),
+          col("imdb_score"), col("op"))
+        .localCheckpoint(true)
+    }
   }
 
   val oracle: Map[String, String] = Map(

@@ -3,7 +3,6 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Document deduplication for training-data pipelines: exact, exact-jaccard
   * over shingle sets (inverted index), MinHash-LSH (approximate scale
@@ -24,7 +23,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  /** Candidate-doc ids above this stop broadcasting in verifyJaccard
+  /** Candidate-doc ids above this stop broadcasting in verifyPairs
     * (~4M longs ≈ 32 MB serialized — well inside executor broadcast
     * budgets; beyond it the semi-join shuffles instead of failing). */
   private val MaxBroadcastCandDocs = 4L << 20
@@ -194,7 +193,7 @@ object Dedup {
          |  16, 10) AS BIGINT) % $mod = 0""".stripMargin))
   }
 
-  private def agreementOf(spark: SparkSession, docs: DataFrame): DataFrame = {
+  private def agreementOf(spark: SparkSession, docs: DataFrame): DataFrame =
     // ONE corpus scan+normalize+tokenize pass feeds ALL THREE legs (r22,
     // VERDICT r21 item 6): the persisted token-array frame is read twice
     // (shingle-index build; simhash tokenizer) and the shingle index
@@ -202,69 +201,62 @@ object Dedup {
     // r21 sharing). Before r22 the simhash leg re-scanned and
     // re-normalized the corpus on its own — at 100 TB, a third full
     // regexp_replace+split pass per audit invocation.
-    val toks = tokensOf(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val sh = shinglesOfToks(toks).persist(StorageLevel.MEMORY_AND_DISK)
-    val truth = jaccardNearDupOn(sh).select(col("a_id"), col("b_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the truth count enters as a LITERAL: one count job over the pair
-    // sliver (which also warms its cache for the two semi-joins below)
-    // instead of a 1-row BroadcastExchange + crossJoin in the final plan
-    val nTrue = truth.count()
-    def leg(name: String, pairs0: DataFrame): DataFrame = {
-      // n_pairs is observed by the leg's checkpoint — no second agg +
-      // broadcast crossJoin over the sliver the checkpoint just wrote
-      val (pairs, stats) = Materialize.sliver(pairs0.select(col("a_id"), col("b_id")))(
-        count(lit(1)).as("n"))
-      val nPairs = stats.getLong(0)
-      pairs.join(truth, Seq("a_id", "b_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .select(lit(name).as("method"), lit(nPairs).as("n_pairs"), col("n_hit"))
+    Materialize.shared(tokensOf(docs)) { toks =>
+      Materialize.shared(shinglesOfToks(toks)) { sh =>
+        Materialize.shared(jaccardNearDupOn(sh).select(col("a_id"), col("b_id"))) { truth =>
+          // the truth count enters as a LITERAL: one count job over the pair
+          // sliver (which also warms its cache for the two semi-joins below)
+          // instead of a 1-row BroadcastExchange + crossJoin in the final plan
+          val nTrue = truth.count()
+          def leg(name: String, pairs0: DataFrame): DataFrame = {
+            // n_pairs is observed by the leg's checkpoint — no second agg +
+            // broadcast crossJoin over the sliver the checkpoint just wrote
+            val (pairs, stats) = Materialize.sliver(pairs0.select(col("a_id"), col("b_id")))(
+              count(lit(1)).as("n"))
+            val nPairs = stats.getLong(0)
+            pairs.join(truth, Seq("a_id", "b_id"), "left_semi")
+              .agg(count(lit(1)).as("n_hit"))
+              .select(lit(name).as("method"), lit(nPairs).as("n_pairs"), col("n_hit"))
+          }
+          // degenerate-denominator guard: a sampled audit (q188) can leave a
+          // leg with zero pairs; Spark's double 0/0 is NaN while the oracle
+          // engine NULLs on division by zero — emit null on both engines
+          leg("minhash", minhashLshOn(sh))
+            .unionAll(leg("simhash", simhashNearDupOnToks(toks)))
+            .select(col("method"), col("n_pairs"), lit(nTrue).as("n_true"), col("n_hit"),
+              when(col("n_pairs") > 0,
+                round(col("n_hit").cast("double") / col("n_pairs"), 6)).as("prec"),
+              when(lit(nTrue) > 0,
+                round(col("n_hit").cast("double") / lit(nTrue), 6)).as("rec"))
+            .localCheckpoint(true)
+        }
+      }
     }
-    // degenerate-denominator guard: a sampled audit (q188) can leave a
-    // leg with zero pairs; Spark's double 0/0 is NaN while the oracle
-    // engine NULLs on division by zero — emit null on both engines
-    val out = leg("minhash", minhashLshOn(sh))
-      .unionAll(leg("simhash", simhashNearDupOnToks(toks)))
-      .select(col("method"), col("n_pairs"), lit(nTrue).as("n_true"), col("n_hit"),
-        when(col("n_pairs") > 0,
-          round(col("n_hit").cast("double") / col("n_pairs"), 6)).as("prec"),
-        when(lit(nTrue) > 0,
-          round(col("n_hit").cast("double") / lit(nTrue), 6)).as("rec"))
-      .localCheckpoint(true)
-    truth.unpersist(false)
-    sh.unpersist(false)
-    toks.unpersist(false)
-    out
-  }
 
-  /** Exact-jaccard scoring of a candidate (a_id, b_id) pair set: each
-    * doc's shingle set collapses once to a SORTED array of 60-bit
-    * md5-derived hashes (one shuffle), candidates join to the two arrays,
-    * and |A∩B| comes from the codegen'd sorted_intersect_count merge —
-    * O(|a|+|b|) per pair with no row blowup, where the relational form
-    * (explode + equi-join + count) shuffles |a|+|b| ROWS per candidate
-    * pair. Hash collisions are ~n²/2^60 (and the exact-string DuckDB
-    * oracle would catch one). Shared by the exact (q22) and LSH (q23)
-    * variants — only candidate *enumeration* differs; scores are exact. */
-  /** Shared verify-stage scaffolding: materialize the candidate pair
-    * set, restrict the shingle index to candidate docs (filter-first),
-    * and collapse each doc to its sorted 60-bit hash array. Returns the
-    * materialized pairs, the persisted array index (caller unpersists),
-    * and the candidate-doc count that sizes the broadcast guards
-    * ([[verifySizing]]). */
-  private def candidateArrays(cand: DataFrame,
-                              sh: DataFrame): (DataFrame, DataFrame, Long) = {
+  /** Exact scoring of a candidate (a_id, b_id) pair set — the one
+    * verify tail of q22/q23/q91 (Jaccard) and q119 (containment); only
+    * candidate *enumeration* differs and scores are exact. The pair set
+    * is materialized once (it feeds the join AND the filter-first doc
+    * restriction, and for q22 it hangs off an expensive prefix self-join
+    * we must not replay per branch). Only docs that appear in some pair
+    * collapse to a SORTED array of 60-bit md5-derived shingle hashes
+    * (one shuffle over a sliver of the index), candidates join to the
+    * two arrays, and `inter` = |A∩B| comes from the codegen'd
+    * sorted_intersect_count merge — O(|a|+|b|) per pair with no row
+    * blowup, where the relational form (explode + equi-join + count)
+    * shuffles |a|+|b| ROWS per candidate pair. Hash collisions are
+    * ~n²/2^60 (and the exact-string DuckDB oracle would catch one).
+    * `score` over (inter, sz_a, sz_b) lands in column `name` and keeps
+    * pairs at ≥ `threshold`. */
+  private def verifyPairs(cand: DataFrame, sh: DataFrame, threshold: Double,
+                          name: String, score: Column): DataFrame = {
     graft.functions.VectorExprs.register(sh.sparkSession)
-    // materialize the (small) candidate pair set once — it feeds the join
-    // AND the filter-first doc restriction below, and for q22 it hangs off
-    // an expensive prefix self-join we must not replay per branch. The
-    // checkpoint's own job observes the pair count.
+    // the checkpoint's own job observes the pair count
     val (pairs, stats) = Materialize.sliver(cand)(count(lit(1)).as("n"))
-    // filter-first: only docs that appear in some candidate pair need
-    // their sorted hash array. Candidate docs are a small fraction of the
-    // corpus (near-dup rate, not corpus size), so the collect_list
-    // aggregate — the expensive step here — runs over a sliver of the
-    // shingle index instead of all of it. The restriction broadcasts.
+    // candidate docs are a small fraction of the corpus (near-dup rate,
+    // not corpus size), so the collect_list aggregate — the expensive
+    // step here — runs over a sliver of the shingle index. The
+    // restriction broadcasts.
     val candDocs = pairs.select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .distinct()
     // a pathological corpus / low threshold where the candidate set
@@ -273,13 +265,28 @@ object Dedup {
     val nCandDocs = verifySizing(stats.getLong(0), candDocs.count())
     val restrict =
       if (nCandDocs <= MaxBroadcastCandDocs) broadcast(candDocs) else candDocs
-    val arrays = sh.join(restrict, Seq("doc_id"), "left_semi")
+    Materialize.shared(sh.join(restrict, Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         expr("CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)").as("h"))
       .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("h"))).as("arr"), count(lit(1)).as("sz"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (pairs, arrays, nCandDocs)
+      .agg(sort_array(collect_list(col("h"))).as("arr"), count(lit(1)).as("sz"))) { arrays =>
+      // the array index is doc-count-sized; the candidate PAIR set is the
+      // big side (it grows with near-dup density, quadratically in cluster
+      // sizes). Broadcasting the index keeps the pair set from shuffling
+      // through two sort-merge joins — the default 10 MB autoBroadcast
+      // threshold refuses exactly where it matters most.
+      def side(p: String): DataFrame = {
+        val s = arrays.select(col("doc_id").as(s"${p}_id"), col("arr").as(s"arr_$p"),
+          col("sz").as(s"sz_$p"))
+        if (nCandDocs <= MaxBroadcastArrayDocs) broadcast(s) else s
+      }
+      pairs.join(side("a"), "a_id").join(side("b"), "b_id")
+        .withColumn("inter", expr("sorted_intersect_count(arr_a, arr_b)"))
+        .withColumn(name, score)
+        .filter(col(name) >= threshold)
+        .select(col("a_id"), col("b_id"), col(name))
+        .localCheckpoint(true)
+    }
   }
 
   /** The candidate-doc count the verify broadcast guards compare: `2 ×
@@ -290,34 +297,33 @@ object Dedup {
   private[graft] def verifySizing(nPairs: Long, exactDocs: => Long): Long =
     if (2 * nPairs <= MaxBroadcastArrayDocs) 2 * nPairs else exactDocs
 
-  private def verifyJaccard(cand: DataFrame, sh: DataFrame,
-                            threshold: Double): DataFrame = {
-    val (pairs, arrays, nCandDocs) = candidateArrays(cand, sh)
-    // the array index is doc-count-sized; the candidate PAIR set is the
-    // big side (it grows with near-dup density, quadratically in cluster
-    // sizes). Broadcasting the index keeps the pair set from shuffling
-    // through two sort-merge joins — the default 10 MB autoBroadcast
-    // threshold refuses exactly where it matters most.
-    val hintA = arrays.select(col("doc_id").as("a_id"), col("arr").as("arr_a"),
-      col("sz").as("sz_a"))
-    val hintB = arrays.select(col("doc_id").as("b_id"), col("arr").as("arr_b"),
-      col("sz").as("sz_b"))
-    // eager localCheckpoint materializes the (tiny) verified pair set so the
-    // cached shingle-array index can be released before returning — a
-    // long-lived session (the 100 TB curation-service shape) must not leak
-    // one corpus-sized cache per invocation
-    val out = pairs
-      .join(if (nCandDocs <= MaxBroadcastArrayDocs) broadcast(hintA) else hintA, "a_id")
-      .join(if (nCandDocs <= MaxBroadcastArrayDocs) broadcast(hintB) else hintB, "b_id")
-      .withColumn("inter", expr("sorted_intersect_count(arr_a, arr_b)"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
-      .localCheckpoint(true)
-    arrays.unpersist(false)
-    out
+  private def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
+    verifyPairs(cand, sh, threshold, "jaccard",
+      col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+
+  /** Each doc's shingles ranked in ONE global (ascending document
+    * frequency, shingle) order: `rk` is the position, `sz` the doc's
+    * shingle count — the index every prefix filter (q22, q91, q119)
+    * slices. shuffle_hash beats the default sort-merge for the df join:
+    * both sides shuffle on shingle anyway, and hashing the (vocab-sized)
+    * df side skips two full sorts. The build side stays bounded per
+    * partition as long as partition count scales with the corpus (the
+    * prefix SELF-joins deliberately keep SMJ — their two sides share one
+    * exchange+sort via ReuseExchange, which a hash build would break;
+    * measured 2× slower). */
+  private def rankedShingles(sh: DataFrame): DataFrame = {
+    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
+    sh.join(dfreq.hint("shuffle_hash"), "shingle")
+      .withColumn("rk", row_number().over(w.orderBy(col("df"), col("shingle"))))
+      .withColumn("sz", count(lit(1)).over(w))
   }
+
+  /** The Bayardo prefix: the first sz − ⌈t·sz⌉ + 1 ranked shingles
+    * (conservative epsilon: a longer prefix can only ADD candidates for
+    * the verifier to reject). */
+  private def inPrefix(t: Double): Column =
+    col("rk") <= col("sz") - expr(s"CAST(ceil(sz * $t - 1e-9) AS BIGINT)") + 1
 
   /** Exact n-gram (3-shingle) Jaccard near-dup pairs, j ≥ `threshold`,
     * via prefix filtering (Bayardo et al., "Scaling Up All Pairs
@@ -351,62 +357,41 @@ object Dedup {
     * are lossless for ANY consistent order and verification is exact,
     * so restricting the input restricts the OUTPUT exactly. */
   private[graft] def jaccardNearDupOf(docs: DataFrame,
-                                      threshold: Double = 0.5): DataFrame = {
+                                      threshold: Double = 0.5): DataFrame =
     // the shingle index feeds candidate enumeration AND verification —
     // persist it once instead of re-exploding the corpus per use (the
     // standard candidate/verify diamond; spills to disk at scale)
-    val sh = shinglesOf(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val out = jaccardNearDupOn(sh, threshold) // eager — safe to release sh
-    sh.unpersist(false)
-    out
-  }
+    Materialize.shared(shinglesOf(docs))(jaccardNearDupOn(_, threshold))
 
-  /** q22 over a PRE-BUILT (and caller-persisted) shingle index — the
-    * seam that lets the agreement audits (q182/q188) share ONE corpus
-    * shingle pass between the exact-truth leg and the minhash leg
-    * instead of each building an identical index (r21). Returns eagerly
-    * materialized; the caller owns `sh`'s lifecycle. */
+  /** q22 over a PRE-BUILT shingle index whose scope the caller owns —
+    * the seam that lets the agreement audits (q182/q188) share ONE
+    * corpus shingle pass between the exact-truth leg and the minhash
+    * leg instead of each building an identical index (r21). */
   private def jaccardNearDupOn(sh: DataFrame,
                                threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     val t = threshold
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    // shuffle_hash beats the default sort-merge here: both sides shuffle
-    // on shingle anyway, and hashing the (vocab-sized) df side skips two
-    // full sorts. The build side stays bounded per partition as long as
-    // partition count scales with the corpus (the prefix SELF-join below
-    // deliberately keeps SMJ — its two sides share one exchange+sort via
-    // ReuseExchange, which a hash build would break; measured 2× slower).
-    val ranked = sh.join(dfreq.hint("shuffle_hash"), "shingle")
-      .withColumn("rk", row_number().over(w.orderBy(col("df"), col("shingle"))))
-      .withColumn("sz", count(lit(1)).over(w))
     // self-joined below; the df-join + per-doc rank window would otherwise
     // run twice (broadcast join defeats exchange reuse)
-    val pref = ranked
-      .filter(col("rk") <= col("sz") - expr(s"CAST(ceil(sz * $t - 1e-9) AS BIGINT)") + 1)
-      .select(col("doc_id"), col("shingle"), col("sz"), col("rk"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // positional filter (PPJoin): ranks follow ONE global (df, shingle)
-    // order, so the first shared prefix shingle attains min(rk) on both
-    // sides simultaneously, and total overlap ≤ 1 + min(remaining
-    // suffix lengths). j ≥ t ⟺ overlap ≥ t/(1+t)·(sz_a+sz_b), so pairs
-    // whose bound can't reach that are pruned EXACTLY.
-    val cand = pref.as("a").join(pref.as("b"), Seq("shingle"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .filter(least(col("a.sz"), col("b.sz")).cast("double")
-        >= greatest(col("a.sz"), col("b.sz")) * t - 1e-9)
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .agg(min(col("a.rk")).as("ra0"), min(col("b.rk")).as("rb0"))
-      .filter((lit(1) + least(col("sz_a") - col("ra0"), col("sz_b") - col("rb0"))).cast("double")
-        >= (col("sz_a") + col("sz_b")) * (t / (1 + t)) - 1e-9)
-      .select(col("a_id"), col("b_id"))
-    // verifyJaccard returns eagerly materialized → the prefix index is
-    // no longer reachable; release it now (sh belongs to the caller)
-    val out = verifyJaccard(cand, sh, t)
-    pref.unpersist(false)
-    out
+    Materialize.shared(rankedShingles(sh).filter(inPrefix(t))
+      .select(col("doc_id"), col("shingle"), col("sz"), col("rk"))) { pref =>
+      // positional filter (PPJoin): ranks follow ONE global (df, shingle)
+      // order, so the first shared prefix shingle attains min(rk) on both
+      // sides simultaneously, and total overlap ≤ 1 + min(remaining
+      // suffix lengths). j ≥ t ⟺ overlap ≥ t/(1+t)·(sz_a+sz_b), so pairs
+      // whose bound can't reach that are pruned EXACTLY.
+      val cand = pref.as("a").join(pref.as("b"), Seq("shingle"))
+        .filter(col("a.doc_id") < col("b.doc_id"))
+        .filter(least(col("a.sz"), col("b.sz")).cast("double")
+          >= greatest(col("a.sz"), col("b.sz")) * t - 1e-9)
+        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+          col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+        .agg(min(col("a.rk")).as("ra0"), min(col("b.rk")).as("rb0"))
+        .filter((lit(1) + least(col("sz_a") - col("ra0"), col("sz_b") - col("rb0"))).cast("double")
+          >= (col("sz_a") + col("sz_b")) * (t / (1 + t)) - 1e-9)
+        .select(col("a_id"), col("b_id"))
+      verifyJaccard(cand, sh, t)
+    }
   }
 
   /** q119: containment join — DIRECTED near-dup: a is τ-contained in b
@@ -438,52 +423,23 @@ object Dedup {
                                    threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     val t = threshold
-    val sh = shingleFrame.persist(StorageLevel.MEMORY_AND_DISK)
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    val ranked = sh.join(dfreq.hint("shuffle_hash"), "shingle")
-      .withColumn("rk", row_number().over(w.orderBy(col("df"), col("shingle"))))
-      .withColumn("sz", count(lit(1)).over(w))
+    Materialize.shared(shingleFrame) { sh =>
       // probe prefixes and the full index are both slices of this one
       // frame — persist so the df-join + rank window runs once
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // probe side: prefix of size sz − ⌈τ·sz⌉ + 1 (conservative epsilon:
-    // a longer prefix can only ADD candidates for the verifier to reject)
-    val probe = ranked.filter(
-      col("rk") <= col("sz") - expr(s"CAST(ceil(sz * $t - 1e-9) AS BIGINT)") + 1)
-    val cand = probe.as("a").join(ranked.as("b"), Seq("shingle"))
-      .filter(col("a.doc_id") =!= col("b.doc_id"))
-      .filter(col("b.sz").cast("double") >= col("a.sz") * t - 1e-9)
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .agg(min(col("a.rk")).as("ra0"), min(col("b.rk")).as("rb0"))
-      .filter((lit(1) + least(col("sz_a") - col("ra0"), col("sz_b") - col("rb0"))).cast("double")
-        >= col("sz_a") * t - 1e-9)
-      .select(col("a_id"), col("b_id"))
-    val out = verifyContainment(cand, sh, t)
-    sh.unpersist(false)
-    ranked.unpersist(false)
-    out
-  }
-
-  /** Exact containment scoring of candidate (a_id, b_id) pairs — the
-    * verifyJaccard pattern with the asymmetric score inter/sz_a. */
-  private def verifyContainment(cand: DataFrame, sh: DataFrame,
-                                threshold: Double): DataFrame = {
-    val (pairs, arrays, nCandDocs) = candidateArrays(cand, sh)
-    val hintA = arrays.select(col("doc_id").as("a_id"), col("arr").as("arr_a"),
-      col("sz").as("sz_a"))
-    val hintB = arrays.select(col("doc_id").as("b_id"), col("arr").as("arr_b"))
-    val out = pairs
-      .join(if (nCandDocs <= MaxBroadcastArrayDocs) broadcast(hintA) else hintA, "a_id")
-      .join(if (nCandDocs <= MaxBroadcastArrayDocs) broadcast(hintB) else hintB, "b_id")
-      .withColumn("containment",
-        expr("sorted_intersect_count(arr_a, arr_b)").cast("double") / col("sz_a"))
-      .filter(col("containment") >= threshold)
-      .select(col("a_id"), col("b_id"), col("containment"))
-      .localCheckpoint(true)
-    arrays.unpersist(false)
-    out
+      Materialize.shared(rankedShingles(sh)) { ranked =>
+        val cand = ranked.filter(inPrefix(t)).as("a").join(ranked.as("b"), Seq("shingle"))
+          .filter(col("a.doc_id") =!= col("b.doc_id"))
+          .filter(col("b.sz").cast("double") >= col("a.sz") * t - 1e-9)
+          .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+            col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+          .agg(min(col("a.rk")).as("ra0"), min(col("b.rk")).as("rb0"))
+          .filter((lit(1) + least(col("sz_a") - col("ra0"), col("sz_b") - col("rb0"))).cast("double")
+            >= col("sz_a") * t - 1e-9)
+          .select(col("a_id"), col("b_id"))
+        // the directed score inter/sz_a
+        verifyPairs(cand, sh, t, "containment", col("inter").cast("double") / col("sz_a"))
+      }
+    }
   }
 
   private[graft] val NumHashes = 16
@@ -550,16 +506,11 @@ object Dedup {
   private[graft] def minhashLshOf(docs: DataFrame,
                                   numHashes: Int = NumHashes,
                                   bandRows: Int = BandRows,
-                                  threshold: Double = 0.5): DataFrame = {
-    val sh = shinglesOf(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val out = minhashLshOn(sh, numHashes, bandRows, threshold) // eager
-    sh.unpersist(false)
-    out
-  }
+                                  threshold: Double = 0.5): DataFrame =
+    Materialize.shared(shinglesOf(docs))(minhashLshOn(_, numHashes, bandRows, threshold))
 
-  /** q23 over a PRE-BUILT (caller-persisted) shingle index — the q182/
-    * q188 sharing seam (see [[jaccardNearDupOn]]). Eager output; the
-    * caller owns `sh`'s lifecycle. */
+  /** q23 over a PRE-BUILT shingle index whose scope the caller owns —
+    * the q182/q188 sharing seam (see [[jaccardNearDupOn]]). */
   private def minhashLshOn(sh: DataFrame,
                            numHashes: Int = NumHashes,
                            bandRows: Int = BandRows,
@@ -569,11 +520,9 @@ object Dedup {
     // broadcasts, so the numHashes-min signature aggregate would run
     // twice; one short row per doc is the cheapest thing in this plan to
     // cache
-    val sig = signaturesOf(sh, numHashes).persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = bandCandidates(sig, numHashes, bandRows)
-    val out = verifyJaccard(cand, sh, threshold) // eager — safe to release inputs
-    sig.unpersist(false)
-    out
+    Materialize.shared(signaturesOf(sh, numHashes)) { sig =>
+      verifyJaccard(bandCandidates(sig, numHashes, bandRows), sh, threshold)
+    }
   }
 
   /** Banded LSH candidate pairs over a (doc_id, h0..h{n-1}) signature
@@ -716,7 +665,7 @@ object Dedup {
                                       maxHamming: Int = 3): DataFrame =
     hammingBandPairs(simhashSignaturesOf(docs), chunkBits = 8, maxHamming)
 
-  /** q24 over a prepared (caller-persisted) token frame — the r22
+  /** q24 over a prepared token frame shared by the caller — the r22
     * agreement-audit sharing seam (see [[tokensOf]]). */
   private def simhashNearDupOnToks(toks: DataFrame,
                                    maxHamming: Int = 3): DataFrame =
@@ -754,57 +703,53 @@ object Dedup {
     require(chunkBits >= 1 && chunkBits <= 8, "band values must fit 32 bits")
     // tiny (≤ #distinct signatures) but feeds four plan branches — without
     // persist the whole per-doc signature pipeline recomputes per branch
-    val groups = sig.groupBy(col("sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def chunk(c: Int): Column =
-      shiftright(col("sig"), c * chunkBits).bitwiseAND(lit((1L << chunkBits) - 1))
-    // Band selection (r21): exact recall needs, for EVERY possible
-    // ≤maxHamming-element dirty-chunk set D, some banded quad disjoint
-    // from D — i.e. the quad COMPLEMENTS must cover every |D|-subset of
-    // the 8 chunks (a covering design). For maxHamming ≤ 3 the optimal
-    // 14-block C(8,4,3) design [[CoveringQuads]] suffices instead of
-    // all C(8,4) = 70 quads — 5× fewer bucket rows per signature into
-    // the band self-join with a byte-identical result (the bit_count
-    // verify is unchanged; DedupSpec's brute-force differential and the
-    // exhaustive covering law gate it). maxHamming = 4 needs every
-    // 4-subset covered, which only all 70 quads do.
-    val quads = (if (maxHamming <= 3) CoveringQuads
-    else for {
-      i <- 0 until 8; j <- i + 1 until 8; k <- j + 1 until 8; l <- k + 1 until 8
-    } yield (i, j, k, l)).zipWithIndex
-    val bandCols = quads.map { case ((i, j, k, l), b) =>
-      struct(lit(b).as("band"),
-        shiftleft(chunk(i), 3 * chunkBits).bitwiseOR(shiftleft(chunk(j), 2 * chunkBits))
-          .bitwiseOR(shiftleft(chunk(k), chunkBits)).bitwiseOR(chunk(l)).as("bv"))
+    Materialize.shared(sig.groupBy(col("sig"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))) { groups =>
+      def chunk(c: Int): Column =
+        shiftright(col("sig"), c * chunkBits).bitwiseAND(lit((1L << chunkBits) - 1))
+      // Band selection (r21): exact recall needs, for EVERY possible
+      // ≤maxHamming-element dirty-chunk set D, some banded quad disjoint
+      // from D — i.e. the quad COMPLEMENTS must cover every |D|-subset of
+      // the 8 chunks (a covering design). For maxHamming ≤ 3 the optimal
+      // 14-block C(8,4,3) design [[CoveringQuads]] suffices instead of
+      // all C(8,4) = 70 quads — 5× fewer bucket rows per signature into
+      // the band self-join with a byte-identical result (the bit_count
+      // verify is unchanged; DedupSpec's brute-force differential and the
+      // exhaustive covering law gate it). maxHamming = 4 needs every
+      // 4-subset covered, which only all 70 quads do.
+      val quads = (if (maxHamming <= 3) CoveringQuads
+      else for {
+        i <- 0 until 8; j <- i + 1 until 8; k <- j + 1 until 8; l <- k + 1 until 8
+      } yield (i, j, k, l)).zipWithIndex
+      val bandCols = quads.map { case ((i, j, k, l), b) =>
+        struct(lit(b).as("band"),
+          shiftleft(chunk(i), 3 * chunkBits).bitwiseOR(shiftleft(chunk(j), 2 * chunkBits))
+            .bitwiseOR(shiftleft(chunk(k), chunkBits)).bitwiseOR(chunk(l)).as("bv"))
+      }
+      val buckets = groups.select(col("sig"), explode(array(bandCols: _*)).as("bk"))
+        .select(col("sig"), col("bk.band"), col("bk.bv"))
+      val sigPairs = buckets.as("x").join(buckets.as("y"), Seq("band", "bv"))
+        .filter(col("x.sig") < col("y.sig"))
+        .select(col("x.sig").as("sa"), col("y.sig").as("sb"))
+        .distinct()
+        .withColumn("hamming", expr("CAST(bit_count(sa ^ sb) AS INT)"))
+        .filter(col("hamming") <= maxHamming)
+      val cross = sigPairs
+        .join(groups.select(col("sig").as("sa"), col("ids").as("ids_a")), "sa")
+        .join(groups.select(col("sig").as("sb"), col("ids").as("ids_b")), "sb")
+        .select(col("hamming"), explode(col("ids_a")).as("x_id"), col("ids_b"))
+        .select(col("hamming"), col("x_id"), explode(col("ids_b")).as("y_id"))
+        .select(least(col("x_id"), col("y_id")).as("a_id"),
+          greatest(col("x_id"), col("y_id")).as("b_id"), col("hamming"))
+      // identical-sig doc pairs (Hamming 0); k² only within true dup clusters
+      val within = groups.filter(size(col("ids")) >= 2)
+        .select(explode(expr(
+          """flatten(transform(sequence(0, size(ids)-2),
+            |  i -> transform(sequence(i+1, size(ids)-1),
+            |         j -> struct(ids[i] AS a_id, ids[j] AS b_id))))""".stripMargin)).as("p"))
+        .select(col("p.a_id"), col("p.b_id"), lit(0).cast("int").as("hamming"))
+      cross.unionByName(within).localCheckpoint(true)
     }
-    val buckets = groups.select(col("sig"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("sig"), col("bk.band"), col("bk.bv"))
-    val sigPairs = buckets.as("x").join(buckets.as("y"), Seq("band", "bv"))
-      .filter(col("x.sig") < col("y.sig"))
-      .select(col("x.sig").as("sa"), col("y.sig").as("sb"))
-      .distinct()
-      .withColumn("hamming", expr("CAST(bit_count(sa ^ sb) AS INT)"))
-      .filter(col("hamming") <= maxHamming)
-    val cross = sigPairs
-      .join(groups.select(col("sig").as("sa"), col("ids").as("ids_a")), "sa")
-      .join(groups.select(col("sig").as("sb"), col("ids").as("ids_b")), "sb")
-      .select(col("hamming"), explode(col("ids_a")).as("x_id"), col("ids_b"))
-      .select(col("hamming"), col("x_id"), explode(col("ids_b")).as("y_id"))
-      .select(least(col("x_id"), col("y_id")).as("a_id"),
-        greatest(col("x_id"), col("y_id")).as("b_id"), col("hamming"))
-    // identical-sig doc pairs (Hamming 0); k² only within true dup clusters
-    val within = groups.filter(size(col("ids")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(sequence(0, size(ids)-2),
-          |  i -> transform(sequence(i+1, size(ids)-1),
-          |         j -> struct(ids[i] AS a_id, ids[j] AS b_id))))""".stripMargin)).as("p"))
-      .select(col("p.a_id"), col("p.b_id"), lit(0).cast("int").as("hamming"))
-    // materialize the pair set eagerly, then release the signature-group
-    // cache — same leak-free lifecycle as the jaccard family
-    val out = cross.unionByName(within).localCheckpoint(true)
-    groups.unpersist(false)
-    out
   }
 
   /** doc_id → 64-bit simhash of its token set, bit-packed into a BIGINT
@@ -901,31 +846,24 @@ object Dedup {
       .select(col("doc_id")).withColumn("is_exact", lit(true))
     // near: one shared shingle+prefix build over BOTH sides with a side
     // flag, then candidates = delta-prefix ⋈ corpus-prefix only
-    val sh = shinglesOf(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    val pref = sh.join(dfreq.hint("shuffle_hash"), "shingle")
-      .withColumn("rk", row_number().over(w.orderBy(col("df"), col("shingle"))))
-      .withColumn("sz", count(lit(1)).over(w))
-      .filter(col("rk") <= col("sz") - expr(s"CAST(ceil(sz * $t - 1e-9) AS BIGINT)") + 1)
-      .select(col("doc_id"), col("shingle"), col("sz"), col("rk"),
-        (md5(col("doc_id").cast("string")) >= "c0").as("is_delta"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = pref.filter(col("is_delta")).as("a")
-      .join(pref.filter(!col("is_delta")).as("b"), Seq("shingle"))
-      .filter(least(col("a.sz"), col("b.sz")).cast("double")
-        >= greatest(col("a.sz"), col("b.sz")) * t - 1e-9)
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .agg(min(col("a.rk")).as("ra0"), min(col("b.rk")).as("rb0"))
-      .filter((lit(1) + least(col("sz_a") - col("ra0"), col("sz_b") - col("rb0"))).cast("double")
-        >= (col("sz_a") + col("sz_b")) * (t / (1 + t)) - 1e-9)
-      .select(col("a_id"), col("b_id"))
-    val nearDup = verifyJaccard(cand, sh, t) // eager → inputs releasable
-      .select(col("a_id").as("doc_id")).distinct()
+    val nearDup = Materialize.shared(shinglesOf(docs)) { sh =>
+      Materialize.shared(rankedShingles(sh).filter(inPrefix(t))
+        .select(col("doc_id"), col("shingle"), col("sz"), col("rk"),
+          (md5(col("doc_id").cast("string")) >= "c0").as("is_delta"))) { pref =>
+        val cand = pref.filter(col("is_delta")).as("a")
+          .join(pref.filter(!col("is_delta")).as("b"), Seq("shingle"))
+          .filter(least(col("a.sz"), col("b.sz")).cast("double")
+            >= greatest(col("a.sz"), col("b.sz")) * t - 1e-9)
+          .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+            col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+          .agg(min(col("a.rk")).as("ra0"), min(col("b.rk")).as("rb0"))
+          .filter((lit(1) + least(col("sz_a") - col("ra0"), col("sz_b") - col("rb0"))).cast("double")
+            >= (col("sz_a") + col("sz_b")) * (t / (1 + t)) - 1e-9)
+          .select(col("a_id"), col("b_id"))
+        verifyJaccard(cand, sh, t)
+      }
+    }.select(col("a_id").as("doc_id")).distinct()
       .withColumn("is_near", lit(true))
-    sh.unpersist(false)
-    pref.unpersist(false)
     delta.select(col("doc_id"), col("lang"))
       .join(exactDup, Seq("doc_id"), "left")
       .join(nearDup, Seq("doc_id"), "left")

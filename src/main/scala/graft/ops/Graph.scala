@@ -4,7 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond connected components (Clusters.scala):
   * PageRank (Page, Brin, Motwani, Winograd 1999) — the standard "which
@@ -39,31 +38,30 @@ object Graph {
                                damping: Double): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // one degree-annotated edge list feeds every iteration — persist it,
-    // release once the (node-count-sized) rank table is materialized
-    val ed = edges.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = deg.select(col("src").as("node"))
-    val nn = nodes.agg(count(lit(1)).as("n"))
-    // n enters ONCE as an initial-rank column and stays group-constant
-    // through every iteration — no per-round broadcast join
-    var ranks = nodes.crossJoin(broadcast(nn))
-      .select(col("node"), (lit(1.0) / col("n")).as("rank"), col("n"))
-    for (i <- 1 to iters) {
-      ranks = iterate(ed, ranks, damping)
-      // lineage truncation (the Clusters.scala pattern), BATCHED every
-      // 3 rounds: an eager checkpoint is a full job, and on a real
-      // cluster every job pays scheduler latency, so letting a few
-      // rounds compose into one job cuts the job count ~3× while plans
-      // stay shallow enough that analysis cost never compounds (a
-      // monolithic iters-deep tree would). Local A/B at sf0.1 measures
-      // 1 vs 3 vs 5 within run-to-run noise — the per-iteration cost
-      // there is the shuffle, not the checkpoint. Retained blocks are
-      // node-count-sized rank vectors, ~MBs even at web scale.
-      if (i % 3 == 0 && i < iters) ranks = ranks.localCheckpoint(true)
+    // one degree-annotated edge list feeds every iteration — shared
+    // until the (node-count-sized) rank table is materialized
+    Materialize.shared(edges.join(deg, "src")) { ed =>
+      val nodes = deg.select(col("src").as("node"))
+      val nn = nodes.agg(count(lit(1)).as("n"))
+      // n enters ONCE as an initial-rank column and stays group-constant
+      // through every iteration — no per-round broadcast join
+      var ranks = nodes.crossJoin(broadcast(nn))
+        .select(col("node"), (lit(1.0) / col("n")).as("rank"), col("n"))
+      for (i <- 1 to iters) {
+        ranks = iterate(ed, ranks, damping)
+        // lineage truncation (the Clusters.scala pattern), BATCHED every
+        // 3 rounds: an eager checkpoint is a full job, and on a real
+        // cluster every job pays scheduler latency, so letting a few
+        // rounds compose into one job cuts the job count ~3× while plans
+        // stay shallow enough that analysis cost never compounds (a
+        // monolithic iters-deep tree would). Local A/B at sf0.1 measures
+        // 1 vs 3 vs 5 within run-to-run noise — the per-iteration cost
+        // there is the shuffle, not the checkpoint. Retained blocks are
+        // node-count-sized rank vectors, ~MBs even at web scale.
+        if (i % 3 == 0 && i < iters) ranks = ranks.localCheckpoint(true)
+      }
+      ranks.localCheckpoint(true)
     }
-    val out = ranks.localCheckpoint(true)
-    ed.unpersist(false)
-    out
   }
 
   /** One power iteration: shuffle the contribution stream on dst, partial
@@ -169,57 +167,55 @@ object Graph {
     * read-out normalizes once per side (score/Σ × n, O(1) values)
     * rounded at 5 dp with ties cut on node id. */
   def hits(spark: SparkSession, dir: String): DataFrame = {
-    val edges = Tables.lineitem(spark, dir)
+    Materialize.shared(Tables.lineitem(spark, dir)
       .select((col("l_orderkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Per-round max-snap (see the scaladoc's EXACTNESS paragraph): the
-    // raw hub sums are materialized once with their max observed, the
-    // max re-enters as a LITERAL (max over exact integers is order-free,
-    // so it is the identical double on every engine), and every hub
-    // score lands on the 2^30 integer grid before feeding the next
-    // round's sums. Snapping the HUB side alone suffices: the auth
-    // half-step then sums exact ints ≤ 2^30 (exact through in-degree
-    // 2^23) and the hub half-step sums exact ints ≤ d_auth·2^30 (exact
-    // through degree product 2^23) — the auth frame never needs its own
-    // snap pass.
-    def snap(raw: DataFrame): DataFrame = {
-      // an EMPTY frame (no edges) selects no rows for any finite literal
-      val (ckpt, m) = Materialize.sliver(raw)(coalesce(max(col("s")), lit(1.0)).as("mx"))
-      ckpt.select(col("node"),
-        round(col("s") / lit(m.getDouble(0)) * lit(HitsSnapScale), 0).as("s"))
+      .distinct()) { edges =>
+      // Per-round max-snap (see the scaladoc's EXACTNESS paragraph): the
+      // raw hub sums are materialized once with their max observed, the
+      // max re-enters as a LITERAL (max over exact integers is order-free,
+      // so it is the identical double on every engine), and every hub
+      // score lands on the 2^30 integer grid before feeding the next
+      // round's sums. Snapping the HUB side alone suffices: the auth
+      // half-step then sums exact ints ≤ 2^30 (exact through in-degree
+      // 2^23) and the hub half-step sums exact ints ≤ d_auth·2^30 (exact
+      // through degree product 2^23) — the auth frame never needs its own
+      // snap pass.
+      def snap(raw: DataFrame): DataFrame = {
+        // an EMPTY frame (no edges) selects no rows for any finite literal
+        val (ckpt, m) = Materialize.sliver(raw)(coalesce(max(col("s")), lit(1.0)).as("mx"))
+        ckpt.select(col("node"),
+          round(col("s") / lit(m.getDouble(0)) * lit(HitsSnapScale), 0).as("s"))
+      }
+      var hubs = edges.select(col("src").as("node")).distinct()
+        .select(col("node"), lit(1.0).as("s")).localCheckpoint(true)
+      var auths: DataFrame = null
+      for (i <- 1 to HitsIters) {
+        auths = edges.join(hubs, edges("src") === hubs("node"))
+          .groupBy(col("dst").as("node")).agg(sum(col("s")).as("s"))
+        // final round only (r22): auths feeds BOTH the last hub half-step
+        // and the read-out below — un-materialized, the read-out's
+        // checkpoint re-ran the full edges⋈hubs shuffle+agg a second time.
+        // One node-sliver checkpoint makes the edge-scale subtree execute
+        // once (pure materialization barrier: values unchanged).
+        if (i == HitsIters) auths = auths.localCheckpoint(true)
+        hubs = snap(edges.join(auths, edges("dst") === auths("node"))
+          .groupBy(col("src").as("node")).agg(sum(col("s")).as("s")))
+      }
+      // read-out: one L1 pass per side — score = s/Σs × n (O(1) values,
+      // q97's ×n convention), 5 dp, ties cut on node id. Σs and n are
+      // observed by the read-out checkpoint (both exact: s values are grid
+      // integers, so the sum is order-free) — same trade as snap().
+      def head(scores0: DataFrame, kind: String): DataFrame = {
+        val (scores, m) = Materialize.sliver(scores0)(
+          coalesce(sum(col("s")), lit(1.0)).as("t"), count(lit(1)).as("n"))
+        scores.select(lit(kind).as("kind"), expr("node div 2").as("key"),
+            round(col("s") / lit(m.getDouble(0)) * lit(m.getLong(1)), 5).as("score"),
+            col("node"))
+          .orderBy(desc("score"), asc("node")).limit(25)
+          .select(col("kind"), col("key"), col("score"))
+      }
+      head(hubs, "order").unionAll(head(auths, "part")).localCheckpoint(true)
     }
-    var hubs = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("s")).localCheckpoint(true)
-    var auths: DataFrame = null
-    for (i <- 1 to HitsIters) {
-      auths = edges.join(hubs, edges("src") === hubs("node"))
-        .groupBy(col("dst").as("node")).agg(sum(col("s")).as("s"))
-      // final round only (r22): auths feeds BOTH the last hub half-step
-      // and the read-out below — un-materialized, the read-out's
-      // checkpoint re-ran the full edges⋈hubs shuffle+agg a second time.
-      // One node-sliver checkpoint makes the edge-scale subtree execute
-      // once (pure materialization barrier: values unchanged).
-      if (i == HitsIters) auths = auths.localCheckpoint(true)
-      hubs = snap(edges.join(auths, edges("dst") === auths("node"))
-        .groupBy(col("src").as("node")).agg(sum(col("s")).as("s")))
-    }
-    // read-out: one L1 pass per side — score = s/Σs × n (O(1) values,
-    // q97's ×n convention), 5 dp, ties cut on node id. Σs and n are
-    // observed by the read-out checkpoint (both exact: s values are grid
-    // integers, so the sum is order-free) — same trade as snap().
-    def head(scores0: DataFrame, kind: String): DataFrame = {
-      val (scores, m) = Materialize.sliver(scores0)(
-        coalesce(sum(col("s")), lit(1.0)).as("t"), count(lit(1)).as("n"))
-      scores.select(lit(kind).as("kind"), expr("node div 2").as("key"),
-          round(col("s") / lit(m.getDouble(0)) * lit(m.getLong(1)), 5).as("score"),
-          col("node"))
-        .orderBy(desc("score"), asc("node")).limit(25)
-        .select(col("kind"), col("key"), col("score"))
-    }
-    val out = head(hubs, "order").unionAll(head(auths, "part")).localCheckpoint(true)
-    edges.unpersist(false)
-    out
   }
 
   /** q128: triangle counting by degree-ordered edge orientation (Suri &

@@ -3,7 +3,6 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Relevance / quality / mixture scoring for training-data curation — the
   * model-free scoring passes a corpus pipeline runs between dedup and
@@ -162,21 +161,20 @@ object Scoring {
     // xent SLIVER is checkpointed once and every consumer reads it; the
     // bucket assignment is likewise checkpointed for its two uses.
     // Arithmetic is unchanged expression-for-expression.
-    val big = bigramsOf(spark, dir).select(col("doc_id"), col("lang"), col("bg"),
-      split(col("bg"), " ").getItem(0).as("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cnt = big.groupBy(col("bg")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // vocab²-bounded; feeds the join AND the margin
-    val uc = cnt.select(split(col("bg"), " ").getItem(0).as("u"), col("c"))
-      .groupBy(col("u")).agg(sum(col("c")).as("cu"))
-    val vocab = toksOf(spark, dir).agg(count_distinct(col("tok")).as("v"))
-    val xent = big.join(cnt, "bg")
-      .join(uc, "u")
-      .crossJoin(broadcast(vocab))
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(round(avg(-log((col("c") + lit(1.0)) / (col("cu") + col("v")))), 6).as("xent"))
-      .localCheckpoint(true) // one row per scored doc; feeds four consumers
-    big.unpersist(false)
+    val xent = Materialize.shared(bigramsOf(spark, dir).select(col("doc_id"), col("lang"),
+      col("bg"), split(col("bg"), " ").getItem(0).as("u"))) { big =>
+      val cnt = big.groupBy(col("bg")).agg(count(lit(1)).as("c"))
+        .localCheckpoint(true) // vocab²-bounded; feeds the join AND the margin
+      val uc = cnt.select(split(col("bg"), " ").getItem(0).as("u"), col("c"))
+        .groupBy(col("u")).agg(sum(col("c")).as("cu"))
+      val vocab = toksOf(spark, dir).agg(count_distinct(col("tok")).as("v"))
+      big.join(cnt, "bg")
+        .join(uc, "u")
+        .crossJoin(broadcast(vocab))
+        .groupBy(col("doc_id"), col("lang"))
+        .agg(round(avg(-log((col("c") + lit(1.0)) / (col("cu") + col("v")))), 6).as("xent"))
+        .localCheckpoint(true) // one row per scored doc; feeds four consumers
+    }
     val bounds = xent.groupBy(col("lang"))
       .agg(min(col("xent")).as("lo"), max(col("xent")).as("hi"), count(lit(1)).as("n"))
     val bucketed = xent.join(broadcast(bounds), "lang")

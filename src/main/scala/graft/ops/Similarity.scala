@@ -313,56 +313,54 @@ object Similarity {
     val v = scaled(spark, dir)
     // per-(vector, centroid) sub-distances: one broadcast join row per
     // pair, all `subspaces` integer sums computed in that row. Feeds
-    // BOTH the corpus encoding and the query distance tables — the
-    // persist/release diamond lifecycle again.
+    // BOTH the corpus encoding and the query distance tables, so it is
+    // shared for the call and released once the top-k is checkpointed.
     val dCols = (0 until subspaces).map { s =>
       expr(s"""aggregate(sequence(${s * w}, ${s * w + w - 1}), 0L,
               | (acc, i) -> acc + (ai[i] - c_ai[i]) * (ai[i] - c_ai[i]))""".stripMargin)
         .as(s"d$s")
     }
-    val pairs = v.crossJoin(broadcast(centroids(v, codebookK)))
-      .select(col("vec_id") +: dCols :+ col("c_id"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // encode: per subspace, the centroid minimizing (d, c_id) — the
-    // typed arg-min is the deterministic argmin (same total order as
-    // the oracle's row_number over (d, c_id)). The former
-    // min(struct(d, c_id)) spelling planned SortAggregate (struct
-    // buffers are not HashAggregate-mutable — the r16 Curation
-    // lesson), sorting the n·codebookK pair stream per encode; the r18
-    // ExecutedSweep counted it (4 SortAggregates inside this eager
-    // execution) and MinByLongAgg keeps all `subspaces` arg-mins in
-    // one hash-mode ObjectHashAggregate pass.
-    val minByD = udaf(new graft.functions.MinByLongAgg)
-    val enc = pairs.groupBy(col("vec_id"))
-      .agg(minByD(col("d0"), col("c_id")).as("m0"),
-        (1 until subspaces).map(s =>
-          minByD(col(s"d$s"), col("c_id")).as(s"m$s")): _*)
-    val codes = enc.select(col("vec_id"), explode(array((0 until subspaces).map(s =>
-        struct(lit(s).as("s"), col(s"m$s").as("code"))): _*)).as("k"))
-      .select(col("vec_id"), col("k.s").as("s"), col("k.code").as("code"))
-    // query ADC tables: the SAME pair rows, restricted to query vectors
-    val qd = pairs.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("c_id"),
-        explode(array((0 until subspaces).map(s =>
-          struct(lit(s).as("s"), col(s"d$s").as("d"))): _*)).as("k"))
-      .select(col("q_id"), col("c_id"), col("k.s").as("s"), col("k.d").as("d"))
-    // ADC scan: every (vector, subspace, code) row looks its distance up
-    // in the broadcast table; partial aggregation sums map-side
-    val topk = udaf(new graft.functions.TopKAgg(topK))
-    val out = codes
-      .join(broadcast(qd), codes("s") === qd("s") && codes("code") === qd("c_id"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d")).as("approx_dist"))
-      .groupBy(col("q_id"))
-      .agg(topk(negate(col("approx_dist")).cast("double"), col("vec_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col._2").as("vec_id"),
-        negate(col("col._1")).cast("long").as("approx_dist"),
-        (col("pos") + 1).cast("int").as("rn"))
-      .localCheckpoint(true)
-    pairs.unpersist(false)
-    out
+    Materialize.shared(v.crossJoin(broadcast(centroids(v, codebookK)))
+      .select(col("vec_id") +: dCols :+ col("c_id"): _*)) { pairs =>
+      // encode: per subspace, the centroid minimizing (d, c_id) — the
+      // typed arg-min is the deterministic argmin (same total order as
+      // the oracle's row_number over (d, c_id)). The former
+      // min(struct(d, c_id)) spelling planned SortAggregate (struct
+      // buffers are not HashAggregate-mutable — the r16 Curation
+      // lesson), sorting the n·codebookK pair stream per encode; the r18
+      // ExecutedSweep counted it (4 SortAggregates inside this eager
+      // execution) and MinByLongAgg keeps all `subspaces` arg-mins in
+      // one hash-mode ObjectHashAggregate pass.
+      val minByD = udaf(new graft.functions.MinByLongAgg)
+      val enc = pairs.groupBy(col("vec_id"))
+        .agg(minByD(col("d0"), col("c_id")).as("m0"),
+          (1 until subspaces).map(s =>
+            minByD(col(s"d$s"), col("c_id")).as(s"m$s")): _*)
+      val codes = enc.select(col("vec_id"), explode(array((0 until subspaces).map(s =>
+          struct(lit(s).as("s"), col(s"m$s").as("code"))): _*)).as("k"))
+        .select(col("vec_id"), col("k.s").as("s"), col("k.code").as("code"))
+      // query ADC tables: the SAME pair rows, restricted to query vectors
+      val qd = pairs.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("q_id"), col("c_id"),
+          explode(array((0 until subspaces).map(s =>
+            struct(lit(s).as("s"), col(s"d$s").as("d"))): _*)).as("k"))
+        .select(col("q_id"), col("c_id"), col("k.s").as("s"), col("k.d").as("d"))
+      // ADC scan: every (vector, subspace, code) row looks its distance up
+      // in the broadcast table; partial aggregation sums map-side
+      val topk = udaf(new graft.functions.TopKAgg(topK))
+      codes
+        .join(broadcast(qd), codes("s") === qd("s") && codes("code") === qd("c_id"))
+        .filter(col("q_id") =!= col("vec_id"))
+        .groupBy(col("q_id"), col("vec_id"))
+        .agg(sum(col("d")).as("approx_dist"))
+        .groupBy(col("q_id"))
+        .agg(topk(negate(col("approx_dist")).cast("double"), col("vec_id")).as("top"))
+        .select(col("q_id"), posexplode(col("top")))
+        .select(col("q_id"), col("col._2").as("vec_id"),
+          negate(col("col._1")).cast("long").as("approx_dist"),
+          (col("pos") + 1).cast("int").as("rn"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Embedding near-duplicate pairs, cluster-scoped (the SemDeDup shape —

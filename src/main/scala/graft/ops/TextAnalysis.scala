@@ -512,12 +512,12 @@ object TextAnalysis {
     * (692 s vs 311 s, zero spill both, candidate mass still balanced
     * across partitions: BITEXT_SKEW_r17_sf100 max/med 1.197). The
     * rule is sized for corpus SHARDS up to O(10 M) docs — the same
-    * per-shard convention every §8.1 operator uses; past that, either
-    * shard (n is per-shard, so the quadratic term stays bounded) or
-    * pass an explicit `cap` (256 restores the r16 constant ceiling
-    * and its measured recall). The oracle replays the same integer
-    * rule (greatest(256, count(w) // 4096)), so the gate checks the
-    * rule itself, not a frozen constant. */
+    * per-shard convention every §8.1 operator uses; past that, shard
+    * (n is per-shard, so the quadratic term stays bounded).
+    * `RecallProbe`'s `cap` argument measures any other ceiling (256
+    * restores the r16 constant and its measured recall). The oracle
+    * replays the same integer rule (greatest(256, count(w) // 4096)),
+    * so the gate checks the rule itself, not a frozen constant. */
   private[graft] def bitextBucketCap(n: Long): Int =
     // Int.MaxValue clamp: n > 2^43 docs/shard would overflow the Int —
     // purely theoretical (8.8 T docs), and a clamped cap that large is
@@ -604,7 +604,7 @@ object TextAnalysis {
     * on every plane. Hyperplanes are the q76 md5-derived ±1 arrays
     * (first 16 of 64 coefficients — the hash-embed space is 16-dim).
     *
-    * CALL ONCE AND PERSIST: [[bitextMining]] materializes this frame so
+    * CALL ONCE AND SHARE: [[withBitextFrames]] caches this frame so
     * every downstream leg reads the cached longs — the r14 profile
     * measured the un-cached form re-evaluating the bands·r-plane projection
     * three times (encnt, capped-English, query legs), 75 of q187's
@@ -677,13 +677,14 @@ object TextAnalysis {
   }
 
   /** The bucket legs + candidate join + rerank as ONE lazy plan over a
-    * caller-supplied banded frame (`wb` = [[bitextBanded]], persisted
-    * by the caller) — split out so PlanSpec can audit the physical
-    * shape (the public [[bitextMining]] checkpoints the tiny result,
-    * which hides the interior from EXPLAIN — the q87 lifecycle). */
+    * caller-supplied banded frame (`wb` = [[bitextBanded]], shared by
+    * the caller) — split out so PlanSpec can audit the physical shape
+    * (the public [[bitextMining]] checkpoints the tiny result, which
+    * hides the interior from EXPLAIN — the q87 lifecycle). The band
+    * values arrive packed in `wb`'s `bb`, so `r` (the width they were
+    * banded at) is not read here. */
   private[graft] def bitextPlan(spark: SparkSession, wb: DataFrame,
                                 n: Long, r: Int, minCos: Double,
-                                multiprobe: Boolean = false,
                                 cap: Int = BitextBucketCap): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     val bands = BitextBands
@@ -733,24 +734,18 @@ object TextAnalysis {
            |  CAST(en_id AS STRING), CAST(band AS STRING))), 1, 8), 16, 10)
            |  AS BIGINT) % cb < $cap""".stripMargin))
       .select(col("en_id"), col("en_v"), col("en_n2"), col("band"), col("bv"))
-    val tb0 = wb.filter(col("lang") =!= "en")
+    val tb = wb.filter(col("lang") =!= "en")
       .select(col("doc_id").as("t_id"), col("lang"), col("v").as("t_v"),
         col("n2").as("t_n2"), explode(array(bandCols: _*)).as("bk"))
       .select(col("t_id"), col("lang"), col("t_v"), col("t_n2"),
         col("bk.band").as("band"), col("bk.bv").as("bv"))
-    // 1-bit XOR multiprobe is OFF by default and a knob, not the
-    // recall mechanism: on correlated natural-text vectors the flip
-    // buckets are themselves dense, and the sf10 measurement (500k
-    // docs, r = 18) put multiprobe at 957 candidates/query vs 136
-    // exact-bucket — a ~7× pair-work multiplier for marginal recall
-    // the independent bands already provide. (q76 keeps ITS
-    // multiprobe: 6-bit bands over near-uniform buckets are the
-    // regime where 1-bit neighbors are cheap.)
-    val tb =
-      if (!multiprobe) tb0
-      else tb0.select(col("t_id"), col("lang"), col("t_v"), col("t_n2"),
-        col("band"), explode(array(col("bv") +: (0 until r).map(j =>
-          expr(s"bv ^ ${1L << j}")): _*)).as("bv"))
+    // exact bucket per band, no 1-bit XOR multiprobe: on correlated
+    // natural-text vectors the flip buckets are themselves dense, and
+    // the sf10 measurement (500k docs, r = 18) put multiprobe at 957
+    // candidates/query vs 136 exact-bucket — a ~7× pair-work multiplier
+    // for marginal recall the independent bands already provide. (q76
+    // keeps ITS multiprobe: 6-bit bands over near-uniform buckets are
+    // the regime where 1-bit neighbors are cheap.)
     // a pair sharing several bands emits one scored row per shared
     // band, all bit-identical (exact-int dot, same expression) — the
     // tuple-dedup inside the bounded aggregator makes this equal to
@@ -811,39 +806,39 @@ object TextAnalysis {
     * over the deduped pair sliver; no window over corpus rows, no
     * all-pairs. Recall comes from the [[BitextBands]] independent bands
     * (measured top-1 recall vs exact cosine: RECALL_r15 / the
-    * CurationOpsSpec recall-floor law); 1-bit
-    * multiprobe exists as an opt-in knob but measured a ~7× candidate
-    * multiplier on correlated text (see [[bitextPlan]]). */
-  /** `cap` ≤ 0 (the default) means the [[bitextBucketCap]](n) rule —
-    * the per-(band, bucket) English population ceiling as a documented
-    * function of corpus size, which the gate oracle replays as the
-    * same integer rule. An explicit positive `cap` overrides it (probe
-    * instrumentation; the r16 knob probes that MEASURED the rule's
-    * operating point). r16 background: the fixed cap 256 was the
-    * binding recall constraint at sf100 (0.8013 vs 0.8803 uncapped;
-    * 1024 recovered 0.8690 at the same probe cost — the cap only pays
-    * in hot buckets), and width (rDelta) is NOT the lever there —
-    * wider buckets measured recall DOWN (0.7910) because they push
-    * more buckets past the cap. */
-  def bitextMining(spark: SparkSession, dir: String,
-                   minCos: Double = 0.5,
-                   cap: Int = 0): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val hv = hashVecOf(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = hv.withColumn("n2", expr("dot_long(v, v)")).filter(col("n2") > 0)
-    val n = w.count()
-    val r = bitextBandBits(n)
-    val capEff = if (cap > 0) cap else bitextBucketCap(n)
-    val (nn, s) = bitextStats(w)
-    val wb = bitextBanded(w, r, nn, s)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = withBitextTuning(spark, n) {
-      bitextPlan(spark, wb, n, r, minCos, cap = capEff).localCheckpoint(true)
+    * CurationOpsSpec recall-floor law); the plan probes the exact
+    * bucket per band only (no multiprobe, see [[bitextPlan]]).
+    *
+    * The English population ceiling per (band, bucket) is the
+    * [[bitextBucketCap]](n) rule, which the gate oracle replays as the
+    * same integer rule; pairs are kept at cos ≥ 0.5. */
+  def bitextMining(spark: SparkSession, dir: String): DataFrame =
+    withBitextFrames(spark, dir) { (_, wb, n, r) =>
+      withBitextTuning(spark, n) {
+        bitextPlan(spark, wb, n, r, minCos = 0.5, cap = bitextBucketCap(n))
+          .localCheckpoint(true)
+      }
     }
-    wb.unpersist(false)
-    hv.unpersist(false)
-    out
+
+  /** The q187 prelude of [[bitextMining]], [[bitextRecallFrame]] and
+    * `BitextSkewProbe`, with its two cache boundaries as nested
+    * [[Materialize.shared]] scopes: the hash vectors `hv`, then `w` =
+    * hv with its norm `n2` > 0, counted as `n`; the band width `r` =
+    * the [[bitextBandBits]](n) rule shifted by `rDelta` (probe
+    * instrumentation, ≥ 1; at sf100 r16 measured wider buckets pushing
+    * recall DOWN to 0.7910, because more buckets pass the cap); the
+    * centering moments; and the banded frame `wb`. `body` gets
+    * (w, wb, n, r) and must run eagerly. */
+  private[graft] def withBitextFrames[T](spark: SparkSession, dir: String, rDelta: Int = 0)(
+      body: (DataFrame, DataFrame, Long, Int) => T): T = {
+    graft.functions.VectorExprs.register(spark)
+    Materialize.shared(hashVecOf(spark, dir)) { hv =>
+      val w = hv.withColumn("n2", expr("dot_long(v, v)")).filter(col("n2") > 0)
+      val n = w.count()
+      val r = math.max(1, bitextBandBits(n) + rDelta)
+      val (nn, s) = bitextStats(w)
+      Materialize.shared(bitextBanded(w, r, nn, s))(body(w, _, n, r))
+    }
   }
 
   /** q187 recall instrumentation (VERDICT r14 item 2): per sampled
@@ -865,118 +860,107 @@ object TextAnalysis {
   private[graft] def bitextRecallFrame(spark: SparkSession, dir: String,
                                        sampleN: Int,
                                        rDelta: Int = 0,
-                                       cap: Int = 0): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
-    val hv = hashVecOf(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val w = hv.withColumn("n2", expr("dot_long(v, v)")).filter(col("n2") > 0)
-    val n = w.count()
-    // cap ≤ 0 = the shipped bitextBucketCap(n) rule, exactly as
-    // bitextMining resolves it — the probe measures the config the
-    // miner ships; the output carries `cap_used` so artifacts
-    // self-describe the effective value under the rule
-    val capEff = if (cap > 0) cap else bitextBucketCap(n)
+                                       cap: Int = 0): DataFrame =
     // rDelta < 0 probes WIDER buckets than the shipped rule (each −1
     // doubles expected bucket load and candidate work) — recall-curve
     // instrumentation for picking the rule's operating point
-    val r = math.max(1, bitextBandBits(n) + rDelta)
-    val (nn, s) = bitextStats(w)
-    val wb = bitextBanded(w, r, nn, s)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val q = wb.filter(col("lang") =!= "en")
-      .select(col("doc_id"), col("v"), col("n2"))
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-      .limit(sampleN)
-    val en = w.filter(col("lang") === "en")
-      .select(col("doc_id").as("en_id"), col("v").as("en_v"),
-        col("n2").as("en_n2"))
-    // The exact brute leg, in the shape a 100 TB exact-audit needs (both
-    // lessons measured at sf100 this round):
-    //  - broadcast the SAMPLE and stream the English corpus, not the
-    //    reverse — collecting the 2.5 M-row en side for a broadcast
-    //    stalled the local-mode driver's RPC dispatcher past the 120 s
-    //    heartbeat timeout and the executor got declared dead mid-probe;
-    //  - rank with the bounded TopKAgg(1) (ordering ≡ the old
-    //    max(struct(cos, −en_id)): score desc, id asc), NOT max(struct) —
-    //    a struct-typed agg buffer is not HashAggregate-mutable, so
-    //    Catalyst planned SortAggregate and SORTED the n_en × sampleN
-    //    scored stream (7.5 B rows at sf100 — ENOSPC through the
-    //    scratch disk). TopKAgg reduces each partition to ≤ sampleN
-    //    1-tuple buffers map-side; nothing corpus-sized ever sorts,
-    //    shuffles, or collects. Runs under withBitextTuning so the
-    //    ObjectHashAggregate fallback (default 128 keys/partition —
-    //    which would re-introduce the very same input sort) stays hash.
-    val top1 = udaf(new graft.functions.TopKAgg(1))
-    val exact = en.crossJoin(broadcast(q))
-      .withColumn("cos",
-        expr("dot_long(v, en_v)").cast("double") /
-          (sqrt(col("n2").cast("double")) * sqrt(col("en_n2").cast("double"))))
-      .groupBy(col("doc_id"))
-      .agg(top1(col("cos"), col("en_id")).as("m"))
-      .select(col("doc_id").as("t_id"),
-        expr("m[0]._1").as("exact_cos"), expr("m[0]._2").as("exact_en"))
-    // Mine only the SAMPLED queries: the English side (which alone
-    // determines bucket populations and the cap) stays whole, but the
-    // non-English side is semi-joined down to the sample — per-query
-    // results are identical (top-2 rerank is independent across t_ids)
-    // and the two mining legs stop paying for the >99% of non-English
-    // docs the probe then discards at corpus scale.
-    val qIds = broadcast(q.select(col("doc_id")).distinct())
-    val wbQ = wb.filter(col("lang") === "en").unionByName(
-      wb.filter(col("lang") =!= "en").join(qIds, Seq("doc_id"), "left_semi"))
-    // the two mining legs AND the exact leg run under the miner's own
-    // scoped tuning (the probe must measure the config [[bitextMining]]
-    // ships, and the exact leg's top-1 aggregate needs the hash-mode
-    // fallback raise — see the `exact` comment); results are
-    // sampleN-row slivers, checkpointed eagerly inside the scope
-    val joined = withBitextTuning(spark, n) {
-      val banded = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = capEff)
-        .select(col("t_id"), col("en_id").as("band_en"), col("cos").as("band_cos"))
+    withBitextFrames(spark, dir, rDelta) { (w, wb, n, r) =>
+      // cap ≤ 0 = the shipped bitextBucketCap(n) rule, exactly as
+      // bitextMining resolves it — the probe measures the config the
+      // miner ships; the output carries `cap_used` so artifacts
+      // self-describe the effective value under the rule
+      val capEff = if (cap > 0) cap else bitextBucketCap(n)
+      val q = wb.filter(col("lang") =!= "en")
+        .select(col("doc_id"), col("v"), col("n2"))
+        .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+        .limit(sampleN)
+      val en = w.filter(col("lang") === "en")
+        .select(col("doc_id").as("en_id"), col("v").as("en_v"),
+          col("n2").as("en_n2"))
+      // The exact brute leg, in the shape a 100 TB exact-audit needs (both
+      // lessons measured at sf100 this round):
+      //  - broadcast the SAMPLE and stream the English corpus, not the
+      //    reverse — collecting the 2.5 M-row en side for a broadcast
+      //    stalled the local-mode driver's RPC dispatcher past the 120 s
+      //    heartbeat timeout and the executor got declared dead mid-probe;
+      //  - rank with the bounded TopKAgg(1) (ordering ≡ the old
+      //    max(struct(cos, −en_id)): score desc, id asc), NOT max(struct) —
+      //    a struct-typed agg buffer is not HashAggregate-mutable, so
+      //    Catalyst planned SortAggregate and SORTED the n_en × sampleN
+      //    scored stream (7.5 B rows at sf100 — ENOSPC through the
+      //    scratch disk). TopKAgg reduces each partition to ≤ sampleN
+      //    1-tuple buffers map-side; nothing corpus-sized ever sorts,
+      //    shuffles, or collects. Runs under withBitextTuning so the
+      //    ObjectHashAggregate fallback (default 128 keys/partition —
+      //    which would re-introduce the very same input sort) stays hash.
+      val top1 = udaf(new graft.functions.TopKAgg(1))
+      val exact = en.crossJoin(broadcast(q))
+        .withColumn("cos",
+          expr("dot_long(v, en_v)").cast("double") /
+            (sqrt(col("n2").cast("double")) * sqrt(col("en_n2").cast("double"))))
+        .groupBy(col("doc_id"))
+        .agg(top1(col("cos"), col("en_id")).as("m"))
+        .select(col("doc_id").as("t_id"),
+          expr("m[0]._1").as("exact_cos"), expr("m[0]._2").as("exact_en"))
+      // Mine only the SAMPLED queries: the English side (which alone
+      // determines bucket populations and the cap) stays whole, but the
+      // non-English side is semi-joined down to the sample — per-query
+      // results are identical (top-2 rerank is independent across t_ids)
+      // and the two mining legs stop paying for the >99% of non-English
+      // docs the probe then discards at corpus scale.
+      val qIds = broadcast(q.select(col("doc_id")).distinct())
+      val wbQ = wb.filter(col("lang") === "en").unionByName(
+        wb.filter(col("lang") =!= "en").join(qIds, Seq("doc_id"), "left_semi"))
+      // the two mining legs AND the exact leg run under the miner's own
+      // scoped tuning (the probe must measure the config [[bitextMining]]
+      // ships, and the exact leg's top-1 aggregate needs the hash-mode
+      // fallback raise — see the `exact` comment); results are
+      // sampleN-row slivers, checkpointed eagerly inside the scope
+      val joined = withBitextTuning(spark, n) {
+        val banded = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = capEff)
+          .select(col("t_id"), col("en_id").as("band_en"), col("cos").as("band_cos"))
+          .localCheckpoint(true)
+        val noCap = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = Int.MaxValue)
+          .select(col("t_id"), col("en_id").as("nocap_en"), col("cos").as("nocap_cos"))
+          .localCheckpoint(true)
+        exact
+          .join(banded, Seq("t_id"), "left")
+          .join(noCap, Seq("t_id"), "left")
+          .join(q.select(col("doc_id").as("t_id"), col("v").as("q_v"),
+            col("n2").as("q_n2")), Seq("t_id"))
+          .localCheckpoint(true) // the exact brute leg runs ONCE, here
+      }
+      // Hit predicate, computed HERE so CurationOpsSpec's recall-floor
+      // law and RecallProbe read the SAME `band_hit`/`nocap_hit` columns
+      // and cannot drift (ADVICE r15 item 4). A banded answer is a
+      // correct top-1 iff it IS the exact neighbor by id OR attains the
+      // exact max cosine (a genuine score tie). The r15 criterion
+      // compared the miner's 6-dp ROUNDED cosine against the raw exact
+      // one within a strict 5e-7, which (a) credited near-ties within
+      // half a grid step that are NOT score ties and (b) missed a true
+      // tie landing exactly on the boundary. Recomputing the answer's
+      // cosine from the VECTORS with the identical expression makes the
+      // comparison exact double equality (same exact-int inputs →
+      // bit-identical double), no tolerance at all.
+      val needEn = joined.select(explode(array(col("band_en"),
+        col("nocap_en"))).as("en_id")).filter(col("en_id").isNotNull).distinct()
+      val enSliver = en.join(broadcast(needEn), Seq("en_id"), "left_semi")
+        .localCheckpoint(true) // ≤ 2·sampleN rows of answer vectors
+      def withHit(df: DataFrame, enCol: String, hitCol: String): DataFrame =
+        df.join(broadcast(enSliver.select(col("en_id").as(enCol),
+          col("en_v").as("h_v"), col("en_n2").as("h_n2"))), Seq(enCol), "left")
+          .withColumn(hitCol, col(enCol).isNotNull &&
+            (col(enCol) === col("exact_en") ||
+              (expr("dot_long(q_v, h_v)").cast("double") /
+                (sqrt(col("q_n2").cast("double")) *
+                  sqrt(col("h_n2").cast("double")))) === col("exact_cos")))
+          .drop("h_v", "h_n2")
+      withHit(withHit(joined, "band_en", "band_hit"),
+        "nocap_en", "nocap_hit")
+        .drop("q_v", "q_n2")
+        .withColumn("cap_used", lit(capEff))
         .localCheckpoint(true)
-      val noCap = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = Int.MaxValue)
-        .select(col("t_id"), col("en_id").as("nocap_en"), col("cos").as("nocap_cos"))
-        .localCheckpoint(true)
-      exact
-        .join(banded, Seq("t_id"), "left")
-        .join(noCap, Seq("t_id"), "left")
-        .join(q.select(col("doc_id").as("t_id"), col("v").as("q_v"),
-          col("n2").as("q_n2")), Seq("t_id"))
-        .localCheckpoint(true) // the exact brute leg runs ONCE, here
     }
-    // Hit predicate, computed HERE so CurationOpsSpec's recall-floor
-    // law and RecallProbe read the SAME `band_hit`/`nocap_hit` columns
-    // and cannot drift (ADVICE r15 item 4). A banded answer is a
-    // correct top-1 iff it IS the exact neighbor by id OR attains the
-    // exact max cosine (a genuine score tie). The r15 criterion
-    // compared the miner's 6-dp ROUNDED cosine against the raw exact
-    // one within a strict 5e-7, which (a) credited near-ties within
-    // half a grid step that are NOT score ties and (b) missed a true
-    // tie landing exactly on the boundary. Recomputing the answer's
-    // cosine from the VECTORS with the identical expression makes the
-    // comparison exact double equality (same exact-int inputs →
-    // bit-identical double), no tolerance at all.
-    val needEn = joined.select(explode(array(col("band_en"),
-      col("nocap_en"))).as("en_id")).filter(col("en_id").isNotNull).distinct()
-    val enSliver = en.join(broadcast(needEn), Seq("en_id"), "left_semi")
-      .localCheckpoint(true) // ≤ 2·sampleN rows of answer vectors
-    def withHit(df: DataFrame, enCol: String, hitCol: String): DataFrame =
-      df.join(broadcast(enSliver.select(col("en_id").as(enCol),
-        col("en_v").as("h_v"), col("en_n2").as("h_n2"))), Seq(enCol), "left")
-        .withColumn(hitCol, col(enCol).isNotNull &&
-          (col(enCol) === col("exact_en") ||
-            (expr("dot_long(q_v, h_v)").cast("double") /
-              (sqrt(col("q_n2").cast("double")) *
-                sqrt(col("h_n2").cast("double")))) === col("exact_cos")))
-        .drop("h_v", "h_n2")
-    val out = withHit(withHit(joined, "band_en", "band_hit"),
-      "nocap_en", "nocap_hit")
-      .drop("q_v", "q_n2")
-      .withColumn("cap_used", lit(capEff))
-      .localCheckpoint(true)
-    wb.unpersist(false)
-    hv.unpersist(false)
-    out
-  }
 
   /** Token-entropy quality gate (q172): Shannon entropy of the
     * within-document token distribution — the classic spam/boilerplate
@@ -1794,7 +1778,7 @@ object TextAnalysis {
     // mean-centering stats, English-side md5 population cap — as the
     // bitextBucketCap(n) RULE (greatest(256, count(w) // 4096)), not a
     // frozen constant, so the gate checks the scaling rule itself —
-    // DISTINCT candidate set, and top-2 rerank (default: no multiprobe).
+    // DISTINCT candidate set, and top-2 rerank (exact bucket per band).
     "q187_bitext_mining" ->
       s"""WITH h AS (
          |  SELECT doc_id, lang, list_transform($toksSql, t ->

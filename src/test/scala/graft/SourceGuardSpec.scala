@@ -16,7 +16,11 @@ import scala.jdk.CollectionConverters._
   * drops the memory sink's temp view, and its sources read the cached
   * footer schema, so stream sources and writers live in one file. The
   * hot-key guards salt in two places, the gram family's `saltHotGrams`
-  * and the CDC hot path, and detect through one resolver, `hotKeysFor`. */
+  * and the CDC hot path, and detect through one resolver, `hotKeysFor`.
+  * Caching a frame that several plan branches share is
+  * `ops.Materialize.shared`, which releases it in a `finally` and
+  * refuses a lazy result, so no call can leak its cache into the
+  * session. */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** `file:line: pattern` for each banned pattern in src/main/scala
@@ -38,6 +42,11 @@ class SourceGuardSpec extends AnyFunSuite {
   test("Observation, observe and lazy localCheckpoint appear only in Materialize.scala") {
     val found = hits(Seq("Observation(", ".observe(", "localCheckpoint(false)"), "Materialize.scala")
     assert(found.isEmpty, "use ops.Materialize.sliver instead:\n" + found.mkString("\n"))
+  }
+
+  test("persist, unpersist, cache() and StorageLevel appear only in Materialize.scala") {
+    val found = hits(Seq(".persist(", ".unpersist(", ".cache()", "StorageLevel"), "Materialize.scala")
+    assert(found.isEmpty, "scope shared frames with ops.Materialize.shared instead:\n" + found.mkString("\n"))
   }
 
   test("SparkSession.builder() appears only in Harness.scala") {

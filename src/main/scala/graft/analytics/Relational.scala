@@ -128,7 +128,7 @@ object Relational {
   def posExplodeTokens(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        posexplode(split(graft.ops.Dedup.normText(col("text")), " ")))
+        posexplode(graft.ops.Dedup.tokens(col("text"))))
       .filter(col("pos") < 3 && col("col") =!= "")
       .groupBy(col("pos"), col("col").as("tok"))
       .agg(count(lit(1)).as("n_docs"))

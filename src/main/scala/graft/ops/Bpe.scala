@@ -47,7 +47,7 @@ object Bpe {
     * tokens. */
   private def initialWords(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+      .select(explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
       .select(regexp_replace(col("tok"), "(.)", "<$1>").as("rep"), col("cnt"))
@@ -185,7 +185,7 @@ object Bpe {
       regexp_replace(col("rep"), "[<>]", "").as("tok"), col("rep"),
       size(split(trim(col("rep"), "<>"), "><")).as("n_sym"))
     Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(Dedup.normText(col("text")), " ")))
+      .select(col("doc_id"), posexplode(Dedup.tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("tok"))
       .filter(col("tok") =!= "")
       .join(broadcast(codebook), "tok")
@@ -219,7 +219,7 @@ object Bpe {
       size(split(trim(col("rep"), "<>"), "><")).as("n_sym"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+        explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .join(broadcast(codebook), "tok")
       .groupBy(col("lang"))

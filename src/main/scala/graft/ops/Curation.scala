@@ -169,8 +169,7 @@ object Curation {
     require(chunkTokens > 0, "chunk size must be positive")
     val ct = chunkTokens
     def toksOf(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), col("lang"),
-        split(Dedup.normText(col("text")), " ").as("toks"))
+      df.select(col("doc_id"), col("lang"), Dedup.tokens(col("text")).as("toks"))
     // (doc_id, pos, chunk-hash); split(text) is never empty, so
     // ceil(size/ct) >= 1 and sequence() is always ascending
     val chunks = toksOf(Tables.documents(spark, dir))
@@ -245,7 +244,7 @@ object Curation {
   private def sdToks(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
 
   /** Raw gram-exchange bytes per on-disk corpus byte — measured at
     * sf100 (STAGE_r17_q133_sf100: 7.85 GB gram shuffle for an 811 MB
@@ -410,7 +409,7 @@ object Curation {
                        hotMinOcc: Long): Array[String] =
     hotKeysFor(Tables.documents(spark, dir).filter(col("doc_id").isNotNull),
         w, hotMinOcc, GramHotMinOccAuto, "gram") { s =>
-      val toks = s.select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+      val toks = s.select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
       sdGrams(toks, L).select(hex(col("h")).as("k"))
     }
 
@@ -645,7 +644,7 @@ object Curation {
 
   private[graft] def decontamApplyOf(docs: DataFrame, L: Int): DataFrame = {
     require(L > 0, "span length must be positive")
-    val toks = docs.select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+    val toks = docs.select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
     // filter-first (the q79 rule): each side grams only ITS documents,
     // so every doc is grammed exactly once across the two branches
     val trainToks = toks.filter(!isEval(col("doc_id")))
@@ -958,7 +957,7 @@ object Curation {
     * fingerprints. Entirely map-side: one transform/filter over each
     * doc's token array, per-doc bounded. */
   private def cdcChunkStream(docs: DataFrame, d: Int): DataFrame = {
-    val t = docs.select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+    val t = docs.select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
     // 0-based chunk starts: 0, plus every j in [1, n) whose straddling
     // pair hashes to the anchor class
     val startsExpr =
@@ -1079,7 +1078,7 @@ object Curation {
       "need 0 < stride <= window")
     val (w, s) = (window, stride)
     Tables.documents(spark, dir)
-      .select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("n_tok"),
         posexplode(expr(
           s"""transform(
@@ -1135,7 +1134,7 @@ object Curation {
                                nShards: Int): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        size(split(Dedup.normText(col("text")), " ")).cast("long").as("n_tok"),
+        size(Dedup.tokens(col("text"))).cast("long").as("n_tok"),
         md5(col("doc_id").cast("string")).as("ord"))
       .withColumn("shard_id",
         expr(s"CAST(conv(substring(ord, 1, 15), 16, 10) AS BIGINT) % $nShards"))
@@ -1224,14 +1223,11 @@ object Curation {
   def domainReservoir(spark: SparkSession, dir: String,
                       k: Int = ReservoirK): DataFrame = {
     require(k > 0, "reservoir size must be positive")
-    val topk = udaf(new graft.functions.TopKAgg(k))
-    Tables.documents(spark, dir)
+    Similarity.nearestIds(Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"), expr(
         "CAST(conv(substring(md5(concat(source, ':', CAST(doc_id AS STRING))), 1, 12), 16, 10) AS BIGINT)")
-        .as("h"))
-      .groupBy(col("source"))
-      .agg(topk((-col("h")).cast("double"), col("doc_id")).as("top"))
-      .select(col("source"), explode(expr("transform(top, x -> x._2)")).as("doc_id"))
+        .as("h")),
+      "source", k, (-col("h")).cast("double"), "doc_id", "doc_id")
   }
 
   /** q99's vocabulary cap — every real tokenizer fixes |V| up front
@@ -1264,7 +1260,7 @@ object Curation {
                   vocabSize: Int = VocabSize): DataFrame = {
     require(vocabSize >= 1, "vocabulary size must be positive")
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(Dedup.normText(col("text")), " ")))
+      .select(col("doc_id"), posexplode(Dedup.tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("tok"))
       .filter(col("tok") =!= "")
     val top = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))

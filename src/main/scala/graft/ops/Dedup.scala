@@ -40,6 +40,10 @@ object Dedup {
   def normText(c: Column): Column =
     lower(trim(regexp_replace(c, "\\s+", " ")))
 
+  /** The library's token rule: the [[normText]] form split on single
+    * spaces. */
+  def tokens(c: Column): Column = split(normText(c), " ")
+
   /** Distinct (doc_id, 3-word-shingle) pairs. Distinctness is per-doc, so
     * `array_distinct` before the explode does it MAP-SIDE — a global
     * `.distinct()` after explode would shuffle every shingle row once for
@@ -59,7 +63,7 @@ object Dedup {
     * for plain callers the projection collapses back into the scan and
     * the plan is unchanged. */
   private[graft] def tokensOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(normText(col("text")), " ").as("toks"))
+    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
 
   /** Shingling over a prepared (doc_id, toks) frame — see [[tokensOf]]. */
   private[graft] def shinglesOfToks(toks: DataFrame): DataFrame =

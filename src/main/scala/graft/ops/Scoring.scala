@@ -39,7 +39,7 @@ object Scoring {
   private def toksOf(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+        explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
 
   /** Per-doc bigram instances (with multiplicity — LM statistics count
@@ -48,7 +48,7 @@ object Scoring {
   private def bigramsOf(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        split(Dedup.normText(col("text")), " ").as("toks"))
+        Dedup.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("lang"), explode(expr(
         """CASE WHEN size(toks) >= 2
           |  THEN transform(sequence(0, size(toks)-2),
@@ -211,7 +211,7 @@ object Scoring {
     * stream one order higher. Map-side: transform/explode, no shuffle. */
   private def trigramsOf(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(expr(
         """CASE WHEN size(toks) >= 3
           |  THEN transform(sequence(0, size(toks)-3),
@@ -312,7 +312,7 @@ object Scoring {
     val isPos = col("lang") === target
     val toks = docs
       .select(col("doc_id"), col("lang"),
-        explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+        explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
     val train = toks.filter(isTrain)
     val tc = train.groupBy(col("tok")).agg(
@@ -452,8 +452,7 @@ object Scoring {
       .orderBy(desc("cos"), asc("vec_id"))
     val cosLeg = v.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(qv))
-      .withColumn("cos", expr("CAST(dot_long(q_ai, ai) AS DOUBLE)")
-        / (sqrt(col("q_n2").cast("double")) * sqrt(col("n2").cast("double"))))
+      .withColumn("cos", Similarity.cosine("q_ai", "ai", "q_n2", "n2"))
       .orderBy(desc("cos"), asc("vec_id")).limit(LegDepth)
       .withColumn("rc", row_number().over(wCos).cast("long"))
       .select(col("vec_id").as("doc_id"), col("rc"))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -55,9 +55,55 @@ object Similarity {
       .withColumn("n2", expr("dot_long(ai, ai)"))
   }
 
-  // native codegen'd expression (functions.DotProductLong) — the
-  // higher-order aggregate(zip_with(…)) equivalent runs interpreted
-  private val dotExpr = "dot_long(q_ai, ai)"
+  /** The family's one scoring rule, the exact cosine: an exact integer
+    * dot as a double over the product of the square-rooted exact norms.
+    * Same exact-int inputs give a bit-identical double wherever the rule
+    * runs, which is what lets q187's recall check compare cosines by
+    * `===` and q155's driver probe ([[cosOf]]) match the relational
+    * descent. Operands keep the order each caller passes; the rule is
+    * symmetric bit for bit (SimilaritySpec's kernel law). */
+  def cosine(dot: Column, aN2: Column, bN2: Column): Column =
+    dot.cast("double") / (sqrt(aN2.cast("double")) * sqrt(bN2.cast("double")))
+
+  /** [[cosine]] of array columns `a` and `b` through the native codegen'd
+    * `dot_long` (functions.DotProductLong — the higher-order
+    * aggregate(zip_with(…)) equivalent runs interpreted), with the norms
+    * in columns `aN2` and `bN2`. */
+  def cosine(a: String, b: String, aN2: String, bN2: String): Column =
+    cosine(expr(s"dot_long($a, $b)"), col(aN2), col(bN2))
+
+  /** Driver twin of [[cosine]]: the same double arithmetic on the same
+    * exact integers. */
+  def cosOf(dot: Long, aN2: Long, bN2: Long): Double =
+    dot.toDouble / (math.sqrt(aN2.toDouble) * math.sqrt(bN2.toDouble))
+
+  /** The query sample of the top-k family: every 50th vector. */
+  private val QuerySample = col("vec_id") % 50 === 0
+
+  /** Per `key`, the `n` ids with the highest `score` (TopKAgg: score
+    * desc, id asc — map-side partial aggregation, so the shuffle carries
+    * ≤ n entries per key × partition), exploded to one row per kept id
+    * named `out`. The `payload` columns are functionally dependent on the
+    * key and ride through `first`. */
+  private[graft] def nearestIds(df: DataFrame, key: String, n: Int, score: Column,
+                                id: String, out: String, payload: String*): DataFrame = {
+    val topn = udaf(new graft.functions.TopKAgg(n))
+    val aggs = payload.map(p => first(col(p)).as(p)) :+ topn(score, col(id)).as("top")
+    df.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
+      .select(col(key) +: payload.map(col) :+
+        explode(expr("transform(top, x -> x._2)")).as(out): _*)
+  }
+
+  /** Per `key`, the `k` best (id, score) pairs in TopKAgg order (score
+    * desc, id asc) as rows (key, id, cos, rn) with rank rn from 1. */
+  private[graft] def rankedTopK(df: DataFrame, key: String, k: Int, id: String): DataFrame = {
+    val topk = udaf(new graft.functions.TopKAgg(k))
+    df.groupBy(col(key))
+      .agg(topk(col("cos"), col(id)).as("top"))
+      .select(col(key), posexplode(col("top")))
+      .select(col(key), col("col._2").as(id), col("col._1").as("cos"),
+        (col("pos") + 1).cast("int").as("rn"))
+  }
 
   /** The K-vector centroid set: smallest-md5(vec_id) sample, fully
     * deterministic and independent of corpus size (plan:
@@ -74,18 +120,10 @@ object Similarity {
     * no row_number window materializing n×K rows). `first(...)` carries
     * the group-constant payload columns (ai/n2/label are functionally
     * dependent on vec_id). */
-  private[graft] def assignCells(v: DataFrame, nAssign: Int, k: Int): DataFrame = {
-    val topn = udaf(new graft.functions.TopKAgg(nAssign))
-    v.crossJoin(broadcast(centroids(v, k)))
-      .withColumn("cos",
-        expr("dot_long(ai, c_ai)").cast("double") /
-          (sqrt(col("c_n2").cast("double")) * sqrt(col("n2").cast("double"))))
-      .groupBy(col("vec_id"))
-      .agg(first(col("label")).as("label"), first(col("ai")).as("ai"),
-        first(col("n2")).as("n2"), topn(col("cos"), col("c_id")).as("top"))
-      .select(col("vec_id"), col("label"), col("ai"), col("n2"),
-        explode(expr("transform(top, x -> x._2)")).as("c_id"))
-  }
+  private[graft] def assignCells(v: DataFrame, nAssign: Int, k: Int): DataFrame =
+    nearestIds(v.crossJoin(broadcast(centroids(v, k)))
+      .withColumn("cos", cosine("ai", "c_ai", "c_n2", "n2")),
+      "vec_id", nAssign, col("cos"), "c_id", "c_id", "label", "ai", "n2")
 
   /** Brute-force cosine top-k for query vectors (vec_id % 50 = 0) over the
     * whole corpus — the exact baseline the ANN variants are measured
@@ -96,21 +134,8 @@ object Similarity {
     *
     * @param topK results per query (shuffle carries ≤ topK rows per
     *             query × partition — cost is linear in it) */
-  def cosineTopK(spark: SparkSession, dir: String, topK: Int = 5): DataFrame = {
-    val v = scaled(spark, dir)
-    val q = v.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("ai").as("q_ai"), col("n2").as("q_n2"))
-    val topk = udaf(new graft.functions.TopKAgg(topK))
-    broadcast(q).join(v, col("q_id") =!= col("vec_id"))
-      .withColumn("cos",
-        expr(dotExpr).cast("double") /
-          (sqrt(col("q_n2").cast("double")) * sqrt(col("n2").cast("double"))))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("vec_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col._2").as("vec_id"), col("col._1").as("cos"),
-        (col("pos") + 1).cast("int").as("rn"))
-  }
+  def cosineTopK(spark: SparkSession, dir: String, topK: Int = 5): DataFrame =
+    bruteTopK(spark, dir, topK, Nil, col("q_id") =!= col("vec_id"))
 
   /** q106: hard-negative mining for embedding-model training (the
     * in-batch-negatives upgrade every contrastive recipe uses, e.g. DPR,
@@ -123,21 +148,19 @@ object Similarity {
     * broadcast-join condition (filter before any aggregation state), and
     * the per-query top-k accumulates in TopKAgg with map-side partials,
     * so the shuffle carries ≤ k rows per query × partition. */
-  def hardNegatives(spark: SparkSession, dir: String, topK: Int = 5): DataFrame = {
+  def hardNegatives(spark: SparkSession, dir: String, topK: Int = 5): DataFrame =
+    bruteTopK(spark, dir, topK, Seq(col("label").as("q_label")), col("q_label") =!= col("label"))
+
+  /** The one body of [[cosineTopK]] and [[hardNegatives]]: the query
+    * sample, carrying the `extra` query columns, joins the corpus on
+    * `on`. */
+  private def bruteTopK(spark: SparkSession, dir: String, topK: Int,
+                        extra: Seq[Column], on: Column): DataFrame = {
     val v = scaled(spark, dir)
-    val q = v.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("ai").as("q_ai"), col("n2").as("q_n2"))
-    val topk = udaf(new graft.functions.TopKAgg(topK))
-    broadcast(q).join(v, col("q_label") =!= col("label"))
-      .withColumn("cos",
-        expr(dotExpr).cast("double") /
-          (sqrt(col("q_n2").cast("double")) * sqrt(col("n2").cast("double"))))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("vec_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col._2").as("vec_id"), col("col._1").as("cos"),
-        (col("pos") + 1).cast("int").as("rn"))
+    val q = v.filter(QuerySample).select(col("vec_id").as("q_id") +: extra :+
+      col("ai").as("q_ai") :+ col("n2").as("q_n2"): _*)
+    rankedTopK(broadcast(q).join(v, on)
+      .withColumn("cos", cosine("q_ai", "ai", "q_n2", "n2")), "q_id", topK, "vec_id")
   }
 
   /** IVF (inverted-file) approximate NN — the scale path.
@@ -160,30 +183,15 @@ object Similarity {
     val cents = centroids(v, k)
     // probe: nprobe nearest centroids per query — same bounded TopKAgg
     // shape as assignment (the probe side is |q| × IvfK rows)
-    val q = v.filter(col("vec_id") % 50 === 0)
+    val q = v.filter(QuerySample)
       .select(col("vec_id").as("q_id"), col("ai").as("q_ai"), col("n2").as("q_n2"))
-    val topn = udaf(new graft.functions.TopKAgg(nprobe))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("cos",
-        expr("dot_long(q_ai, c_ai)").cast("double") /
-          (sqrt(col("q_n2").cast("double")) * sqrt(col("c_n2").cast("double"))))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_ai")).as("q_ai"), first(col("q_n2")).as("q_n2"),
-        topn(col("cos"), col("c_id")).as("top"))
-      .select(col("q_id"), col("q_ai"), col("q_n2"),
-        explode(expr("transform(top, x -> x._2)")).as("c_id"))
+    val probes = nearestIds(q.crossJoin(broadcast(cents))
+      .withColumn("cos", cosine("q_ai", "c_ai", "q_n2", "c_n2")),
+      "q_id", nprobe, col("cos"), "c_id", "c_id", "q_ai", "q_n2")
     // rerank exactly within probed clusters, bounded top-k per query
-    val topk = udaf(new graft.functions.TopKAgg(topK))
-    probes.join(assigned, "c_id")
+    rankedTopK(probes.join(assigned, "c_id")
       .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos",
-        expr(dotExpr).cast("double") /
-          (sqrt(col("q_n2").cast("double")) * sqrt(col("n2").cast("double"))))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("vec_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col._2").as("vec_id"), col("col._1").as("cos"),
-        (col("pos") + 1).cast("int").as("rn"))
+      .withColumn("cos", cosine("q_ai", "ai", "q_n2", "n2")), "q_id", topK, "vec_id")
   }
 
   /** Signature length / banding for the random-hyperplane LSH variant:
@@ -248,7 +256,7 @@ object Similarity {
     // (n/50 vectors × `planes` codegen'd dot products — cheaper than
     // materializing the corpus buckets to share them)
     val buckets = bucketsOf(v)
-    val qbExact = bucketsOf(v.filter(col("vec_id") % 50 === 0))
+    val qbExact = bucketsOf(v.filter(QuerySample))
       .select(col("vec_id").as("q_id"), col("band"), col("bv"))
     // multiprobe expansion happens on the QUERY side only: the corpus
     // bucket table is untouched (ingest stays stateless/incremental);
@@ -270,19 +278,11 @@ object Similarity {
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"))
       .distinct()
-    val topk = udaf(new graft.functions.TopKAgg(topK))
-    cand
+    rankedTopK(cand
       .join(v.select(col("vec_id").as("q_id"), col("ai").as("q_ai"),
         col("n2").as("q_n2")), "q_id")
       .join(v.select(col("vec_id"), col("ai"), col("n2")), "vec_id")
-      .withColumn("cos",
-        expr(dotExpr).cast("double") /
-          (sqrt(col("q_n2").cast("double")) * sqrt(col("n2").cast("double"))))
-      .groupBy(col("q_id"))
-      .agg(topk(col("cos"), col("vec_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col._2").as("vec_id"), col("col._1").as("cos"),
-        (col("pos") + 1).cast("int").as("rn"))
+      .withColumn("cos", cosine("q_ai", "ai", "q_n2", "n2")), "q_id", topK, "vec_id")
   }
 
   /** q87: product-quantization ANN (the memory-compression scale path —
@@ -340,7 +340,7 @@ object Similarity {
           struct(lit(s).as("s"), col(s"m$s").as("code"))): _*)).as("k"))
         .select(col("vec_id"), col("k.s").as("s"), col("k.code").as("code"))
       // query ADC tables: the SAME pair rows, restricted to query vectors
-      val qd = pairs.filter(col("vec_id") % 50 === 0)
+      val qd = pairs.filter(QuerySample)
         .select(col("vec_id").as("q_id"), col("c_id"),
           explode(array((0 until subspaces).map(s =>
             struct(lit(s).as("s"), col(s"d$s").as("d"))): _*)).as("k"))
@@ -386,17 +386,12 @@ object Similarity {
     cellPairs(cells, v, minCos)
   }
 
-  /** Shared pair tail of the cell-scoped near-dup family (q27/q155):
-    * within-cell candidate pairs (distinct — a pair sharing both of its
-    * nAssign cells must score once), verified with the exact integer
-    * cosine and kept at ≥ minCos. The join shuffles on the cell id; the
-    * vector payload joins back only onto the candidate sliver. */
   /** The d = 2 probe as one map-side pass: roots and the level-0
     * filing ride a broadcast (codebook-sized — K + b rows, bounded by
     * the d = 2 regime's K ≤ 2²⁰), each partition walks its vectors
     * once, and the output is exactly the (c_id, vec_id) assignment the
     * relational descent produces: the SAME exact-integer dots, the
-    * SAME cosine expression shape (dot / (√cellN2 · √vecN2)), and the
+    * SAME cosine ([[cosOf]], the driver twin of [[cosine]]), and the
     * SAME TopKAgg order (cos DESC, id ASC — `before` is TopKAgg's own
     * predicate). No row ever materializes per (vector × centroid). */
   private def broadcastProbe(spark: SparkSession, v: DataFrame,
@@ -437,7 +432,7 @@ object Similarity {
           def cos(c: (Long, Array[Long], Long)): Double = {
             var d = 0L; var i = 0
             while (i < ai.length) { d += ai(i) * c._2(i); i += 1 }
-            d.toDouble / (math.sqrt(c._3.toDouble) * math.sqrt(n2.toDouble))
+            cosOf(d, c._3, n2)
           }
           val probed = rs.map(r => (cos(r), r._1))
             .sortWith(before).take(nprobe)
@@ -450,6 +445,11 @@ object Similarity {
       .toDF("c_id", "vec_id")
   }
 
+  /** Shared pair tail of the cell-scoped near-dup family (q27/q155):
+    * within-cell candidate pairs (distinct — a pair sharing both of its
+    * nAssign cells must score once), verified with the exact integer
+    * cosine and kept at ≥ minCos. The join shuffles on the cell id; the
+    * vector payload joins back only onto the candidate sliver. */
   private def cellPairs(cells: DataFrame, v: DataFrame, minCos: Double): DataFrame = {
     // Payloads ride INTO the cell self-join (one n·nAssign-row join
     // against v) and every candidate scores IN PLACE as the join
@@ -470,9 +470,7 @@ object Similarity {
         col("ai"), col("n2").as("b_n2"))
     cvA.join(cvB, "c_id")
       .filter(col("a_id") < col("b_id"))
-      .withColumn("cos",
-        expr(dotExpr).cast("double") /
-          (sqrt(col("a_n2").cast("double")) * sqrt(col("b_n2").cast("double"))))
+      .withColumn("cos", cosine("q_ai", "ai", "a_n2", "b_n2"))
       .filter(col("cos") >= minCos)
       .select(col("a_id"), col("b_id"), col("cos"))
       .distinct()
@@ -818,9 +816,7 @@ object Similarity {
       // (the q187-rerank mixed-buffer precedent, §20 item 5)
       val minByNd = udaf(new graft.functions.MinByDoubleAgg)
       val fm = members.crossJoin(broadcast(parents))
-        .withColumn("nd", negate(
-          expr("dot_long(c_ai, cc_ai)").cast("double") /
-            (sqrt(col("cc_n2").cast("double")) * sqrt(col("c_n2").cast("double")))))
+        .withColumn("nd", negate(cosine("c_ai", "cc_ai", "cc_n2", "c_n2")))
         .groupBy(col("c_id"))
         .agg(minByNd(col("nd"), col("cell")).as("cell"),
           first(col("c_ai")).as("c_ai"), first(col("c_n2")).as("c_n2"))
@@ -854,29 +850,14 @@ object Similarity {
     }
     val topRoot = members.select(col("c_id").as("cell"),
       col("c_ai").as("cc_ai"), col("c_n2").as("cc_n2"))
-    val topProbe = udaf(new graft.functions.TopKAgg(nprobe))
-    val root = v.crossJoin(broadcast(topRoot))
-      .withColumn("cos",
-        expr("dot_long(ai, cc_ai)").cast("double") /
-          (sqrt(col("cc_n2").cast("double")) * sqrt(col("n2").cast("double"))))
-      .groupBy(col("vec_id"))
-      .agg(first(col("ai")).as("ai"), first(col("n2")).as("n2"),
-        topProbe(col("cos"), col("cell")).as("top"))
-      .select(col("vec_id"), col("ai"), col("n2"),
-        explode(expr("transform(top, x -> x._2)")).as("cell"))
+    val root = nearestIds(v.crossJoin(broadcast(topRoot))
+      .withColumn("cos", cosine("ai", "cc_ai", "cc_n2", "n2")),
+      "vec_id", nprobe, col("cos"), "cell", "cell", "ai", "n2")
     val descended = filings.zipWithIndex.reverse.foldLeft(root) {
       case (cur, (fm, level)) =>
-        val topn = udaf(new graft.functions.TopKAgg(
-          if (level == 0) nAssign else nprobe))
-        cur.join(broadcast(fm), Seq("cell"))
-          .withColumn("cos",
-            expr("dot_long(ai, c_ai)").cast("double") /
-              (sqrt(col("c_n2").cast("double")) * sqrt(col("n2").cast("double"))))
-          .groupBy(col("vec_id"))
-          .agg(first(col("ai")).as("ai"), first(col("n2")).as("n2"),
-            topn(col("cos"), col("c_id")).as("top"))
-          .select(col("vec_id"), col("ai"), col("n2"),
-            explode(expr("transform(top, x -> x._2)")).as("cell"))
+        nearestIds(cur.join(broadcast(fm), Seq("cell"))
+          .withColumn("cos", cosine("ai", "c_ai", "c_n2", "n2")),
+          "vec_id", if (level == 0) nAssign else nprobe, col("cos"), "c_id", "cell", "ai", "n2")
     }
     val cells = descended.select(col("cell").as("c_id"), col("vec_id"))
     cellPairs(cells, v, minCos)
@@ -993,9 +974,7 @@ object Similarity {
         col("n2").as("a_n2")), "a_id")
       .join(v.select(col("vec_id").as("b_id"), col("ai"),
         col("n2").as("b_n2")), "b_id")
-      .withColumn("cos",
-        expr(dotExpr).cast("double") /
-          (sqrt(col("a_n2").cast("double")) * sqrt(col("b_n2").cast("double"))))
+      .withColumn("cos", cosine("q_ai", "ai", "a_n2", "b_n2"))
       .select(col("a_id"), col("b_id"), col("cos"))
       .localCheckpoint(true) // feeds the kNN build AND the final join
     val directed = scored.select(col("a_id").as("x"), col("b_id").as("y"), col("cos"))
@@ -1052,9 +1031,7 @@ object Similarity {
         col("n2").as("e_n2")), "e_id")
       .join(v.select(col("vec_id").as("t_id"), col("ai"),
         col("n2").as("t_n2")), "t_id")
-      .withColumn("cos",
-        expr(dotExpr).cast("double") /
-          (sqrt(col("e_n2").cast("double")) * sqrt(col("t_n2").cast("double"))))
+      .withColumn("cos", cosine("q_ai", "ai", "e_n2", "t_n2"))
       .filter(col("cos") >= cosT)
       .groupBy(col("t_id"))
       .agg(count(lit(1)).as("n_eval_hits"), max(col("cos")).as("max_cos"))
@@ -1073,10 +1050,7 @@ object Similarity {
       col("ai").as("b_ai"), col("n2").as("b_n2"))
     a.join(b, Seq("cluster"))
       .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        (expr("dot_long(a_ai, b_ai)").cast("double") /
-          (sqrt(col("a_n2").cast("double")) *
-            sqrt(col("b_n2").cast("double")))).as("cos"))
+      .select(col("a_id"), col("b_id"), cosine("a_ai", "b_ai", "a_n2", "b_n2").as("cos"))
       .filter(col("cos") >= cosT)
   }
 
@@ -1185,9 +1159,7 @@ object Similarity {
         """aggregate(transform(sequence(0, 63), i ->
           |  CAST(round(element_at(ai, i + 1) * element_at(c, i + 1)) AS BIGINT)),
           |  CAST(0 AS BIGINT), (a, x) -> a + x)""".stripMargin))
-      .withColumn("cos",
-        col("dotfp").cast("double") /
-          (sqrt(col("n2").cast("double")) * sqrt(col("c2").cast("double"))))
+      .withColumn("cos", cosine(col("dotfp"), col("n2"), col("c2")))
     cos.groupBy(col("vec_id"))
       .agg(first(col("label")).as("label"),
         max(when(col("c_label") === col("label"), col("cos"))).as("own"),

@@ -224,7 +224,7 @@ object Sketches {
                            width: Int = CmsWidth): DataFrame = {
     require(depth >= 1 && width >= 2)
     docs
-      .select(explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+      .select(explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .select(posexplode(expr(
         s"""transform(sequence(0, ${depth - 1}),

@@ -26,7 +26,7 @@ object TextAnalysis {
     * — the point is the operator shape, matched exactly by the oracle.) */
   def langId(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(Dedup.normText(col("text")), " "))
+      .withColumn("toks", Dedup.tokens(col("text")))
       .select(col("doc_id"), col("lang"),
         expr(hits(stopEn)).as("en"), expr(hits(stopEs)).as("es"),
         expr(hits(stopFr)).as("fr"), expr(hits(stopDe)).as("de"))
@@ -41,7 +41,7 @@ object TextAnalysis {
     * score. Ratios are int/int double divisions (deterministic). */
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(Dedup.normText(col("text")), " "))
+      .withColumn("toks", Dedup.tokens(col("text")))
       .select(col("doc_id"),
         length(col("text")).as("text_len"),
         size(col("toks")).as("n_tok"),
@@ -61,7 +61,7 @@ object TextAnalysis {
     * expression so batch and stream can never state the formula twice
     * (TextAnalysisSpec pins ≡ qualityScore's column per doc). */
   private[graft] def qualityColumnOf(docs: DataFrame): DataFrame =
-    docs.withColumn("toks", split(Dedup.normText(col("text")), " "))
+    docs.withColumn("toks", Dedup.tokens(col("text")))
       .withColumn("quality", expr(
         s"""0.5 * (CAST(length(text) - length(regexp_replace(text, '[a-zA-Z]', '')) AS DOUBLE) / length(text))
            | + 0.3 * (CAST(${hits(stopEn)} AS DOUBLE) / size(toks))
@@ -119,7 +119,7 @@ object TextAnalysis {
     * doubles); entirely map-side, codegen'd, no shuffle. */
   def gopherRules(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(Dedup.normText(col("text")), " "))
+      .withColumn("toks", Dedup.tokens(col("text")))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_words"),
         expr("length(concat_ws('', toks))").cast("long").as("n_chars"),
@@ -181,7 +181,7 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val toks = docs
-      .select(col("doc_id"), explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
     val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -261,7 +261,7 @@ object TextAnalysis {
       .withColumn("n_alpha",
         length(col("text")) - length(regexp_replace(col("text"), "[a-zA-Z]", "")))
       .withColumn("alpha_ratio", col("n_alpha").cast("double") / length(col("text")))
-      .withColumn("n_tok", size(split(Dedup.normText(col("text")), " ")))
+      .withColumn("n_tok", size(Dedup.tokens(col("text"))))
       .withColumn("is_dup", col("doc_id") =!= col("canonical_id"))
       .withColumn("is_lowq", col("alpha_ratio") < 0.5)
       .withColumn("is_short", col("n_tok") < 5)
@@ -320,7 +320,7 @@ object TextAnalysis {
   def tokenBudgetMix(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        size(split(Dedup.normText(col("text")), " ")).as("n_tok"))
+        size(Dedup.tokens(col("text"))).as("n_tok"))
     val perLang = docs.groupBy(col("lang")).agg(sum(col("n_tok")).as("lang_toks"))
     val minToks = perLang.agg(min(col("lang_toks")).as("min_toks"))
     val frac = perLang.crossJoin(broadcast(minToks))
@@ -459,7 +459,7 @@ object TextAnalysis {
   private[graft] def hashVecOf(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     Tables.documents(spark, dir)
-      .withColumn("toks", split(Dedup.normText(col("text")), " "))
+      .withColumn("toks", Dedup.tokens(col("text")))
       .withColumn("v", expr("hash_embed16(toks)"))
       .select(col("doc_id"), col("lang"), col("v"))
   }
@@ -681,10 +681,9 @@ object TextAnalysis {
     * the caller) — split out so PlanSpec can audit the physical shape
     * (the public [[bitextMining]] checkpoints the tiny result, which
     * hides the interior from EXPLAIN — the q87 lifecycle). The band
-    * values arrive packed in `wb`'s `bb`, so `r` (the width they were
-    * banded at) is not read here. */
+    * values arrive packed in `wb`'s `bb`. */
   private[graft] def bitextPlan(spark: SparkSession, wb: DataFrame,
-                                n: Long, r: Int, minCos: Double,
+                                n: Long, minCos: Double,
                                 cap: Int = BitextBucketCap): DataFrame = {
     graft.functions.VectorExprs.register(spark)
     val bands = BitextBands
@@ -752,9 +751,7 @@ object TextAnalysis {
     // distinct-pairs-then-rank without ever exchanging the pair stream
     val top2 = udaf(new graft.functions.TopKDistinctAgg(2))
     tb.join(bhint(enCap), Seq("band", "bv"))
-      .withColumn("cos",
-        expr("dot_long(t_v, en_v)").cast("double") /
-          (sqrt(col("t_n2").cast("double")) * sqrt(col("en_n2").cast("double"))))
+      .withColumn("cos", Similarity.cosine("t_v", "en_v", "t_n2", "en_n2"))
       .groupBy(col("t_id"))
       .agg(first(col("lang")).as("lang"), top2(col("cos"), col("en_id")).as("top"))
       .select(col("t_id"), col("lang"),
@@ -813,9 +810,9 @@ object TextAnalysis {
     * [[bitextBucketCap]](n) rule, which the gate oracle replays as the
     * same integer rule; pairs are kept at cos ≥ 0.5. */
   def bitextMining(spark: SparkSession, dir: String): DataFrame =
-    withBitextFrames(spark, dir) { (_, wb, n, r) =>
+    withBitextFrames(spark, dir) { (_, wb, n, _) =>
       withBitextTuning(spark, n) {
-        bitextPlan(spark, wb, n, r, minCos = 0.5, cap = bitextBucketCap(n))
+        bitextPlan(spark, wb, n, minCos = 0.5, cap = bitextBucketCap(n))
           .localCheckpoint(true)
       }
     }
@@ -864,7 +861,7 @@ object TextAnalysis {
     // rDelta < 0 probes WIDER buckets than the shipped rule (each −1
     // doubles expected bucket load and candidate work) — recall-curve
     // instrumentation for picking the rule's operating point
-    withBitextFrames(spark, dir, rDelta) { (w, wb, n, r) =>
+    withBitextFrames(spark, dir, rDelta) { (w, wb, n, _) =>
       // cap ≤ 0 = the shipped bitextBucketCap(n) rule, exactly as
       // bitextMining resolves it — the probe measures the config the
       // miner ships; the output carries `cap_used` so artifacts
@@ -895,9 +892,7 @@ object TextAnalysis {
       //    which would re-introduce the very same input sort) stays hash.
       val top1 = udaf(new graft.functions.TopKAgg(1))
       val exact = en.crossJoin(broadcast(q))
-        .withColumn("cos",
-          expr("dot_long(v, en_v)").cast("double") /
-            (sqrt(col("n2").cast("double")) * sqrt(col("en_n2").cast("double"))))
+        .withColumn("cos", Similarity.cosine("v", "en_v", "n2", "en_n2"))
         .groupBy(col("doc_id"))
         .agg(top1(col("cos"), col("en_id")).as("m"))
         .select(col("doc_id").as("t_id"),
@@ -917,10 +912,10 @@ object TextAnalysis {
       // fallback raise — see the `exact` comment); results are
       // sampleN-row slivers, checkpointed eagerly inside the scope
       val joined = withBitextTuning(spark, n) {
-        val banded = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = capEff)
+        val banded = bitextPlan(spark, wbQ, n, minCos = -2.0, cap = capEff)
           .select(col("t_id"), col("en_id").as("band_en"), col("cos").as("band_cos"))
           .localCheckpoint(true)
-        val noCap = bitextPlan(spark, wbQ, n, r, minCos = -2.0, cap = Int.MaxValue)
+        val noCap = bitextPlan(spark, wbQ, n, minCos = -2.0, cap = Int.MaxValue)
           .select(col("t_id"), col("en_id").as("nocap_en"), col("cos").as("nocap_cos"))
           .localCheckpoint(true)
         exact
@@ -939,9 +934,9 @@ object TextAnalysis {
       // one within a strict 5e-7, which (a) credited near-ties within
       // half a grid step that are NOT score ties and (b) missed a true
       // tie landing exactly on the boundary. Recomputing the answer's
-      // cosine from the VECTORS with the identical expression makes the
-      // comparison exact double equality (same exact-int inputs →
-      // bit-identical double), no tolerance at all.
+      // cosine from the VECTORS with the one kernel, Similarity.cosine,
+      // makes the comparison exact double equality (same exact-int
+      // inputs → bit-identical double), no tolerance at all.
       val needEn = joined.select(explode(array(col("band_en"),
         col("nocap_en"))).as("en_id")).filter(col("en_id").isNotNull).distinct()
       val enSliver = en.join(broadcast(needEn), Seq("en_id"), "left_semi")
@@ -951,9 +946,7 @@ object TextAnalysis {
           col("en_v").as("h_v"), col("en_n2").as("h_n2"))), Seq(enCol), "left")
           .withColumn(hitCol, col(enCol).isNotNull &&
             (col(enCol) === col("exact_en") ||
-              (expr("dot_long(q_v, h_v)").cast("double") /
-                (sqrt(col("q_n2").cast("double")) *
-                  sqrt(col("h_n2").cast("double")))) === col("exact_cos")))
+              Similarity.cosine("q_v", "h_v", "q_n2", "h_n2") === col("exact_cos")))
           .drop("h_v", "h_n2")
       withHit(withHit(joined, "band_en", "band_hit"),
         "nocap_en", "nocap_hit")
@@ -977,7 +970,7 @@ object TextAnalysis {
     * exact long→double division. */
   def entropyGate(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks0", split(Dedup.normText(col("text")), " "))
+      .withColumn("toks0", Dedup.tokens(col("text")))
       .withColumn("toks", expr("filter(toks0, x -> x <> '')"))
       .withColumn("n", size(col("toks")))
       .withColumn("ent_fp", expr(
@@ -1007,7 +1000,7 @@ object TextAnalysis {
     * engine-stable. */
   def ppmiTopK(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Tables.documents(spark, dir)
-      .select(split(Dedup.normText(col("text")), " ").as("toks"))
+      .select(Dedup.tokens(col("text")).as("toks"))
       .select(explode(expr(
         """CASE WHEN size(toks) >= 2 THEN
           |  flatten(transform(sequence(0, size(toks)-2), i ->
@@ -1062,7 +1055,7 @@ object TextAnalysis {
     * shape measured 14.6×/decade at sf100 on exactly that. */
   def ngramDiversity(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("lang"), split(Dedup.normText(col("text")), " ").as("toks0"))
+      .select(col("lang"), Dedup.tokens(col("text")).as("toks0"))
       .withColumn("toks", expr("filter(toks0, x -> x <> '')"))
     val tokLeg = toks.select(col("lang"), explode(col("toks")).as("t"))
       .groupBy(col("lang"), unhex(md5(col("t"))).as("h"))
@@ -1116,7 +1109,7 @@ object TextAnalysis {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("c").desc, col("h"))
     val terms = Tables.documents(spark, dir)
-      .select(col("lang"), explode(split(Dedup.normText(col("text")), " ")).as("t"))
+      .select(col("lang"), explode(Dedup.tokens(col("text"))).as("t"))
       .filter(col("t") =!= "")
       .groupBy(col("lang"), unhex(md5(col("t"))).as("h"))
       .agg(count(lit(1)).as("c"))
@@ -1148,7 +1141,7 @@ object TextAnalysis {
     * cross-document machinery is overkill for within-doc repetition. */
   def repetitionScore(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(Dedup.normText(col("text")), " "))
+      .withColumn("toks", Dedup.tokens(col("text")))
       .withColumn("grams", expr(
         """CASE WHEN size(toks) >= 2
           |  THEN transform(sequence(0, size(toks)-2), i -> concat_ws(' ', toks[i], toks[i+1]))
@@ -1182,7 +1175,7 @@ object TextAnalysis {
       .withColumn("alpha_ratio",
         (length(col("text")) - length(regexp_replace(col("text"), "[a-zA-Z]", "")))
           .cast("double") / length(col("text")))
-      .withColumn("n_tok", size(split(Dedup.normText(col("text")), " ")))
+      .withColumn("n_tok", size(Dedup.tokens(col("text"))))
       .join(contaminated, Seq("doc_id"), "left")
       .withColumn("s2", col("s1") && col("is_cont").isNull)
       .withColumn("s3", col("s2") && col("alpha_ratio") >= 0.5)
@@ -1225,7 +1218,7 @@ object TextAnalysis {
 
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+      .select(explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
     // one corpus pass: every token lands in CmsDepth buckets
     val sketch = toks
@@ -1364,7 +1357,7 @@ object TextAnalysis {
     * frequency. */
   def phraseIndex(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(Dedup.normText(col("text")), " ").as("toks"))
+      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
     val post = d.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
       .filter(col("tok") =!= "")
     // top corpus trigram: one agg + bounded top-1 (TakeOrderedAndProject)

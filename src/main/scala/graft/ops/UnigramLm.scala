@@ -71,7 +71,7 @@ object UnigramLm {
     * touch in training. */
   private def words(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(explode(split(Dedup.normText(col("text")), " ")).as("w"))
+      .select(explode(Dedup.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "" && length(col("w")) <= MaxWordLen)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
 
@@ -194,7 +194,7 @@ object UnigramLm {
         expr("concat_ws('', transform(pieces, p -> concat('<', p, '>')))").as("enc"),
         size(col("pieces")).cast("long").as("n_piece"))
     Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(Dedup.normText(col("text")), " ")))
+      .select(col("doc_id"), posexplode(Dedup.tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("tok"))
       .filter(col("tok") =!= "" && length(col("tok")) <= MaxWordLen)
       .join(broadcast(cb), Seq("tok"))
@@ -277,7 +277,7 @@ object UnigramLm {
         expr("concat_ws('', transform(ps, p -> concat('<', p, '>')))").as("enc"),
         size(col("ps")).cast("long").as("n_piece"))
     Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(Dedup.normText(col("text")), " ")))
+      .select(col("doc_id"), posexplode(Dedup.tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("tok"))
       .filter(col("tok") =!= "" && length(col("tok")) <= MaxWordLen)
       .join(broadcast(cb), Seq("tok"))
@@ -314,7 +314,7 @@ object UnigramLm {
       .select(col("w").as("tok"), size(col("pieces")).cast("long").as("n_sym"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        explode(split(Dedup.normText(col("text")), " ")).as("tok"))
+        explode(Dedup.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "" && length(col("tok")) <= MaxWordLen)
       .join(broadcast(cb), Seq("tok"))
       .groupBy(col("lang"))

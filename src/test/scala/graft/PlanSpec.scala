@@ -619,7 +619,7 @@ class PlanSpec extends SparkSpec {
     val wb = graft.ops.TextAnalysis.bitextBanded(w, 8, nn, s)
     // n is the gate-scale corpus count: the SHUFFLE_HASH build gate
     // must keep the hints at every measured configuration
-    val df = graft.ops.TextAnalysis.bitextPlan(spark, wb, 1000L, 8, 0.5)
+    val df = graft.ops.TextAnalysis.bitextPlan(spark, wb, 1000L, 0.5)
     val p = plan(df)
     assert(!p.contains("Window"),
       s"rerank must be the bounded TopKAgg, never a row_number window:\n$p")
@@ -668,7 +668,7 @@ class PlanSpec extends SparkSpec {
     // smallest n past the gate for this session's partition count
     val nOver = parts * graft.ops.TextAnalysis.BitextHashBuildMax /
       (graft.ops.TextAnalysis.BitextBands * graft.ops.TextAnalysis.BitextBuildRowBytes) + 1
-    val p = plan(graft.ops.TextAnalysis.bitextPlan(spark, wb, nOver, 8, 0.5))
+    val p = plan(graft.ops.TextAnalysis.bitextPlan(spark, wb, nOver, 0.5))
     // the gate's observable effect is NO un-spillable hash build; what
     // Catalyst picks instead depends on size stats (broadcast at this
     // fixture's scale, spillable SMJ once the sides outgrow the

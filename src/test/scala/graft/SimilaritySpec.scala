@@ -31,6 +31,47 @@ class SimilaritySpec extends SparkSpec {
     assertSameRows(Similarity.cosineTopK(spark, sf), windowTopK)
   }
 
+  /** The kernel law the family's exactness claims rest on, over every
+    * ordered pair of one IVF cell: the `cosine` column equals its driver
+    * twin `cosOf` and is symmetric, both bit for bit, and the TopKAgg
+    * ranking over it equals row_number's (score desc, id asc) — with
+    * ties forced by an id-shifted copy of each vector. */
+  test("cosine kernel: driver twin, symmetry and tie order are exact") {
+    val v = Similarity.scaled(spark, sf).filter(col("n2") > 0)
+    val cells = Similarity.assignCells(v, 1, Similarity.NearDupK)
+    val cell = cells.groupBy(col("c_id")).count()
+      .orderBy(desc("count"), asc("c_id")).first().getLong(0)
+    val m = cells.filter(col("c_id") === cell).select(col("vec_id"), col("ai"), col("n2"))
+    val pairs = m.select(col("vec_id").as("a_id"), col("ai").as("a_ai"), col("n2").as("a_n2"))
+      .crossJoin(m.select(col("vec_id").as("b_id"), col("ai").as("b_ai"), col("n2").as("b_n2")))
+      .filter(col("a_id") =!= col("b_id"))
+    val rows = pairs.select(col("a_ai"), col("b_ai"), col("a_n2"), col("b_n2"),
+        Similarity.cosine("a_ai", "b_ai", "a_n2", "b_n2").as("ab"),
+        Similarity.cosine("b_ai", "a_ai", "b_n2", "a_n2").as("ba"))
+      .collect()
+    assert(rows.length >= 12, s"cell $cell has too few pairs: ${rows.length}")
+    rows.foreach { r =>
+      val a = r.getSeq[Long](0); val b = r.getSeq[Long](1)
+      val dot = a.zip(b).map { case (x, y) => x * y }.sum
+      val (ab, ba) = (r.getDouble(4), r.getDouble(5))
+      assert(ab == Similarity.cosOf(dot, r.getLong(2), r.getLong(3)), s"column $ab vs driver twin")
+      assert(java.lang.Double.doubleToRawLongBits(ab) == java.lang.Double.doubleToRawLongBits(ba),
+        s"cosine(a, b) = $ab but cosine(b, a) = $ba")
+    }
+    val shift = 1L << 40
+    val scored = pairs.unionByName(pairs.withColumn("b_id", col("b_id") + shift))
+      .withColumn("cos", Similarity.cosine("a_ai", "b_ai", "a_n2", "b_n2"))
+      .select(col("a_id"), col("b_id"), col("cos"))
+    val top = Similarity.rankedTopK(scored, "a_id", 4, "b_id")
+    val byWindow = scored.withColumn("rn", row_number().over(
+        Window.partitionBy(col("a_id")).orderBy(desc("cos"), asc("b_id"))))
+      .filter(col("rn") <= 4)
+    assertSameRows(top, byWindow)
+    val ranked = top.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
+    assert(ranked.exists { case (a, b, rn) => rn == 2 && ranked.contains((a, b - shift, 1)) },
+      "the forced ties never reached the top-k")
+  }
+
   test("IVF results are true cosines and recall is positive") {
     val brute = Similarity.cosineTopK(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -20,7 +20,10 @@ import scala.jdk.CollectionConverters._
   * Caching a frame that several plan branches share is
   * `ops.Materialize.shared`, which releases it in a `finally` and
   * refuses a lazy result, so no call can leak its cache into the
-  * session. */
+  * session. Scoring a vector pair is `ops.Similarity.cosine`, whose
+  * driver twin `cosOf` sits beside it, so every copy of the exact cosine
+  * is the same expression bit for bit. Tokenizing text is
+  * `ops.Dedup.tokens`, so every operator splits the same normal form. */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** `file:line: pattern` for each banned pattern in src/main/scala
@@ -70,6 +73,20 @@ class SourceGuardSpec extends AnyFunSuite {
     val home = Paths.get("src/main/scala/graft/streaming/StreamingEvents.scala")
     val writers = "writeStream".r.findAllIn(Files.readString(home)).size
     assert(writers == 1, s"writeStream appears $writers times in $home: the one runner is drain")
+  }
+
+  test("the exact cosine is spelled once, in Similarity.cosine") {
+    val inline = hits(Seq("sqrt(col("), "")
+    assert(inline.isEmpty, "score vector pairs with ops.Similarity.cosine instead:\n" + inline.mkString("\n"))
+    val kernels = hits(Seq("\")) * sqrt("), "")
+    assert(kernels.size == 1 && kernels.forall(_.startsWith("graft/ops/Similarity.scala:")),
+      "the product of square-rooted norms belongs to ops.Similarity.cosine only:\n" + kernels.mkString("\n"))
+  }
+
+  test("text splits into tokens only in Dedup.tokens") {
+    val found = hits(Seq("split(Dedup.normText(", "split(normText(", "split(graft.ops.Dedup.normText("), "")
+    assert(found.size == 1 && found.forall(_.startsWith("graft/ops/Dedup.scala:")),
+      "tokenize with ops.Dedup.tokens instead:\n" + found.mkString("\n"))
   }
 
   test("salt columns appear twice and detectHotKeys is called once, all in Curation.scala") {

@@ -3,20 +3,24 @@ package graft.etl
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** The reference's extraction front door (SURVEY.md §2.1 S1/S2, §2.2 P1–P5)
   * re-expressed Spark-first: HTML arrives as rows of text (fixture files,
   * or at scale a `mapPartitions` fetch over a URL column feeding the same
-  * parse), and every field extraction is a native regexp/split expression
+  * parse), and every field extraction is a native Catalyst expression
   * with the reference's per-field null-on-malformed semantics
   * (`webscraper-postgres.py:36–70,81–95`: every `try/except → np.nan`
   * branch becomes a null, never an error).
   *
-  * No jsoup/UDF: the structures are class-marked, so anchored regexes
-  * express the CSS-class selectors; everything stays inside whole-stage
-  * codegen. Correctness gate: q35/q36 synthesize item HTML from parquet
-  * rows (with a deterministic malformed-variant per row exercising every
-  * null branch) and DuckDB runs the identical synthesis + parse — plus
+  * No jsoup/UDF: the structures are class-marked, so each CSS-class
+  * selector is a literal tag prefix plus a class-token test. The list
+  * item's six selectors run as one native byte scan
+  * ([[graft.functions.ListItemFields]]), the detail page's as anchored
+  * regexes; everything stays inside whole-stage codegen. Correctness
+  * gate: q35/q36 synthesize item HTML from parquet rows (with a
+  * deterministic malformed-variant per row exercising every null branch)
+  * and DuckDB runs the identical synthesis + the regex parse — plus
   * fixture files under src/test/resources/html exercised by ExtractSpec.
   */
 object Extract {
@@ -25,30 +29,30 @@ object Extract {
   /** List-item parse (`get_element_data`, webscraper-postgres.py:36–70).
     * Input column `html` holds one `li.ipc-metadata-list-summary-item`
     * fragment per row; output columns are the reference's 10 fields, all
-    * strings, null on the branch's try/except. */
-  def parseListItem(df: DataFrame, htmlCol: String): DataFrame =
-    df
-      .withColumn("_h3", expr(
-        s"""nullif(regexp_extract($htmlCol, '<h3 class="ipc-title__text">([^<]*)</h3>', 1), '')"""))
-      .withColumn("_meta", expr(
-        s"""regexp_extract_all($htmlCol, '<span class="[^"]*dli-title-metadata-item[^"]*">([^<]*)</span>', 1)"""))
-      .withColumn("_rc", expr(
-        s"""nullif(regexp_extract($htmlCol, '<div class="[^"]*dli-ratings-container[^"]*">([^<]*)</div>', 1), '')"""))
-      .withColumn("rank", expr("try_element_at(split(_h3, '\\\\.'), 1)"))
-      .withColumn("title", expr("try_element_at(split(_h3, '\\\\.'), 2)"))
-      .withColumn("year", expr("try_element_at(_meta, 1)"))
-      .withColumn("duration", expr("try_element_at(_meta, 2)"))
-      .withColumn("rating", expr("try_element_at(_meta, 3)"))
-      .withColumn("metascore", expr(
-        s"""nullif(regexp_extract($htmlCol, '<span class="[^"]*metacritic-score-box[^"]*">([^<]*)</span>', 1), '')"""))
-      .withColumn("imdb_score", expr("try_element_at(split(_rc, chr(160)), 1)"))
-      .withColumn("views", expr(
-        "replace(try_element_at(split(try_element_at(split(_rc, chr(160)), 2), '\\\\)'), 1), '(', '')"))
-      .withColumn("description", expr(
-        s"""nullif(regexp_extract($htmlCol, '<div class="[^"]*title-description-plot-container[^"]*">([^<]*)</div>', 1), '')"""))
-      .withColumn("details_url", expr(
-        s"""'https://www.imdb.com' || nullif(regexp_extract($htmlCol, 'dli-title with-margin"><a href="([^"]*)"', 1), '')"""))
-      .drop("_h3", "_meta", "_rc")
+    * strings, null on the branch's try/except. One
+    * [[graft.functions.ListItemFields]] pass over the html bytes (`_f`,
+    * evaluated once per row) yields the six CSS-class captures, each
+    * equal to the oracle's `regexp_extract`; the nullif/split/
+    * try_element_at steps below turn them into the ten fields. */
+  def parseListItem(df: DataFrame, htmlCol: String): DataFrame = {
+    graft.functions.VectorExprs.register(df.sparkSession)
+    val h3 = "nullif(_f.h3, '')"
+    val rc = "nullif(_f.rc, '')"
+    df.withColumn("_f", expr(s"list_item_fields($htmlCol)"))
+      .withColumns(ListMap(
+        "rank" -> s"try_element_at(split($h3, '\\\\.'), 1)",
+        "title" -> s"try_element_at(split($h3, '\\\\.'), 2)",
+        "year" -> "try_element_at(_f.meta, 1)",
+        "duration" -> "try_element_at(_f.meta, 2)",
+        "rating" -> "try_element_at(_f.meta, 3)",
+        "metascore" -> "nullif(_f.metascore, '')",
+        "imdb_score" -> s"try_element_at(split($rc, chr(160)), 1)",
+        "views" -> s"replace(try_element_at(split(try_element_at(split($rc, chr(160)), 2), '\\\\)'), 1), '(', '')",
+        "description" -> "nullif(_f.description, '')",
+        "details_url" -> "'https://www.imdb.com' || nullif(_f.href, '')",
+      ).map { case (name, e) => name -> expr(e) })
+      .drop("_f")
+  }
 
   // ---------------------------------------------------------------- S2/P1
   /** Detail-page parse (`data_details`, webscraper-postgres.py:81–95).
@@ -86,7 +90,7 @@ object Extract {
     * spans, 4: no metascore, 5: empty ratings container, 6: no title
     * link. Integer arithmetic + || only, so both engines produce
     * byte-identical HTML. */
-  private val listItemSynthSql =
+  private[graft] val listItemSynthSql =
     """'<li class="ipc-metadata-list-summary-item">'
       | || CASE WHEN p_partkey % 7 <> 6 THEN '<div class="ipc-title dli-title with-margin"><a href="/title/tt' || p_partkey || '/">x</a></div>' ELSE '' END
       | || CASE WHEN p_partkey % 7 <> 1 THEN '<h3 class="ipc-title__text">' || CASE WHEN p_partkey % 7 = 2 THEN replace(p_name, '.', '') ELSE p_partkey || '. ' || p_name END || '</h3>' ELSE '' END

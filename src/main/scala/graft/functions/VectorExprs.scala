@@ -243,6 +243,8 @@ object VectorExprs {
       (args: Seq[Expression]) => HashEmbed16(args(0)), "built-in")
     registry.createOrReplaceTempFunction("ascii_seg_sums",
       (args: Seq[Expression]) => asciiSegSumsFromArgs(args), "built-in")
+    registry.createOrReplaceTempFunction("list_item_fields",
+      (args: Seq[Expression]) => ListItemFields(args(0)), "built-in")
   }
 
   /** `ascii_seg_sums(text, n)` builder: the segment count is a foldable
@@ -311,6 +313,11 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         classOf[AsciiSegmentSums].getName, "ascii_seg_sums"),
       (args: Seq[Expression]) => VectorExprs.asciiSegSumsFromArgs(args)))
+    ext.injectFunction((
+      new org.apache.spark.sql.catalyst.FunctionIdentifier("list_item_fields"),
+      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+        classOf[ListItemFields].getName, "list_item_fields"),
+      (args: Seq[Expression]) => ListItemFields(args(0))))
     // whole-operator extension: the as-of join planner strategy
     // (graft.plans.AsOfJoin → AsOfJoinExec) plus its filter-pushdown
     // optimizer rule (Catalyst can't push through an unknown node)

@@ -6,7 +6,8 @@ package graft
   * op pushes that op's classes out of the LRU cache, so each warm run
   * compiles them again. The conf string alone proves nothing: Spark
   * sizes the cache once per JVM, from the session active when code is
-  * first generated. */
+  * first generated. [[Tuning.ArtifactIsolationKey]] likewise, by its
+  * effect: streaming runs find the classes earlier runs compiled. */
 class CodegenCacheSpec extends SparkSpec {
 
   /** Classes one full-plan run compiled. */
@@ -29,5 +30,13 @@ class CodegenCacheSpec extends SparkSpec {
     val again = op(first)
     assert(again == 0, s"$first recompiled $again classes after $between others: " +
       s"the codegen cache is smaller than ${Tuning.CodegenCacheKey} = ${Tuning.CodegenCacheEntries}")
+  }
+
+  test("a second run of every streaming query compiles nothing") {
+    val streams = SparkEntry.queries.keys.filter(_.contains("_stream_")).toSeq.sorted
+    assert(streams.size == 10, s"expected the ten streaming queries, got ${streams.mkString(", ")}")
+    val recompiled = streams.map { q => op(q); q -> op(q) }.filter(_._2 != 0)
+    assert(recompiled.isEmpty, s"second runs compiled classes again: ${recompiled.mkString(", ")}; " +
+      s"each stream run gets its own class loader unless ${Tuning.ArtifactIsolationKey} is false")
   }
 }

@@ -894,4 +894,37 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"corpus must never merge-join or cartesian against itself:\n$p")
   }
+
+  test("q35, q74 and q85 parse each list item in one list_item_fields call, with no list-item regex") {
+    import graft.functions.ListItemFields
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtract, RegExpExtractAll}
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def nodes(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def all(n: SparkPlan): Seq[Expression] = n.expressions.flatMap(_.collect { case e => e })
+    val listItemTokens = Seq("ipc-title__text", "dli-title-metadata-item", "dli-ratings-container",
+      "metacritic-score-box", "title-description-plot-container", "dli-title with-margin")
+    // q85's parse stage is the frame it shares. It also runs q36's
+    // detail-page regexes, and its link filter (details_url IS NOT NULL,
+    // pushed below the parse) calls the kernel on its own, so only its
+    // projections are held to one call.
+    for ((name, df) <- Seq("q35" -> q("q35_html_extract"), "q74" -> q("q74_fetch_parse"),
+        "q85" -> graft.etl.Pipeline.listWithDetails(spark, sf))) {
+      val p = df.queryExecution.executedPlan
+      val regexes = nodes(p).flatMap(all).collect {
+        case e: RegExpExtract => e.regexp.toString
+        case e: RegExpExtractAll => e.regexp.toString
+      }
+      assert(!regexes.exists(r => listItemTokens.exists(r.contains)) && (name == "q85" || regexes.isEmpty),
+        s"$name still parses list items with regexes:\n$p")
+      def calls(ns: Seq[SparkPlan]) = ns.map(all(_).count(_.isInstanceOf[ListItemFields])).filter(_ > 0)
+      val projections = calls(nodes(p).collect { case n: ProjectExec => n })
+      assert(projections == Seq(1) && (name == "q85" || calls(nodes(p)) == Seq(1)),
+        s"$name must project list_item_fields once per row; CollapseProject inlines it into " +
+          s"each field otherwise. Calls per node: $projections\n$p")
+    }
+  }
 }

@@ -23,7 +23,9 @@ import scala.jdk.CollectionConverters._
   * session. Scoring a vector pair is `ops.Similarity.cosine`, whose
   * driver twin `cosOf` sits beside it, so every copy of the exact cosine
   * is the same expression bit for bit. Tokenizing text is
-  * `ops.Dedup.tokens`, so every operator splits the same normal form. */
+  * `ops.Dedup.tokens`, so every operator splits the same normal form.
+  * No session adds artifacts (JARs, files, archives), which is what lets
+  * `Tuning` switch artifact isolation off. */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** `file:line: pattern` for each banned pattern in src/main/scala
@@ -97,5 +99,11 @@ class SourceGuardSpec extends AnyFunSuite {
     val calls = at("detectHotKeys(") -- at("def detectHotKeys(")
     assert(calls.size == 1 && calls.forall(_.startsWith("graft/ops/Curation.scala:")),
       "resolve hot keys with hotKeysFor, the one detection call:\n" + calls.mkString("\n"))
+  }
+
+  test("no session adds artifacts, so artifact isolation stays off safely") {
+    val found = hits(Seq("addArtifact"), "")
+    assert(found.isEmpty, s"Tuning sets ${Tuning.ArtifactIsolationKey}=false, which shares one class loader " +
+      "across sessions; a session that adds artifacts needs it on:\n" + found.mkString("\n"))
   }
 }
